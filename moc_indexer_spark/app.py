@@ -51,14 +51,16 @@ class Indexer:
     """Holds the sink tables + checkpoint cursor for incremental scans."""
 
     def __init__(self, spark: SparkSession, data_dir: str, fetcher: BlockFetcher,
-                 contracts: list[str] | None = None, sink_mode: str = "cow",
+                 contracts: list[str] | None = None, sink_mode: str = "mor",
                  config=None, compact_every: int = 16):
-        """sink_mode="mor" appends delta batches instead of rewriting the
-        sink tables each cycle — the low-latency shape for the 3-second
-        incremental tick (measured in PLANS.md); "cow" (default) keeps
-        reads cheapest for batch/serving-heavy use.
+        """sink_mode picks the sinks' fold cadence (DEPLOY.md: one
+        merge-on-read sink, fold cadence per table). "mor" (default)
+        appends O(batch) deltas and folds off the hot path — the shape for
+        the 3-second incremental tick (measured in PLANS.md); "cow" folds
+        every sink after every write (compact_every=1), so each table
+        stays one base dir and reads stay map-only.
 
-        `compact_every` is the AUTO-COMPACTION policy (MoR only): each
+        `compact_every` is the AUTO-COMPACTION policy: each
         sink folds its deltas back into a single base once that many
         delta dirs accrete, so a daemon running for months never rides
         the delta-accretion slope (SCALE_CURVE.json mor_cycle_vs_history
@@ -86,7 +88,10 @@ class Indexer:
             contracts = [a for a in self.config.contract_addresses.values()]
         self.contracts = contracts
         self.last_indexed = -1
-        m = sink_mode
+        if sink_mode not in ("cow", "mor"):
+            raise ValueError(
+                f"sink_mode must be 'cow' or 'mor', got {sink_mode!r}"
+            )
         # The INDEXER owns the fold policy (see _maybe_compact_one: at
         # most one sink fold per cycle — a hard invariant; per-table
         # threshold staggering still collides at lcm points). The sinks
@@ -94,39 +99,39 @@ class Indexer:
         # drives these tables outside run_incremental.
         self._compact_threshold = compact_every
         self._compact_rr = 0  # round-robin cursor over self.tables
-        ce = 4 * compact_every
+        ce = 1 if sink_mode == "cow" else 4 * compact_every
         self.tables = {
             "raw_transactions": ParquetUpsertTable(
                 spark, f"{data_dir}/raw_transactions",
-                keys=["hash", "blockNumber"], mode=m, compact_every=ce,
+                keys=["hash", "blockNumber"], compact_every=ce,
             ),
             "transactions": ParquetUpsertTable(
                 spark, f"{data_dir}/transactions",
-                keys=["transactionHash", "address", "event"], mode=m,
+                keys=["transactionHash", "address", "event"],
                 compact_every=ce,
             ),
             "transfers": ParquetUpsertTable(
                 spark, f"{data_dir}/transfers",
-                keys=["transactionHash", "address", "event"], mode=m,
+                keys=["transactionHash", "address", "event"],
                 compact_every=ce,
             ),
             "fastbtc": ParquetUpsertTable(
                 spark, f"{data_dir}/fastbtc", keys=["transferId"],
-                version_col="updated", mode=m, compact_every=ce,
+                version_col="updated", compact_every=ce,
             ),
             "notifications": ParquetUpsertTable(
                 spark, f"{data_dir}/notifications",
-                keys=["transactionHash", "logIndex", "event"], mode=m,
+                keys=["transactionHash", "logIndex", "event"],
                 compact_every=ce,
             ),
             "user_state": ParquetUpsertTable(
                 spark, f"{data_dir}/user_state", keys=["address"],
-                version_col="block_height", mode=m, compact_every=ce,
+                version_col="block_height", compact_every=ce,
             ),
         }
 
     def _maybe_compact_one(self) -> str | None:
-        """Fold AT MOST ONE MoR sink whose delta-dir count crossed the
+        """Fold AT MOST ONE sink whose delta-dir count crossed the
         policy threshold — called once per cycle, so a tick never absorbs
         two table rewrites (review finding: per-table threshold
         staggering only shifts the collision to lcm points; a cycle-level
@@ -139,9 +144,7 @@ class Indexer:
         for k in range(len(names)):
             name = names[(self._compact_rr + k) % len(names)]
             t = self.tables[name]
-            if t.mode == "mor" and (
-                len(t.history()) >= self._compact_threshold
-            ):
+            if len(t.history()) >= self._compact_threshold:
                 t.compact()
                 self._compact_rr = (self._compact_rr + k + 1) % len(names)
                 return name

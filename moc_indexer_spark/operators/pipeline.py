@@ -420,9 +420,13 @@ def kneser_ney_logprob(docs: DataFrame, discount: float = 0.75) -> DataFrame:
     Determinism follows the bigram_logprob contract: the probability is
     ONE double expression with fixed operand order, its ln frozen to
     DECIMAL(18,9), per-doc aggregation in exact decimal. Scale shape:
-    the bigram count relation is the only corpus-proportional one (one
-    map-side-combining shuffle); the context/continuation tables are
-    vocab-sized broadcasts and the type count is a broadcast scalar.
+    the corpus is tokenized twice (the bigram count build and the
+    instance-side probe). The bigram count relation is the only
+    corpus-proportional shuffle (map-side combining); the context,
+    continuation and type counts ride that bigram-TYPE relation as
+    windows (two keyed exchanges plus one single-task whole-relation
+    count, all vocab²-bounded), and the finished score table is the
+    explicit broadcast side of the probe join.
     """
     from ..functions import text as T
 

@@ -63,15 +63,17 @@ def quality_gate(docs: DataFrame) -> DataFrame:
 
 
 def corpus_table(
-    spark: SparkSession, path: str, mode: str = "cow"
+    spark: SparkSession, path: str, compact_every: int = 1
 ) -> ParquetUpsertTable:
     """Corpus keyed by content hash; version = -doc_id so the MERGE's
     monotonic guard keeps the SMALLEST doc_id as keeper regardless of
-    arrival order (idempotent under replay). mode="mor" gives the
+    arrival order (idempotent under replay). The default folds after
+    every write; the streaming funnel passes a lazy cadence for the
     3 s-tick shape (O(batch) appends; the resolution ordering applies
-    the same neg_id guard at read) — the streaming funnel uses it."""
+    the same neg_id guard at read)."""
     return ParquetUpsertTable(
-        spark, path, keys=["content_hash"], version_col="neg_id", mode=mode
+        spark, path, keys=["content_hash"], version_col="neg_id",
+        compact_every=compact_every,
     )
 
 
@@ -240,9 +242,9 @@ class IncrementalNearDup:
     property the funnel's publish step relies on.
 
     STATE LAYOUT (round 9). The original form kept bands/feats/pairs in
-    keyed CoW upsert tables; the 500k-doc point measured the wall that
-    implies — 0.12 s of map-only state READS per tick against 5.35 s of
-    CoW WRITE-BACK, each upsert rewriting O(corpus) rows to add a
+    keyed copy-on-write upsert tables; the 500k-doc point measured the
+    wall that implies — 0.12 s of map-only state READS per tick against
+    5.35 s of WRITE-BACK, each upsert rewriting O(corpus) rows to add a
     batch-bounded delta (SCALE_CURVE.json neardedup at_500k, pre-fix).
     Bands and feats rows are append-only by construction (a doc's
     signature is immutable and rows are only added for ids never seen
@@ -285,7 +287,6 @@ class IncrementalNearDup:
             heal_batched_dir(self._dir(name))
         self.pairs_tbl = ParquetUpsertTable(
             spark, f"{self.state_dir}/pairs", keys=["doc_i", "doc_j"],
-            mode="mor",
             compact_every=(4 * compact_every) if compact_every else 64,
         )
 
@@ -703,9 +704,11 @@ def run_line_dedup_stream_available_now(
     reader = apply_max_files_per_trigger(reader, max_files_per_trigger)
     stream = reader.parquet(source_dir)
     lines_tbl = ParquetUpsertTable(
-        spark, f"{state_dir}/lines", keys=["doc_id", "pos"]
+        spark, f"{state_dir}/lines", keys=["doc_id", "pos"], compact_every=1
     )
-    clean_tbl = ParquetUpsertTable(spark, f"{state_dir}/clean", keys=["doc_id"])
+    clean_tbl = ParquetUpsertTable(
+        spark, f"{state_dir}/clean", keys=["doc_id"], compact_every=1
+    )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -726,7 +729,7 @@ def run_line_dedup_stream_available_now(
             #   the earlier-batch docs the crashed attempt was about to
             #   re-clean would never be rebuilt;
             # - plan staleness: a lazy plan over the PRE-upsert files
-            #   dangles once the CoW rewrite swaps the directory
+            #   dangles once the post-write fold swaps the directory
             #   (FAILED_READ_FILE when it finally evaluates).
             # Over-invalidation when a doc is re-ingested is harmless —
             # rebuilds are idempotent; under-invalidation is the bug.

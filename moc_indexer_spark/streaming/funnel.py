@@ -158,16 +158,16 @@ class StreamingCurationFunnel:
         self.embeddings_path = embeddings_path
         # gated doc payloads, keyed by doc_id (idempotent re-MERGE on
         # redelivery — the maintainer contract: ids stable, payloads
-        # immutable). MoR: these two tables are CORPUS-sized, and a CoW
-        # upsert rewrites O(corpus) rows per tick — the exact wall the
-        # near-dup maintainer's 500k point measured; MoR appends are
-        # O(batch) and publish (the batch job) pays the one resolve.
+        # immutable). Lazy fold: these two tables are CORPUS-sized, and
+        # folding every write rewrites O(corpus) rows per tick — the exact
+        # wall the near-dup maintainer's 500k point measured; lazy appends
+        # are O(batch) and publish (the batch job) pays the one resolve.
         self.docs_tbl = ParquetUpsertTable(
-            spark, f"{state_dir}/docs", keys=["doc_id"], mode="mor"
+            spark, f"{state_dir}/docs", keys=["doc_id"]
         )
         # exact-dedup keeper state (min-doc_id per content hash)
         self.corpus_tbl = corpus_table(
-            spark, f"{state_dir}/corpus", mode="mor"
+            spark, f"{state_dir}/corpus", compact_every=64
         )
         self._merge_rr = 0  # round-robin delta-merge cursor
         # fold_budget_sec: the maintainers' off-tick deferral (round 10)
@@ -219,7 +219,7 @@ class StreamingCurationFunnel:
             self._emb = None
         # replay-idempotent per-batch arrival counts (keyed by batch id)
         self.counts_tbl = ParquetUpsertTable(
-            spark, f"{state_dir}/counts", keys=["batch_id"]
+            spark, f"{state_dir}/counts", keys=["batch_id"], compact_every=1
         )
         self._quarantine_dir = f"{state_dir}/quarantine"
         self.track_quarantine = track_quarantine
@@ -228,7 +228,7 @@ class StreamingCurationFunnel:
         # an ever-growing dir tree; the raw-line dirs are the audit
         # artifact, written only when a batch actually had bad lines
         self.qcounts_tbl = ParquetUpsertTable(
-            spark, f"{state_dir}/qcounts", keys=["batch_id"]
+            spark, f"{state_dir}/qcounts", keys=["batch_id"], compact_every=1
         )
         # null-embedding DOC IDS (embeddings_in_stream +
         # missing_embedding="skip"), keyed by vec_id — idempotent under
@@ -237,7 +237,7 @@ class StreamingCurationFunnel:
         # later batch, review finding); written only when a batch
         # actually had misses, counted once at publish
         self.mcounts_tbl = ParquetUpsertTable(
-            spark, f"{state_dir}/mcounts", keys=["vec_id"]
+            spark, f"{state_dir}/mcounts", keys=["vec_id"], compact_every=1
         )
 
     def ingest_quarantine(self, bad: DataFrame, batch_id: int) -> None:

@@ -119,8 +119,7 @@ def reclassify_status(tbl: ParquetUpsertTable, tip_ts) -> None:
     `{'status': 'pending'}` / `{'status': 'confirming'}` and never
     touches confirmed documents (scan_transaction_status.py:55,88),
     whose percent froze at 100. Sweeping everything also rewrote the
-    WHOLE table per tick (a full-table MoR delta or CoW rewrite each
-    sweep); bounding it to the confirming set makes the sweep
+    WHOLE table per tick (a full-table delta each sweep); bounding it to the confirming set makes the sweep
     O(in-flight txs). A confirmed row's raw `confirmations` therefore
     freezes at its crossing value — at or above the cap by
     construction, like the reference, which stores no running count at
@@ -156,9 +155,15 @@ def reclassify_status(tbl: ParquetUpsertTable, tip_ts) -> None:
 def run_batch(
     spark: SparkSession, source_dir: str, out_path: str
 ) -> ParquetUpsertTable:
+    """One-shot batch run of the whole source. The table folds after every
+    write (a read-dominated output), and the append spreads over the
+    session's parallelism — the driver-side shard gate the Indexer applies
+    to catch-up cycles — instead of the tick path's single write task."""
     raw = spark.read.parquet(source_dir)
-    tbl = ParquetUpsertTable(spark, out_path, keys=["tx_hash"])
-    tbl.upsert(enrich_transactions(raw))
+    tbl = ParquetUpsertTable(spark, out_path, keys=["tx_hash"],
+                             compact_every=1)
+    tbl.upsert(enrich_transactions(raw),
+               shards=spark.sparkContext.defaultParallelism)
     return tbl
 
 
@@ -169,22 +174,21 @@ def run_stream_available_now(
     checkpoint_dir: str,
     schema=None,
     coalesce_key: str | None = None,
-    sink_mode: str = "cow",
     max_files_per_trigger: int | None = 1,
 ) -> None:
     """Incremental run draining all available input then stopping — the
     deterministic-replay test mode (reference analog: the forced
     from_block/to_block range, scan_raw_txs.py:94-98). In production the
     same query runs with `trigger(processingTime='3 seconds')` (the
-    reference's scan interval). sink_mode="mor" appends per-batch deltas
-    instead of rewriting the sink each micro-batch — the low-latency
-    choice for short triggers (see PLANS.md)."""
+    reference's scan interval). Each micro-batch appends one delta to the
+    sink and folds off the hot path — the low-latency choice for short
+    triggers (see PLANS.md)."""
     if schema is None:
         schema = spark.read.parquet(source_dir).schema
     reader = spark.readStream.schema(schema)
     reader = apply_max_files_per_trigger(reader, max_files_per_trigger)
     raw_stream = reader.parquet(source_dir)
-    tbl = ParquetUpsertTable(spark, out_path, keys=["tx_hash"], mode=sink_mode)
+    tbl = ParquetUpsertTable(spark, out_path, keys=["tx_hash"])
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():

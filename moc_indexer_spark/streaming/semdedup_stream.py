@@ -115,7 +115,7 @@ class IncrementalSemDeDup:
         self.path = path.rstrip("/") or path
         os.makedirs(self.path, exist_ok=True)
         self.dups = ParquetUpsertTable(
-            spark, f"{self.path}/dups", keys=["vec_id"], mode="mor"
+            spark, f"{self.path}/dups", keys=["vec_id"]
         )
         self._compact_every = compact_every
         self._fold_budget_sec = fold_budget_sec

@@ -1,24 +1,26 @@
 """Idempotent keyed upsert sink (the Mongo `find_one_and_update(upsert=True)`
 analog, /root/reference/indexer/scan_raw_txs.py:51-54 and every handler).
 
-No Delta in this environment, so MERGE is implemented over plain parquet in
-two modes — the copy-on-write / merge-on-read pair every lakehouse format
-offers:
+No Delta in this environment, so MERGE is implemented over plain parquet as
+a merge-on-read table: each upsert APPENDS a delta batch as a `__seq=N/`
+partition directory (staged outside the table, renamed in — one atomic
+directory per batch, O(batch) bytes); `read()` resolves latest-row-per-key
+across the dirs (version_col first, then batch sequence); `compact()` folds
+the dirs back into a single base through a crash-recoverable directory swap
+(swap.py). Deletes append tombstones (`__deleted=true`) that resolution
+filters out.
 
-- mode="cow" (default): read-modify-write with an atomic directory swap:
-    new_table = old_table ANTI-JOIN incoming-keys  UNION  incoming
-  Every upsert rewrites the table — cheapest reads, O(table) writes. Right
-  for large, rarely-updated batches.
-- mode="mor": each upsert APPENDS a delta batch as a `__seq=N/` partition
-  directory (atomic rename, one dir per batch); `read()` resolves
-  latest-row-per-key across base+deltas (version_col first, then batch
-  sequence), and `compact()` folds the deltas back into a single base —
-  O(batch) writes, reads pay a window until compaction. Right for the
-  3-second incremental cycles, where CoW's per-cycle rewrite dominates
-  latency (measured in PLANS.md). Deletes append tombstones
-  (`__deleted=true`) that resolution filters out.
+One mechanism, one knob: `compact_every` is the fold cadence per table.
+  - compact_every=1 folds after every write, so the table is always one
+    base dir and reads take the map-only single-dir path — the shape for
+    rarely-updated, read-dominated tables (per-batch counters, one-shot
+    batch outputs). A lone first delta is already a single base and is
+    left as is.
+  - larger values (the 64 default, the Indexer's 4x backstop) append
+    O(batch) per write and fold off the hot path — the shape for the
+    3-second incremental tick.
 
-Shared guards in both modes (the reference's semantics):
+Shared guards (the reference's semantics):
   - monotonic version guard (T8, moc_balances.py:127-136):
     `WHEN MATCHED AND source.version >= target.version THEN UPDATE`
   - update-only mode (T6, fastbtcbridge.py:58-78 upsert=False):
@@ -29,9 +31,9 @@ Shared guards in both modes (the reference's semantics):
     existing values.
 
 Scale notes: at 100 TB the table would be Delta/Iceberg/Hudi with real
-MERGE, a transaction log, and bucket-pruned rewrites; the semantics here
-are identical and single-writer (the reference is single-writer too — one
-indexer daemon owns each collection).
+MERGE and a transaction log; the semantics here are identical and
+single-writer (the reference is single-writer too — one indexer daemon
+owns each collection).
 """
 
 from __future__ import annotations
@@ -56,11 +58,8 @@ class ParquetUpsertTable:
         keys: list[str],
         version_col: str | None = None,
         n_buckets: int = 16,
-        mode: str = "cow",
         compact_every: int = 64,
     ):
-        if mode not in ("cow", "mor"):
-            raise ValueError(f"mode must be 'cow' or 'mor', got {mode!r}")
         self.spark = spark
         # normalize: a trailing slash would land staging dirs
         # (f"{path}__stage_...") back INSIDE the table directory, recreating
@@ -69,11 +68,11 @@ class ParquetUpsertTable:
         self.keys = keys
         self.version_col = version_col
         self.n_buckets = n_buckets
-        self.mode = mode
-        # auto-compact after this many delta batches (MoR only): bounds the
-        # window fan-in and the small-file count between maintenance runs
+        # fold cadence: compact() once this many delta dirs accrete — 1
+        # folds after every write; larger values bound the window fan-in
+        # and the small-file count between maintenance runs
         self.compact_every = compact_every
-        # Single-writer schema cache (the 3 s-tick headroom work): each MoR
+        # Single-writer schema cache (the 3 s-tick headroom work): each
         # upsert used to build a mergeSchema read just to learn the column
         # set (~80 ms of driver analysis per sink per cycle), and every
         # read() paid distributed footer merging across all delta dirs.
@@ -108,6 +107,19 @@ class ParquetUpsertTable:
                 if d.startswith(stage_prefix):
                     shutil.rmtree(os.path.join(parent, d),
                                   ignore_errors=True)
+        if os.path.isdir(self.path):
+            names = os.listdir(self.path)
+            if not any(f.startswith("__seq=") for f in names) and any(
+                f.endswith(".parquet") for f in names
+            ):
+                # the removed copy-on-write layout kept parquet files at
+                # the table root; appending __seq=0/ next to them would
+                # make every later read fail partition discovery
+                raise ValueError(
+                    f"{self.path} holds parquet files directly under the "
+                    "table root (the pre-merge-on-read flat layout); move "
+                    f"them into {self.path}/__seq=0/ before opening it"
+                )
         if not self.exists():
             self._may_have_tombstones: bool | None = False
         elif os.path.exists(self._marker("__tombstones")):
@@ -125,15 +137,7 @@ class ParquetUpsertTable:
     # -- read ---------------------------------------------------------------
 
     def exists(self) -> bool:
-        if self.mode == "mor":
-            return os.path.isdir(self.path) and any(
-                f.startswith("__seq=") for f in os.listdir(self.path)
-            )
-        return os.path.exists(os.path.join(self.path, "_SUCCESS")) or (
-            os.path.isdir(self.path) and any(
-                f.endswith(".parquet") for f in os.listdir(self.path)
-            )
-        )
+        return bool(self._delta_seqs())
 
     def _delta_seqs(self) -> list[int]:
         if not os.path.isdir(self.path):
@@ -166,7 +170,7 @@ class ParquetUpsertTable:
         tombstone carries the deleted row's version, so without the era
         filter a lower-version reinsert would LOSE to the tombstone in
         the (version, seq) ordering and the key would stay deleted —
-        diverging from CoW and the reference. Rows at or before the
+        diverging from the reference. Rows at or before the
         key's last tombstone are therefore dropped first; the version
         ordering only ever compares rows of the live era. Unversioned
         tables order by seq alone, where the last row IS the live era —
@@ -204,61 +208,57 @@ class ParquetUpsertTable:
         return out
 
     def read(self, as_of_seq: int | None = None) -> DataFrame | None:
-        """Resolved table state; `as_of_seq` time-travels a MoR table to the
-        state after delta N (inclusive) — the lakehouse VERSION AS OF read.
-        The `__seq` partition column prunes newer delta directories at the
-        scan, so an as-of read costs the same as reading at that point in
-        history, not a replay. CoW tables keep only the latest state (the
-        reference's Mongo collections likewise have no history; MoR deltas
-        ARE the history, until `compact()` folds them)."""
-        if not self.exists():
+        """Resolved table state; `as_of_seq` time-travels to the state after
+        delta N (inclusive) — the lakehouse VERSION AS OF read. The `__seq`
+        partition column prunes newer delta directories at the scan, so an
+        as-of read costs the same as reading at that point in history, not
+        a replay. Only surviving deltas are history: a point `compact()`
+        folded away raises (the reference's Mongo collections keep no
+        history at all)."""
+        seqs = self._delta_seqs()
+        if not seqs:
             return None
-        if self.mode == "mor":
-            if as_of_seq is not None:
-                seqs = self._delta_seqs()
-                if seqs and as_of_seq < seqs[0]:
-                    # compaction folded that point of history into the base;
-                    # answering from post-compaction state would silently
-                    # return FUTURE data for a past seq — refuse instead
-                    raise ValueError(
-                        f"as_of_seq={as_of_seq} predates the oldest surviving "
-                        f"delta (__seq={seqs[0]}); earlier history was folded "
-                        "by compaction"
-                    )
-                if seqs and as_of_seq <= seqs[-1] and as_of_seq not in seqs:
-                    # seq numbers are assigned contiguously, so a GAP below
-                    # the newest dir is a point compact_deltas() folded into
-                    # a later delta; a prefix read would silently MISS those
-                    # rows — refuse, like the pre-base case above
-                    raise ValueError(
-                        f"as_of_seq={as_of_seq} was folded away by delta "
-                        "compaction (no surviving delta at that seq)"
-                    )
-            raw = self._read_raw()
-            if as_of_seq is not None:
-                raw = raw.filter(F.col("__seq") <= as_of_seq)
-            if len(self._delta_seqs()) == 1:
-                # single-dir fast path: every delta dir holds <=1 row per
-                # key by construction (upsert dedups incoming, tombstones
-                # and the compacted base are resolved views), so with one
-                # dir the window resolve is the identity — skip the hash
-                # shuffle + sort entirely. This is the steady post-compact
-                # read shape: a freshly compacted 10M-row table reads
-                # map-only instead of paying an Exchange per read.
-                out = raw.drop("__seq")
-                if "__deleted" in out.columns:
-                    out = out.filter(
-                        ~F.coalesce(F.col("__deleted"), F.lit(False))
-                    ).drop("__deleted")
-                return out
-            return self._resolve(raw)
         if as_of_seq is not None:
-            raise ValueError("time travel requires mode='mor' (delta history)")
-        return self.spark.read.parquet(self.path)
+            if as_of_seq < seqs[0]:
+                # compaction folded that point of history into the base;
+                # answering from post-compaction state would silently
+                # return FUTURE data for a past seq — refuse instead
+                raise ValueError(
+                    f"as_of_seq={as_of_seq} predates the oldest surviving "
+                    f"delta (__seq={seqs[0]}); earlier history was folded "
+                    "by compaction"
+                )
+            if as_of_seq <= seqs[-1] and as_of_seq not in seqs:
+                # seq numbers are assigned contiguously, so a GAP below
+                # the newest dir is a point compact_deltas() folded into
+                # a later delta; a prefix read would silently MISS those
+                # rows — refuse, like the pre-base case above
+                raise ValueError(
+                    f"as_of_seq={as_of_seq} was folded away by delta "
+                    "compaction (no surviving delta at that seq)"
+                )
+        raw = self._read_raw()
+        if as_of_seq is not None:
+            raw = raw.filter(F.col("__seq") <= as_of_seq)
+        if len(seqs) == 1:
+            # single-dir fast path: every delta dir holds <=1 row per
+            # key by construction (upsert dedups incoming, tombstones
+            # and the compacted base are resolved views), so with one
+            # dir the window resolve is the identity — skip the hash
+            # shuffle + sort entirely. This is the steady post-compact
+            # read shape: a freshly compacted 10M-row table reads
+            # map-only instead of paying an Exchange per read.
+            out = raw.drop("__seq")
+            if "__deleted" in out.columns:
+                out = out.filter(
+                    ~F.coalesce(F.col("__deleted"), F.lit(False))
+                ).drop("__deleted")
+            return out
+        return self._resolve(raw)
 
     def history(self) -> list[int]:
         """Available delta sequence numbers (time-travel points)."""
-        return self._delta_seqs() if self.mode == "mor" else []
+        return self._delta_seqs()
 
     # -- write --------------------------------------------------------------
 
@@ -275,47 +275,26 @@ class ParquetUpsertTable:
             .drop("__rn")
         )
 
-    def _align_schemas(
-        self, batch: DataFrame, existing: DataFrame
-    ) -> tuple[DataFrame, DataFrame]:
-        """Partial `$set` support (fastbtcbridge.py:63-78 updates only a
-        field subset) + schema evolution (Mongo documents grow fields):
-        - columns absent from the batch are filled from the matched existing
-          row (unmatched rows get nulls — they only survive in insert mode);
-        - columns new in the batch are added to the existing table as nulls.
-        """
-        missing = [c for c in existing.columns if c not in batch.columns]
-        if missing:
-            ex = existing.select(*self.keys, *missing)
-            batch = batch.join(F.broadcast(ex), self.keys, "left")
-        new_cols = [
-            f for f in batch.schema.fields if f.name not in existing.columns
-        ]
-        for f_ in new_cols:
-            existing = existing.withColumn(
-                f_.name, F.lit(None).cast(f_.dataType)
-            )
-        return batch, existing
-
     def upsert(
         self, batch: DataFrame, insert: bool = True, shards: int = 1
     ) -> None:
-        """MERGE batch into the table.
+        """MERGE batch into the table by appending it as one delta.
 
         insert=False -> update-only (T6): non-matching incoming keys dropped.
         With version_col -> matched rows replaced only if
-        incoming.version >= existing.version (T8).
+        incoming.version >= existing.version (T8) — no write-side join:
+        resolution orders by (version desc, seq desc), so a stale incoming
+        version loses at read.
         Batches may carry a column subset (partial $set) — missing columns
         keep their existing values.
-        shards (MoR only) -> write the delta as up-to-`shards` files
-        instead of one: a catch-up cycle's whole batch would otherwise
-        fold through a single write task (the one serialization point in
-        the recovery path). The caller gates it on known batch size —
-        driver-side, no extra count job; tick-sized batches keep the
-        measured single-file default. CoW rewrites are bucket-partitioned
-        already and ignore it.
+        shards -> write the delta as up-to-`shards` files instead of one:
+        a catch-up cycle's or a one-shot batch's whole input would
+        otherwise fold through a single write task (the one serialization
+        point in the recovery path). The caller gates it on known batch
+        size — driver-side, no extra count job; tick-sized batches keep
+        the measured single-file default.
         """
-        if self.mode == "mor" and shards <= 1:
+        if shards <= 1:
             # Tick-path append (shards=1): the delta lands as ONE file
             # anyway (_append_delta coalesces post-dedup), so coalesce
             # BEFORE the key-dedup window instead — a SinglePartition
@@ -329,89 +308,35 @@ class ParquetUpsertTable:
             # were arbitrary-but-stable under either partitioning.
             batch = batch.coalesce(1)
         batch = self._dedup_incoming(batch)
-        if self.mode == "mor":
-            self._upsert_mor(batch, insert, shards)
-            return
-        existing = self.read()
-        if existing is None:
+        if not self.exists():
             if insert:
-                self._atomic_write(batch)
+                self._append_delta(batch, shards)
             return
-        batch, existing = self._align_schemas(batch, existing)
-
-        join_cond = [batch[k] == existing[k] for k in self.keys]
-
-        if self.version_col:
-            # Matched-ness must be its own flag (__m_*): using null-ness of
-            # the version column conflated "no matching key" with "matched
-            # row whose version is NULL" — duplicating keys when both
-            # versions were NULL and dropping legit update-only rows whose
-            # existing version was NULL. The version race itself follows
-            # MoR's resolve ordering (desc_nulls_last): a non-NULL version
-            # beats NULL; ties — equal or both NULL — go to the incoming
-            # row (the >= guard / Mongo last-writer-wins).
-            vk = self.version_col
-            inc_keys = batch.select(
-                *[F.col(k).alias(f"__k_{k}") for k in self.keys],
-                F.col(vk).alias("__v_inc"),
-                F.lit(True).alias("__m_inc"),
-            )
-            cond = [existing[k] == inc_keys[f"__k_{k}"] for k in self.keys]
-            # keep existing rows with NO incoming match, or that BEAT the
-            # incoming version (strictly greater, nulls-last)
-            keep_existing = (
-                existing.join(F.broadcast(inc_keys), cond, "left")
-                .filter(
-                    F.col("__m_inc").isNull()
-                    | (
-                        existing[vk].isNotNull()
-                        & (
-                            F.col("__v_inc").isNull()
-                            | (existing[vk] > F.col("__v_inc"))
-                        )
-                    )
+        raw_cols = [
+            c for c in self._read_raw().columns
+            if c not in ("__seq", "__deleted")
+        ]
+        missing = [c for c in raw_cols if c not in batch.columns]
+        if missing:
+            # partial $set: fill absent columns from the matched current row
+            fill = self.read().select(*self.keys, *missing)
+            batch = batch.join(F.broadcast(fill), self.keys, "left")
+        if not insert:
+            # update-only (T6): drop incoming keys with no current match.
+            # While this writer has never appended a tombstone, "the key
+            # exists" is just "the key appears in any row" — a distinct
+            # scan, no per-key window resolve (the resolve's only job here
+            # would be deciding whether a tombstone wins).
+            if self._may_have_tombstones is False:
+                existing_keys = self._read_raw().select(*self.keys).dropDuplicates(
+                    self.keys
                 )
-                .drop(*[f"__k_{k}" for k in self.keys], "__v_inc", "__m_inc")
+            else:
+                existing_keys = self.read().select(*self.keys)
+            batch = batch.join(
+                F.broadcast(existing_keys), self.keys, "left_semi"
             )
-            # incoming rows that don't lose the version race
-            ex_keys = existing.select(
-                *[F.col(k).alias(f"__k_{k}") for k in self.keys],
-                F.col(vk).alias("__v_ex"),
-                F.lit(True).alias("__m_ex"),
-            )
-            cond2 = [batch[k] == ex_keys[f"__k_{k}"] for k in self.keys]
-            apply_incoming = (
-                batch.join(F.broadcast(ex_keys), cond2, "left")
-                .filter(
-                    F.col("__m_ex").isNull()
-                    | F.col("__v_ex").isNull()
-                    | (batch[vk].isNotNull() & (batch[vk] >= F.col("__v_ex")))
-                )
-            )
-            if not insert:
-                apply_incoming = apply_incoming.filter(
-                    F.col("__m_ex").isNotNull()
-                )
-            apply_incoming = apply_incoming.drop(
-                *[f"__k_{k}" for k in self.keys], "__v_ex", "__m_ex"
-            )
-            merged = keep_existing.unionByName(apply_incoming)
-        else:
-            inc_keys = batch.select(*self.keys)
-            keep_existing = existing.join(
-                F.broadcast(inc_keys), self.keys, "left_anti"
-            )
-            apply_incoming = batch
-            if not insert:
-                ex_keys = existing.select(*self.keys)
-                apply_incoming = batch.join(
-                    F.broadcast(ex_keys), self.keys, "left_semi"
-                )
-            merged = keep_existing.unionByName(apply_incoming)
-
-        self._atomic_write(merged)
-
-    # -- merge-on-read write path -------------------------------------------
+        self._append_delta(batch, shards)
 
     def _append_delta(
         self, batch: DataFrame, shards: int = 1, auto_compact: bool = True
@@ -464,53 +389,18 @@ class ParquetUpsertTable:
             for f_ in batch.schema.fields:
                 if f_.name not in known:
                     self._schema = self._schema.add(f_)
-        if auto_compact and len(seqs) + 1 >= self.compact_every:
+        # a lone first delta is already a single base: folding it would
+        # only copy it
+        if auto_compact and seqs and len(seqs) + 1 >= self.compact_every:
             self.compact()
 
-    def _upsert_mor(
-        self, batch: DataFrame, insert: bool, shards: int = 1
-    ) -> None:
-        if not self.exists():
-            if insert:
-                self._append_delta(batch, shards)
-            return
-        raw_cols = [
-            c for c in self._read_raw().columns
-            if c not in ("__seq", "__deleted")
-        ]
-        missing = [c for c in raw_cols if c not in batch.columns]
-        if missing:
-            # partial $set: fill absent columns from the matched current row
-            fill = self.read().select(*self.keys, *missing)
-            batch = batch.join(F.broadcast(fill), self.keys, "left")
-        if not insert:
-            # update-only (T6): drop incoming keys with no current match.
-            # While this writer has never appended a tombstone, "the key
-            # exists" is just "the key appears in any row" — a distinct
-            # scan, no per-key window resolve (the resolve's only job here
-            # would be deciding whether a tombstone wins).
-            if self._may_have_tombstones is False:
-                existing_keys = self._read_raw().select(*self.keys).dropDuplicates(
-                    self.keys
-                )
-            else:
-                existing_keys = self.read().select(*self.keys)
-            batch = batch.join(
-                F.broadcast(existing_keys), self.keys, "left_semi"
-            )
-        # the T8 version guard needs no write-side join: resolution orders by
-        # (version desc, seq desc), so a stale incoming version loses at read
-        self._append_delta(batch, shards)
-
     def compact(self) -> None:
-        """Fold deltas into a single base: the MoR maintenance action (Hudi
+        """Fold deltas into a single base: the maintenance action (Hudi
         compaction / Delta OPTIMIZE analog). Readers see the old or the new
         table, never a mix (directory swap). The base keeps the HIGHEST
         folded seq number (not 0), so surviving history points stay
         truthful: `read(as_of_seq=n)` for n >= base answers correctly and
         for folded-away n raises instead of silently serving future data."""
-        if self.mode != "mor":
-            return  # CoW has no deltas to fold — explicit no-op, not an error
         resolved = self.read()
         if resolved is None:
             return
@@ -564,8 +454,6 @@ class ParquetUpsertTable:
         re-prunes. Refused for tables that may hold tombstones: the
         version-ERA resolution needs the within-tail seq history this
         fold collapses. Returns the number of delta dirs folded away."""
-        if self.mode != "mor":
-            return 0
         if self._may_have_tombstones is not False:
             raise ValueError(
                 "compact_deltas() on a table that may hold tombstones — "
@@ -600,9 +488,11 @@ class ParquetUpsertTable:
         return len(tail)
 
     def delete_where(self, condition) -> None:
-        """Retention delete (T9, mocsettlement.py:416-429). MoR appends
-        tombstones (the matched rows re-emitted with `__deleted=true`, so
-        they carry the winning version and the newest seq); CoW rewrites."""
+        """Retention delete (T9, mocsettlement.py:416-429): append
+        tombstones — the matched rows re-emitted with `__deleted=true`, so
+        they carry the winning version and the newest seq. Exactly the
+        rows where the condition is TRUE are deleted; a NULL evaluation
+        keeps the row."""
         existing = self.read()
         if existing is None:
             return
@@ -610,34 +500,14 @@ class ParquetUpsertTable:
         if victims.isEmpty():
             # nothing matched: appending an empty tombstone delta would
             # permanently demote the table off the update-only fast path
-            # (and a CoW rewrite would be an O(table) no-op) — skip both.
-            # Retention ticks usually expire nothing, so this is the
-            # common case under the 3 s cadence.
+            # (and on a fold-every-write table cost an O(table) no-op
+            # fold). Retention ticks usually expire nothing, so this is
+            # the common case under the 3 s cadence.
             return
-        if self.mode == "mor":
-            self._may_have_tombstones = True
-            # marker BEFORE the delta: a crash between the two leaves a
-            # false-positive marker (conservative), never a tombstone the
-            # fast path doesn't know about
-            with open(self._marker("__tombstones"), "w") as fh:
-                fh.write("1")
-            self._append_delta(victims.withColumn("__deleted", F.lit(True)))
-            return
-        # delete exactly the rows where the condition is TRUE — a NULL
-        # evaluation keeps the row. `~condition` alone would drop NULLs
-        # (NULL filter = dropped), silently deleting rows the condition
-        # never matched and diverging from MoR, whose tombstones only
-        # ever cover `filter(condition)` victims.
-        self._atomic_write(
-            existing.filter(~F.coalesce(condition, F.lit(False)))
-        )
-
-    def _atomic_write(self, df: DataFrame) -> None:
-        swap_dir(
-            self.path,
-            lambda tmp: (
-                df.repartition(self.n_buckets, *self.keys)
-                .write.mode("overwrite")
-                .parquet(tmp)
-            ),
-        )
+        self._may_have_tombstones = True
+        # marker BEFORE the delta: a crash between the two leaves a
+        # false-positive marker (conservative), never a tombstone the
+        # fast path doesn't know about
+        with open(self._marker("__tombstones"), "w") as fh:
+            fh.write("1")
+        self._append_delta(victims.withColumn("__deleted", F.lit(True)))

@@ -1,7 +1,9 @@
 """Crash-recoverable whole-directory swap for parquet state tables.
 
-Shared by the upsert sink's CoW rewrite / MoR compaction (sink.py) and
-the incremental rollups (rollup.py). The swap itself is two renames —
+Shared by the upsert sink's compaction (sink.py: every fold, including
+the fold-after-every-write of compact_every=1 tables, installs its base
+`__seq=N/` dir plus a root `_SUCCESS` this way) and the incremental
+rollups (rollup.py). The swap itself is two renames —
 POSIX gives no atomic directory exchange — so the protocol makes every
 crash window recoverable instead:
 

@@ -26,8 +26,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     ship_package(spark)
     d = tempfile.mkdtemp(prefix="profile_ingest_")
-    ix = Indexer(spark, d, FakeChain(CONTRACTS, USERS, 20), CONTRACTS,
-                 sink_mode="mor")
+    ix = Indexer(spark, d, FakeChain(CONTRACTS, USERS, 20), CONTRACTS)
     ix.run_incremental(tip=2000)  # warm, same as bench_ingest
 
     for cycle, tip in enumerate(range(2010, 2040, 10)):

@@ -18,8 +18,9 @@ Two measurement families, both written into SCALE_CURVE.json under
    - mor_cycle_vs_history: 10-block MoR cycle after 2000/6000/20000-block
      warm catch-up. The MoR claim is O(batch) + O(delta count), NOT
      O(table) — the exponent should be ~0.
-   - cow_cycle_vs_history: CoW rewrites the table each cycle — exponent
-     ~1 expected and documented (the honest contrast).
+   - cow_cycle_vs_history: the Indexer's sink_mode="cow" folds every
+     sink after every write (compact_every=1), an O(table) rewrite per
+     cycle — exponent ~1 expected and documented (the honest contrast).
    - mor_cycle_vs_batch: txs_per_block 20/60/200 at fixed history —
      exponent <= ~1 (cycle work is the batch itself + fixed overhead).
    - mor_read_vs_deltas: resolved-read latency with 8/24/80 uncompacted
@@ -223,7 +224,8 @@ def run_ingest(spark) -> dict:
     ship_package(spark)
     out: dict[str, dict] = {}
 
-    # 1) cycle latency vs history size (MoR claim: flat; CoW: linear)
+    # 1) cycle latency vs history size (lazy fold: flat; fold every
+    # write, sink_mode="cow": linear)
     histories = [2000, 6000, 20000]
     for mode in ("mor", "cow"):
         row: dict = {"t": {}}
@@ -337,9 +339,10 @@ def run_ingest(spark) -> dict:
     # 2b) upsert latency vs PRE-LOADED table size, fixed 2k batch — the
     # direct form of the MoR-vs-CoW contrast that the FakeChain histories
     # can't show (a 400k-row table rewrite still sits under the local
-    # scheduling floor): CoW must re-write O(table) bytes per upsert
-    # (expect exponent -> 1 as the table outgrows the floor), MoR appends
-    # O(batch) (expect ~0)
+    # scheduling floor): the "cow" arm folds after every write
+    # (compact_every=1) and so re-writes O(table) bytes per upsert
+    # (expect exponent -> 1 as the table outgrows the floor), the "mor"
+    # arm never folds and appends O(batch) (expect ~0)
     from pyspark.sql import functions as F
 
     sizes_ax = [1_000_000, 3_000_000, 10_000_000]
@@ -349,7 +352,7 @@ def run_ingest(spark) -> dict:
             d = tempfile.mkdtemp(prefix=f"scale_upsert_{mode}_{n}_")
             tbl = ParquetUpsertTable(
                 spark, os.path.join(d, "t"), keys=["k"], version_col="v",
-                mode=mode, compact_every=10**9,
+                compact_every=1 if mode == "cow" else 10**9,
             )
             tbl.upsert(spark.range(0, n).select(
                 F.col("id").alias("k"), F.lit(0).alias("v"),
@@ -385,7 +388,7 @@ def run_ingest(spark) -> dict:
     d = tempfile.mkdtemp(prefix="scale_read_deltas_")
     tbl = ParquetUpsertTable(
         spark, os.path.join(d, "t"), keys=["k"], version_col="v",
-        mode="mor", compact_every=10**9,
+        compact_every=10**9,
     )
     base = spark.range(0, 200_000).select(
         F.col("id").alias("k"), F.lit(0).alias("v"),

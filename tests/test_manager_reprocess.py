@@ -19,6 +19,11 @@ def test_reprocess_window(spark, tmp_path, sf_dir):
     events = table(spark, sf_dir, "events").orderBy("event_id").limit(200)
     events.coalesce(1).write.mode("overwrite").parquet(src)
     tbl = run_batch(spark, src, f"{tmp_path}/out")
+    # the one-shot append spreads over the session's parallelism (one
+    # delta file per write task), not the tick path's single task
+    assert tbl.history() == [0]
+    seq_dir = os.path.join(tbl.path, "__seq=0")
+    assert sum(f.endswith(".parquet") for f in os.listdir(seq_dir)) > 1
 
     tip = spark.read.parquet(src).agg(F.max("ts")).collect()[0][0]
     # break 3 rows inside the window and 1 row outside it (too old)

@@ -67,7 +67,7 @@ def test_wei_ether_roundtrip_property(spark, amount):
     assert Decimal(r.eth) == Decimal(amount) / Decimal(10**18)
 
 
-# -- randomized op sequences: MoR == CoW == sequential Mongo reference ------
+# -- randomized op sequences: eager == lazy == sequential Mongo reference ---
 
 _op_strategy = st.one_of(
     st.tuples(st.just("upsert"), batch_strategy, st.booleans()),
@@ -82,15 +82,15 @@ _op_strategy = st.one_of(
 def test_op_sequences_match_sequential_reference(spark, tmp_path_factory,
                                                  ops):
     """ANY interleaving of upserts (insert and update-only), retention
-    deletes, and compactions must leave MoR and CoW tables in exactly the
-    state a sequential Mongo-style fold produces — including the
+    deletes, and compactions must leave eager (fold after every write) and
+    lazy tables in exactly the state a sequential Mongo-style fold produces — including the
     delete-resets-the-version-era rule (a reinsert after a delete wins
     regardless of how its version compares to the deleted row's)."""
     base = str(tmp_path_factory.mktemp("opseq"))
     tables = {
-        mode: ParquetUpsertTable(spark, f"{base}/{mode}", keys=["k"],
-                                 version_col="ver", mode=mode)
-        for mode in ("cow", "mor")
+        arm: ParquetUpsertTable(spark, f"{base}/{arm}", keys=["k"],
+                                version_col="ver", compact_every=ce)
+        for arm, ce in (("eager", 1), ("lazy", 64))
     }
     ref: dict[str, tuple[int, int]] = {}
     for op in ops:
@@ -114,15 +114,15 @@ def test_op_sequences_match_sequential_reference(spark, tmp_path_factory,
                 t.delete_where(F.col("k") == op[1])
             ref.pop(op[1], None)
         else:
-            tables["mor"].compact()
+            tables["lazy"].compact()
     expect = {k: vv for k, vv in ref.items()}
-    for mode, t in tables.items():
+    for arm, t in tables.items():
         df = t.read()
         got = (
             {} if df is None
             else {r.k: (r.ver, r.v) for r in df.collect()}
         )
-        assert got == expect, mode
+        assert got == expect, arm
 
 # -- NULL values, predicate deletes, restarts: the review-found edge set ----
 
@@ -141,7 +141,7 @@ _op2_strategy = st.one_of(
     st.tuples(st.just("upsert"), _null_batch_strategy, st.booleans()),
     st.tuples(st.just("delete_key"), st.sampled_from(KEYS)),
     # predicate delete over a nullable column: rows where v is NULL must
-    # SURVIVE (condition evaluates NULL, not TRUE) in both modes
+    # SURVIVE (condition evaluates NULL, not TRUE) in both arms
     st.tuples(st.just("delete_pred"), st.integers(min_value=0, max_value=99)),
     st.tuples(st.just("compact")),
     # restart: rebuild the instances from disk — the tombstone marker
@@ -157,7 +157,7 @@ _op2_strategy = st.one_of(
 def test_null_and_predicate_ops_match_reference(spark, tmp_path_factory,
                                                 ops):
     """Randomized sequences over a NULLABLE value column with predicate
-    deletes and cold restarts: MoR == CoW == the sequential reference,
+    deletes and cold restarts: eager == lazy == the sequential reference,
     where `delete_where(v < c)` removes exactly the rows whose v is
     non-NULL and < c (SQL three-valued logic: NULL keeps the row)."""
     import pyspark.sql.types as T
@@ -168,12 +168,16 @@ def test_null_and_predicate_ops_match_reference(spark, tmp_path_factory,
         T.StructField("v", T.LongType()),
     ])
     base = str(tmp_path_factory.mktemp("opseq2"))
-    paths = {mode: f"{base}/{mode}" for mode in ("cow", "mor")}
-    tables = {
-        mode: ParquetUpsertTable(spark, p, keys=["k"], version_col="ver",
-                                 mode=mode)
-        for mode, p in paths.items()
-    }
+    arms = {"eager": 1, "lazy": 64}
+
+    def open_tables():
+        return {
+            arm: ParquetUpsertTable(spark, f"{base}/{arm}", keys=["k"],
+                                    version_col="ver", compact_every=ce)
+            for arm, ce in arms.items()
+        }
+
+    tables = open_tables()
     ref: dict[str, tuple[int, int | None]] = {}
     for op in ops:
         if op[0] == "upsert":
@@ -202,20 +206,16 @@ def test_null_and_predicate_ops_match_reference(spark, tmp_path_factory,
             ref = {k: (ver, v) for k, (ver, v) in ref.items()
                    if v is None or v >= c}
         elif op[0] == "compact":
-            tables["mor"].compact()
+            tables["lazy"].compact()
         else:  # restart
-            tables = {
-                mode: ParquetUpsertTable(spark, p, keys=["k"],
-                                         version_col="ver", mode=mode)
-                for mode, p in paths.items()
-            }
-    for mode, t in tables.items():
+            tables = open_tables()
+    for arm, t in tables.items():
         df = t.read()
         got = (
             {} if df is None
             else {r.k: (r.ver, r.v) for r in df.collect()}
         )
-        assert got == ref, mode
+        assert got == ref, arm
 
 
 # -- randomized rollup maintenance: any slicing + replays == one batch agg ---
@@ -422,8 +422,7 @@ def test_minor_delta_merges_in_op_sequences(spark, tmp_path_factory, ops):
     refusal case, covered by its unit test)."""
     base = str(tmp_path_factory.mktemp("minorseq"))
     tbl = ParquetUpsertTable(spark, f"{base}/t", keys=["k"],
-                             version_col="ver", mode="mor",
-                             compact_every=1000)
+                             version_col="ver", compact_every=1000)
     ref: dict[str, tuple[int, int]] = {}
     for op in ops:
         if op[0] == "upsert":

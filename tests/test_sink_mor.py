@@ -1,9 +1,10 @@
-"""Merge-on-read sink mode: semantic parity with copy-on-write.
+"""Merge-on-read sink: the fold cadence is physical, never semantic.
 
-The MoR mode must be indistinguishable from CoW through `read()` — same
-MERGE semantics (idempotent replay, version guard, update-only, partial
-$set, retention delete) with O(batch) appends instead of O(table)
-rewrites, and `compact()` must be a no-op through the read view.
+A lazy table (deltas accrete until compact_every) and an eager one
+(compact_every=1: folded after every write) must be indistinguishable
+through `read()` — same MERGE semantics (idempotent replay, version
+guard, update-only, partial $set, retention delete) — and `compact()`
+must be a no-op through the read view.
 """
 
 import pytest
@@ -46,17 +47,22 @@ def _scripted_ops(spark, tbl):
 
 
 def test_mor_equals_cow_stepwise(spark, workdir):
-    cow = ParquetUpsertTable(spark, f"{workdir}/cow", keys=["k"],
-                             version_col="ver")
-    mor = ParquetUpsertTable(spark, f"{workdir}/mor", keys=["k"],
-                             version_col="ver", mode="mor")
-    for (step_c, step_m) in zip(_scripted_ops(spark, cow),
-                                _scripted_ops(spark, mor)):
-        assert _snapshot(cow) == _snapshot(mor), step_c
+    """Eager (fold after every write) and lazy tables agree after every
+    scripted op, and end in the state sequential Mongo upserts give."""
+    eager = ParquetUpsertTable(spark, f"{workdir}/eager", keys=["k"],
+                               version_col="ver", compact_every=1)
+    lazy = ParquetUpsertTable(spark, f"{workdir}/lazy", keys=["k"],
+                              version_col="ver")
+    for (step_e, step_l) in zip(_scripted_ops(spark, eager),
+                                _scripted_ops(spark, lazy)):
+        assert _snapshot(eager) == _snapshot(lazy), step_e
+        assert len(eager.history()) == 1, step_e
+    assert _snapshot(eager) == [(1, "back", 30), (2, "b9", 99), (3, "c", 20)]
+    assert len(lazy.history()) > 1
 
 
 def test_mor_unversioned_last_writer_wins(spark, workdir):
-    mor = ParquetUpsertTable(spark, f"{workdir}/m", keys=["k"], mode="mor")
+    mor = ParquetUpsertTable(spark, f"{workdir}/m", keys=["k"])
     mor.upsert(spark.createDataFrame([(1, "x")], ["k", "v"]))
     mor.upsert(spark.createDataFrame([(1, "y")], ["k", "v"]))
     assert [(r.k, r.v) for r in mor.read().collect()] == [(1, "y")]
@@ -64,7 +70,7 @@ def test_mor_unversioned_last_writer_wins(spark, workdir):
 
 def test_mor_compact_preserves_view_and_drops_deltas(spark, workdir):
     mor = ParquetUpsertTable(spark, f"{workdir}/m", keys=["k"],
-                             version_col="ver", mode="mor")
+                             version_col="ver")
     for i in range(5):
         mor.upsert(spark.createDataFrame([(i % 2, f"v{i}", i)],
                                          ["k", "v", "ver"]))
@@ -83,8 +89,7 @@ def test_mor_compact_preserves_view_and_drops_deltas(spark, workdir):
 
 
 def test_mor_auto_compacts_at_threshold(spark, workdir):
-    mor = ParquetUpsertTable(spark, f"{workdir}/m", keys=["k"],
-                             mode="mor", compact_every=3)
+    mor = ParquetUpsertTable(spark, f"{workdir}/m", keys=["k"], compact_every=3)
     for i in range(4):
         mor.upsert(spark.createDataFrame([(i, "x")], ["k", "v"]))
     # 3rd upsert triggered compaction (base keeps seq 2); the 4th appended on top
@@ -93,9 +98,9 @@ def test_mor_auto_compacts_at_threshold(spark, workdir):
 
 
 def test_stream_foreachbatch_into_mor_equals_batch(spark, workdir, sf_dir):
-    """The streaming ingest (foreachBatch + checkpoint) writing through a
-    merge-on-read sink must produce the same resolved table as the one-shot
-    batch run into a copy-on-write sink."""
+    """The streaming ingest (foreachBatch + checkpoint) appending lazy
+    deltas must produce the same resolved table as the one-shot batch run,
+    whose table folds after its write."""
     import os
     import shutil
 
@@ -115,10 +120,9 @@ def test_stream_foreachbatch_into_mor_equals_batch(spark, workdir, sf_dir):
                 shutil.copy(f"{workdir}/stage/{f_}", f"{src}/slice{i}.parquet")
         run_stream_available_now(
             spark, src, f"{workdir}/out", f"{workdir}/ckpt",
-            schema=events.schema, sink_mode="mor",
+            schema=events.schema,
         )
-    mor = ParquetUpsertTable(spark, f"{workdir}/out", keys=["tx_hash"],
-                             mode="mor")
+    mor = ParquetUpsertTable(spark, f"{workdir}/out", keys=["tx_hash"])
     batch = run_batch(spark, src, f"{workdir}/batch_out")
     cols = ["tx_hash", "address", "event", "created_at", "amount"]
     a = sorted(map(tuple, mor.read().select(*cols).collect()))
@@ -130,7 +134,7 @@ def test_mor_read_resolution_is_single_shuffle(spark, workdir):
     """Latest-per-key resolution must cost exactly one hash shuffle on the
     key (the row_number window) — no joins, no extra exchanges — so MoR
     read overhead stays bounded between compactions."""
-    mor = ParquetUpsertTable(spark, f"{workdir}/m", keys=["k"], mode="mor")
+    mor = ParquetUpsertTable(spark, f"{workdir}/m", keys=["k"])
     for i in range(4):
         mor.upsert(spark.createDataFrame([(i % 2, f"v{i}")], ["k", "v"]))
     plan = mor.read()._jdf.queryExecution().executedPlan().toString()
@@ -139,7 +143,7 @@ def test_mor_read_resolution_is_single_shuffle(spark, workdir):
 
 
 def test_mor_time_travel_reads_past_states(spark, workdir):
-    tbl = ParquetUpsertTable(spark, f"{workdir}/tt", keys=["k"], mode="mor")
+    tbl = ParquetUpsertTable(spark, f"{workdir}/tt", keys=["k"])
     mk = lambda rows: spark.createDataFrame(rows, ["k", "v"])
     tbl.upsert(mk([(1, "a"), (2, "b")]))          # seq 0
     tbl.upsert(mk([(2, "b2"), (3, "c")]))         # seq 1
@@ -158,11 +162,19 @@ def test_mor_time_travel_reads_past_states(spark, workdir):
     assert "__seq" in plan
 
 
-def test_time_travel_rejected_on_cow(spark, workdir):
-    tbl = ParquetUpsertTable(spark, f"{workdir}/cow", keys=["k"])
+def test_time_travel_on_eager_table_keeps_only_newest_seq(spark, workdir):
+    """A table folded after every write keeps one history point: the
+    folded seq raises, the newest seq answers."""
+    tbl = ParquetUpsertTable(spark, f"{workdir}/eager", keys=["k"],
+                             compact_every=1)
     tbl.upsert(spark.createDataFrame([(1, "a")], ["k", "v"]))
-    with pytest.raises(ValueError):
+    tbl.upsert(spark.createDataFrame([(1, "a2"), (2, "b")], ["k", "v"]))
+    assert tbl.history() == [1]
+    with pytest.raises(ValueError, match="compaction"):
         tbl.read(as_of_seq=0)
+    assert sorted(tuple(r) for r in tbl.read(as_of_seq=1).collect()) == [
+        (1, "a2"), (2, "b")
+    ]
 
 
 def test_crashed_append_leaves_table_readable(spark, workdir, monkeypatch):
@@ -171,7 +183,7 @@ def test_crashed_append_leaves_table_readable(spark, workdir, monkeypatch):
     never sees partial files."""
     import os
 
-    tbl = ParquetUpsertTable(spark, f"{workdir}/crash", keys=["k"], mode="mor")
+    tbl = ParquetUpsertTable(spark, f"{workdir}/crash", keys=["k"])
     tbl.upsert(spark.createDataFrame([(1, "a")], ["k", "v"]))
 
     real_rename = os.rename
@@ -200,12 +212,12 @@ def test_tombstone_flag_survives_restart(spark, workdir):
     layout) restarts unknown."""
     mk = lambda rows: spark.createDataFrame(rows, ["k", "v"])
     p = f"{workdir}/clean"
-    t = ParquetUpsertTable(spark, p, keys=["k"], mode="mor")
+    t = ParquetUpsertTable(spark, p, keys=["k"])
     t.upsert(mk([(1, "a"), (2, "b")]))
     assert t._may_have_tombstones is False
 
     # restart: fresh instance over the same dir keeps the fast path
-    t2 = ParquetUpsertTable(spark, p, keys=["k"], mode="mor")
+    t2 = ParquetUpsertTable(spark, p, keys=["k"])
     assert t2._may_have_tombstones is False
     # and update-only through the restarted instance behaves correctly
     t2.upsert(mk([(2, "b2"), (9, "ghost")]), insert=False)
@@ -214,7 +226,7 @@ def test_tombstone_flag_survives_restart(spark, workdir):
 
     # delete -> marker -> restart is conservative-correct
     t2.delete_where(F.col("k") == 1)
-    t3 = ParquetUpsertTable(spark, p, keys=["k"], mode="mor")
+    t3 = ParquetUpsertTable(spark, p, keys=["k"])
     assert t3._may_have_tombstones is True
     t3.upsert(mk([(1, "back"), (8, "ghost")]), insert=False)
     got = {(r.k, r.v) for r in t3.read().collect()}
@@ -223,10 +235,10 @@ def test_tombstone_flag_survives_restart(spark, workdir):
     # older layout (no meta marker): unknown -> resolve path
     import os
     q = f"{workdir}/legacy"
-    t4 = ParquetUpsertTable(spark, q, keys=["k"], mode="mor")
+    t4 = ParquetUpsertTable(spark, q, keys=["k"])
     t4.upsert(mk([(1, "a")]))
     os.remove(t4._marker("__meta"))
-    t5 = ParquetUpsertTable(spark, q, keys=["k"], mode="mor")
+    t5 = ParquetUpsertTable(spark, q, keys=["k"])
     assert t5._may_have_tombstones is None
     t5.upsert(mk([(1, "a2"), (7, "ghost")]), insert=False)
     got = {(r.k, r.v) for r in t5.read().collect()}
@@ -240,7 +252,7 @@ def test_tombstone_marker_crash_window_is_conservative(spark, workdir):
     itself must be unaffected (the delete never happened)."""
     mk = lambda rows: spark.createDataFrame(rows, ["k", "v"])
     p = f"{workdir}/crashy"
-    t = ParquetUpsertTable(spark, p, keys=["k"], mode="mor")
+    t = ParquetUpsertTable(spark, p, keys=["k"])
     t.upsert(mk([(1, "a"), (2, "b")]))
 
     real_append = t._append_delta
@@ -255,7 +267,7 @@ def test_tombstone_marker_crash_window_is_conservative(spark, workdir):
 
     # restart: marker present, no tombstone delta -> conservative flag,
     # un-deleted data intact, update-only still correct
-    t2 = ParquetUpsertTable(spark, p, keys=["k"], mode="mor")
+    t2 = ParquetUpsertTable(spark, p, keys=["k"])
     assert t2._may_have_tombstones is True
     assert {(r.k, r.v) for r in t2.read().collect()} == {(1, "a"), (2, "b")}
     t2.upsert(mk([(1, "a2"), (9, "ghost")]), insert=False)
@@ -268,7 +280,7 @@ def test_compacted_read_is_map_only(spark, workdir):
     window. This is the steady read shape between maintenance runs: a
     compacted 10M-row table reads map-only."""
     mor = ParquetUpsertTable(spark, f"{workdir}/m", keys=["k"],
-                             version_col="ver", mode="mor")
+                             version_col="ver")
     for i in range(5):
         mor.upsert(spark.createDataFrame([(i % 3, f"v{i}", i)],
                                          ["k", "v", "ver"]))
@@ -289,7 +301,7 @@ def test_compact_restores_update_only_fast_path(spark, workdir):
 
     mk = lambda rows: spark.createDataFrame(rows, ["k", "v"])
     p = f"{workdir}/t"
-    t = ParquetUpsertTable(spark, p, keys=["k"], mode="mor")
+    t = ParquetUpsertTable(spark, p, keys=["k"])
     t.upsert(mk([(1, "a"), (2, "b")]))
     t.delete_where(F.col("k") == 1)
     assert t._may_have_tombstones is True
@@ -300,7 +312,7 @@ def test_compact_restores_update_only_fast_path(spark, workdir):
     assert not os.path.exists(t._marker("__tombstones"))
 
     # restart sees the restored fast path
-    t2 = ParquetUpsertTable(spark, p, keys=["k"], mode="mor")
+    t2 = ParquetUpsertTable(spark, p, keys=["k"])
     assert t2._may_have_tombstones is False
     # update-only: the compacted-away key 1 must NOT count as existing
     t2.upsert(mk([(1, "back"), (2, "b2")]), insert=False)
@@ -315,59 +327,57 @@ def test_compact_upgrades_legacy_table_to_marker_layout(spark, workdir):
 
     mk = lambda rows: spark.createDataFrame(rows, ["k", "v"])
     p = f"{workdir}/legacy"
-    t = ParquetUpsertTable(spark, p, keys=["k"], mode="mor")
+    t = ParquetUpsertTable(spark, p, keys=["k"])
     t.upsert(mk([(1, "a")]))
     os.remove(t._marker("__meta"))
-    t2 = ParquetUpsertTable(spark, p, keys=["k"], mode="mor")
+    t2 = ParquetUpsertTable(spark, p, keys=["k"])
     assert t2._may_have_tombstones is None
     t2.compact()
-    t3 = ParquetUpsertTable(spark, p, keys=["k"], mode="mor")
+    t3 = ParquetUpsertTable(spark, p, keys=["k"])
     assert t3._may_have_tombstones is False
 
 
 def test_empty_delete_is_a_noop(spark, workdir):
     """A retention tick that matches nothing must not append a tombstone
-    delta (MoR — it would permanently demote the fast path) nor rewrite
-    the table (CoW). The common case under a 3 s retention cadence."""
+    delta (it would permanently demote the fast path) nor fold an eager
+    table. The common case under a 3 s retention cadence."""
     import os
 
     mk = lambda rows: spark.createDataFrame(rows, ["k", "v"])
-    # MoR: no new delta, no marker, fast path intact
-    m = ParquetUpsertTable(spark, f"{workdir}/m", keys=["k"], mode="mor")
+    # lazy: no new delta, no marker, fast path intact
+    m = ParquetUpsertTable(spark, f"{workdir}/m", keys=["k"])
     m.upsert(mk([(1, "a")]))
     m.delete_where(F.col("k") == 99)
     assert m._delta_seqs() == [0]
     assert m._may_have_tombstones is False
     assert not os.path.exists(m._marker("__tombstones"))
-    # CoW: table files untouched (no O(table) no-op rewrite)
-    c = ParquetUpsertTable(spark, f"{workdir}/c", keys=["k"])
+    # eager: table files untouched (no O(table) no-op fold)
+    c = ParquetUpsertTable(spark, f"{workdir}/c", keys=["k"], compact_every=1)
     c.upsert(mk([(1, "a")]))
+    c.upsert(mk([(2, "b")]))
     mtime = os.path.getmtime(c.path)
     listing = sorted(os.listdir(c.path))
     c.delete_where(F.col("k") == 99)
     assert sorted(os.listdir(c.path)) == listing
     assert os.path.getmtime(c.path) == mtime
-    # compact() on CoW is an explicit no-op (no deltas), not an IndexError
-    c.compact()
-    assert sorted(os.listdir(c.path)) == listing
 
 
 def test_mor_reinsert_lower_version_after_delete(spark, workdir):
     """A delete ends the key's version era (Mongo: the document is gone,
     any later upsert inserts fresh). The tombstone carries the deleted
-    row's version, so a lower-version reinsert must still win — MoR must
-    match CoW, not let the tombstone shadow the live era."""
+    row's version, so a lower-version reinsert must still win — a lazy
+    table must not let the tombstone shadow the live era."""
     got = {}
-    for mode in ("cow", "mor"):
-        t = ParquetUpsertTable(spark, f"{workdir}/{mode}", keys=["k"],
-                               version_col="ver", mode=mode)
+    for ce in (1, 64):
+        t = ParquetUpsertTable(spark, f"{workdir}/{ce}", keys=["k"],
+                               version_col="ver", compact_every=ce)
         t.upsert(spark.createDataFrame([(1, "a", 11)], ["k", "v", "ver"]))
         t.delete_where(F.col("k") == 1)
         t.upsert(spark.createDataFrame([(1, "back", 3)], ["k", "v", "ver"]))
         # and the guard still applies WITHIN the new era
         t.upsert(spark.createDataFrame([(1, "stale", 2)], ["k", "v", "ver"]))
-        got[mode] = sorted(tuple(r) for r in t.read().collect())
-    assert got["mor"] == got["cow"] == [(1, "back", 3)]
+        got[ce] = sorted(tuple(r) for r in t.read().collect())
+    assert got[64] == got[1] == [(1, "back", 3)]
 
 
 def test_mor_era_reset_survives_compaction_boundary(spark, workdir):
@@ -375,7 +385,7 @@ def test_mor_era_reset_survives_compaction_boundary(spark, workdir):
     delta or already folded: compaction drops the deleted key, so the
     reinsert lands in an empty era either way."""
     t = ParquetUpsertTable(spark, f"{workdir}/t", keys=["k"],
-                           version_col="ver", mode="mor")
+                           version_col="ver")
     t.upsert(spark.createDataFrame([(1, "a", 11), (2, "b", 5)],
                                    ["k", "v", "ver"]))
     t.delete_where(F.col("k") == 1)
@@ -398,8 +408,7 @@ def test_legacy_table_with_tombstones_not_certified_by_upsert(spark, workdir):
 
     mk = lambda rows: spark.createDataFrame(rows, ["k", "v", "ver"])
     p = f"{workdir}/legacy"
-    t = ParquetUpsertTable(spark, p, keys=["k"], version_col="ver",
-                           mode="mor")
+    t = ParquetUpsertTable(spark, p, keys=["k"], version_col="ver")
     t.upsert(mk([(1, "a", 11), (2, "b", 5)]))
     t.delete_where(F.col("k") == 1)
     # simulate a pre-marker-layout table: tombstone delta on disk, no
@@ -408,16 +417,14 @@ def test_legacy_table_with_tombstones_not_certified_by_upsert(spark, workdir):
     os.remove(t._marker("__tombstones"))
 
     # restart: unknown state; an ordinary upsert must leave it unknown
-    t2 = ParquetUpsertTable(spark, p, keys=["k"], version_col="ver",
-                            mode="mor")
+    t2 = ParquetUpsertTable(spark, p, keys=["k"], version_col="ver")
     assert t2._may_have_tombstones is None
     t2.upsert(mk([(2, "b2", 6)]))
     assert not os.path.exists(t2._marker("__meta"))
 
     # second restart: still unknown (NOT certified tombstone-free), and
     # the deleted key must not be "existing" for an update-only upsert
-    t3 = ParquetUpsertTable(spark, p, keys=["k"], version_col="ver",
-                            mode="mor")
+    t3 = ParquetUpsertTable(spark, p, keys=["k"], version_col="ver")
     assert t3._may_have_tombstones is None
     t3.upsert(mk([(1, "ghost", 99)]), insert=False)
     got = sorted((r.k, r.v, r.ver) for r in t3.read().collect())
@@ -429,17 +436,15 @@ def test_legacy_table_with_tombstones_not_certified_by_upsert(spark, workdir):
 
     # compaction remains the one legitimate upgrade path
     t3.compact()
-    t4 = ParquetUpsertTable(spark, p, keys=["k"], version_col="ver",
-                            mode="mor")
+    t4 = ParquetUpsertTable(spark, p, keys=["k"], version_col="ver")
     assert t4._may_have_tombstones is False
 
 
 def test_delete_where_null_condition_keeps_row(spark, workdir):
     """delete_where removes exactly the rows where the condition is TRUE;
-    a NULL evaluation keeps the row. CoW must not let `~condition` drop
-    NULL rows (NULL filter = dropped), and must not make the NULL row's
-    fate depend on whether any OTHER row matched — MoR and CoW agree in
-    both cases."""
+    a NULL evaluation keeps the row, and its fate must not depend on
+    whether any OTHER row matched — eager and lazy tables agree in both
+    cases."""
     import pyspark.sql.types as T
 
     schema = T.StructType([
@@ -447,31 +452,30 @@ def test_delete_where_null_condition_keeps_row(spark, workdir):
         T.StructField("v", T.LongType()),
     ])
     got = {}
-    for mode in ("cow", "mor"):
-        t = ParquetUpsertTable(spark, f"{workdir}/{mode}", keys=["k"],
-                               mode=mode)
+    for ce in (1, 64):
+        t = ParquetUpsertTable(spark, f"{workdir}/{ce}", keys=["k"],
+                               compact_every=ce)
         t.upsert(spark.createDataFrame([(1, None), (2, 5)], schema))
         t.delete_where(F.col("v") < 10)  # NULL < 10 -> NULL: keep k=1
-        got[mode] = sorted((r.k, r.v) for r in t.read().collect())
-    assert got["cow"] == got["mor"] == [(1, None)]
+        got[ce] = sorted((r.k, r.v) for r in t.read().collect())
+    assert got[1] == got[64] == [(1, None)]
 
     # and when ONLY NULL-evaluating rows exist (victims empty), the
     # early-return no-op must agree with the non-empty case: k=1 survives
-    for mode in ("cow", "mor"):
-        t = ParquetUpsertTable(spark, f"{workdir}/only_null_{mode}",
-                               keys=["k"], mode=mode)
+    for ce in (1, 64):
+        t = ParquetUpsertTable(spark, f"{workdir}/only_null_{ce}",
+                               keys=["k"], compact_every=ce)
         t.upsert(spark.createDataFrame([(1, None)], schema))
         t.delete_where(F.col("v") < 10)
         assert [(r.k, r.v) for r in t.read().collect()] == [(1, None)]
 
 
 def test_null_version_merge_matches_mor(spark, workdir):
-    """NULL versions must not be mistaken for 'no matching key': both
-    modes follow the resolve ordering (non-NULL beats NULL; ties — equal
-    or both NULL — go to the incoming row). CoW previously used version
-    null-ness as the match indicator, duplicating keys when both versions
-    were NULL and dropping update-only rows whose existing version was
-    NULL."""
+    """NULL versions must not be mistaken for 'no matching key': eager
+    and lazy tables follow the resolve ordering (non-NULL beats NULL;
+    ties — equal or both NULL — go to the incoming row), never
+    duplicating keys when both versions are NULL nor dropping update-only
+    rows whose existing version is NULL."""
     import pyspark.sql.types as T
 
     schema = T.StructType([
@@ -481,9 +485,9 @@ def test_null_version_merge_matches_mor(spark, workdir):
     ])
     mk = lambda rows: spark.createDataFrame(rows, schema)
     got = {}
-    for mode in ("cow", "mor"):
-        t = ParquetUpsertTable(spark, f"{workdir}/{mode}", keys=["k"],
-                               version_col="ver", mode=mode)
+    for ce in (1, 64):
+        t = ParquetUpsertTable(spark, f"{workdir}/{ce}", keys=["k"],
+                               version_col="ver", compact_every=ce)
         # both NULL: last writer wins, exactly one row per key
         t.upsert(mk([(1, "a", None), (2, "b", 5), (3, "c", None)]))
         t.upsert(mk([(1, "a2", None)]))
@@ -493,10 +497,10 @@ def test_null_version_merge_matches_mor(spark, workdir):
         t.upsert(mk([(2, "b_null", None)]))
         # and a non-NULL incoming beats a NULL existing version
         t.upsert(mk([(1, "a3", 1)]))
-        got[mode] = sorted(
+        got[ce] = sorted(
             (r.k, r.v, r.ver) for r in t.read().collect()
         )
-    assert got["cow"] == got["mor"] == [
+    assert got[1] == got[64] == [
         (1, "a3", 1), (2, "b", 5), (3, "c2", 7)
     ]
 
@@ -504,7 +508,9 @@ def test_null_version_merge_matches_mor(spark, workdir):
 def test_swap_crash_windows_recover(spark, workdir):
     """A crash between the swap's two renames must not lose the table:
     recovery installs the complete new state (finish) or rolls the old
-    state back (abort) — never silently starts a fresh empty table."""
+    state back (abort) — never silently starts a fresh empty table.
+    Windows A-C are staged in the fold layout an eager (compact_every=1)
+    table swaps in after every write: `__seq=N/` plus a root `_SUCCESS`."""
     import os
     import shutil
 
@@ -512,53 +518,89 @@ def test_swap_crash_windows_recover(spark, workdir):
 
     mk = lambda rows: spark.createDataFrame(rows, ["k", "v"])
 
+    def eager(path):
+        return ParquetUpsertTable(spark, path, keys=["k"], compact_every=1)
+
+    def stage_fold(path, rows, seq, complete=True):
+        # the new state exactly as compact() stages it
+        (mk(rows).withColumn("__deleted", F.lit(False))
+         .write.parquet(os.path.join(_tmp(path), f"__seq={seq}")))
+        if complete:
+            open(os.path.join(_tmp(path), "_SUCCESS"), "w").close()
+
     # -- window A: tmp complete, old renamed away (crash between renames)
     p = f"{workdir}/a"
-    t = ParquetUpsertTable(spark, p, keys=["k"])
+    t = eager(p)
     t.upsert(mk([(1, "a")]))
-    # stage the new state exactly as _atomic_write would
-    mk([(1, "a2"), (2, "b")]).write.parquet(_tmp(p))
+    t.upsert(mk([(3, "c")]))
+    assert t.history() == [1]
+    stage_fold(p, [(1, "a2"), (2, "b"), (3, "c")], seq=2)
     os.rename(p, _old(p))  # the crash point: table dir is now MISSING
-    t2 = ParquetUpsertTable(spark, p, keys=["k"])
-    assert {(r.k, r.v) for r in t2.read().collect()} == {(1, "a2"), (2, "b")}
+    t2 = eager(p)
+    assert {(r.k, r.v) for r in t2.read().collect()} == {
+        (1, "a2"), (2, "b"), (3, "c")
+    }
+    assert t2.history() == [2]
     assert not os.path.exists(_old(p)) and not os.path.exists(_tmp(p))
 
-    # -- window B: tmp incomplete (no _SUCCESS), old renamed away
+    # -- window B: tmp incomplete (no root _SUCCESS), old renamed away
     q = f"{workdir}/b"
-    t = ParquetUpsertTable(spark, q, keys=["k"])
+    t = eager(q)
     t.upsert(mk([(5, "x")]))
-    mk([(5, "x2")]).write.parquet(_tmp(q))
-    os.remove(os.path.join(_tmp(q), "_SUCCESS"))  # half-written fold
+    t.upsert(mk([(6, "y")]))
+    stage_fold(q, [(5, "x2"), (6, "y")], seq=2, complete=False)
     os.rename(q, _old(q))
-    t2 = ParquetUpsertTable(spark, q, keys=["k"])
-    assert {(r.k, r.v) for r in t2.read().collect()} == {(5, "x")}
+    t2 = eager(q)
+    assert {(r.k, r.v) for r in t2.read().collect()} == {(5, "x"), (6, "y")}
+    assert t2.history() == [1]
+    assert not os.path.exists(_old(q)) and not os.path.exists(_tmp(q))
 
     # -- window C: crash AFTER install, before old cleanup — live dir wins
     r = f"{workdir}/c"
-    t = ParquetUpsertTable(spark, r, keys=["k"])
+    t = eager(r)
     t.upsert(mk([(7, "y")]))
+    t.upsert(mk([(7, "y2")]))
     shutil.copytree(r, _old(r))
-    t2 = ParquetUpsertTable(spark, r, keys=["k"])
-    assert {(r_.k, r_.v) for r_ in t2.read().collect()} == {(7, "y")}
+    t2 = eager(r)
+    assert {(r_.k, r_.v) for r_ in t2.read().collect()} == {(7, "y2")}
     assert not os.path.exists(_old(r))
 
-    # -- MoR compact window: crash between renames mid-compaction
+    # -- lazy compact window: crash between renames mid-compaction
     m = f"{workdir}/m"
-    t = ParquetUpsertTable(spark, m, keys=["k"], mode="mor")
+    t = ParquetUpsertTable(spark, m, keys=["k"])
     t.upsert(mk([(1, "a")]))
     t.upsert(mk([(1, "a2")]))
     t.upsert(mk([(2, "b")]))
     before = {(r_.k, r_.v) for r_ in t.read().collect()}
     # stage a compaction fold exactly as compact() would, then "crash"
-    resolved = t.read()
-    from pyspark.sql import functions as F2
-    (resolved.withColumn("__deleted", F2.lit(False))
-     .write.parquet(os.path.join(_tmp(m), "__seq=2")))
-    open(os.path.join(_tmp(m), "_SUCCESS"), "w").close()
+    stage_fold(m, sorted(before), seq=2)
     os.rename(m, _old(m))
-    t2 = ParquetUpsertTable(spark, m, keys=["k"], mode="mor")
+    t2 = ParquetUpsertTable(spark, m, keys=["k"])
     assert {(r_.k, r_.v) for r_ in t2.read().collect()} == before
     assert t2._delta_seqs() == [2]  # the fold was installed, history kept
+
+
+def test_flat_legacy_layout_is_refused(spark, workdir):
+    """A table dir with parquet files at its root and no `__seq=` dirs
+    (the pre-merge-on-read flat layout) must be refused at open: an
+    append would land `__seq=0/` next to the flat files and every later
+    read would fail. Moving the files into `__seq=0/` opens it."""
+    import os
+
+    p = f"{workdir}/flat"
+    spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"]).write.parquet(p)
+    with pytest.raises(ValueError, match="__seq=0"):
+        ParquetUpsertTable(spark, p, keys=["k"])
+    os.makedirs(f"{p}/__seq=0")
+    for f in os.listdir(p):
+        if f.endswith(".parquet"):
+            os.rename(f"{p}/{f}", f"{p}/__seq=0/{f}")
+    t = ParquetUpsertTable(spark, p, keys=["k"], compact_every=1)
+    t.upsert(spark.createDataFrame([(2, "b2")], ["k", "v"]))
+    assert sorted(tuple(r) for r in t.read().collect()) == [(1, "a"), (2, "b2")]
+    # the fold leaves a root _SUCCESS — a folded table must still open
+    assert os.path.exists(f"{p}/_SUCCESS")
+    ParquetUpsertTable(spark, p, keys=["k"])
 
 
 def test_sharded_delta_append_parity_and_file_count(spark, workdir):
@@ -572,9 +614,9 @@ def test_sharded_delta_append_parity_and_file_count(spark, workdir):
     big = [(i, f"v{i}", 1) for i in range(200)]
 
     one = ParquetUpsertTable(spark, f"{workdir}/one", keys=["k"],
-                             version_col="ver", mode="mor")
+                             version_col="ver")
     sharded = ParquetUpsertTable(spark, f"{workdir}/sh", keys=["k"],
-                                 version_col="ver", mode="mor")
+                                 version_col="ver")
     one.upsert(mk(big))
     sharded.upsert(mk(big).repartition(8), shards=4)
     assert _snapshot(one) == _snapshot(sharded)
@@ -604,6 +646,24 @@ def test_indexer_shard_gate_is_tick_safe():
     assert gate(500, 32) == 1         # bench catch-up shape
     assert gate(20_000, 32) == 10     # outage recovery parallelizes
     assert gate(1_000_000, 32) == 32  # capped at session parallelism
+
+
+def test_indexer_default_sink_mode_is_lazy(spark, workdir):
+    """`python -m moc_indexer_spark.app` ships the mode DEPLOY.md rules:
+    an Indexer built without sink_mode folds its sinks lazily; the "cow"
+    mode that bench_ingest.py measures folds every sink after every
+    write."""
+    from moc_indexer_spark.app import CONTRACTS, USERS, Indexer
+    from moc_indexer_spark.sources.chain import FakeChain
+
+    chain = FakeChain(CONTRACTS, USERS, 5)
+    lazy = Indexer(spark, f"{workdir}/lazy", chain, CONTRACTS)
+    assert all(t.compact_every > 1 for t in lazy.tables.values())
+    eager = Indexer(spark, f"{workdir}/eager", chain, CONTRACTS,
+                    sink_mode="cow")
+    assert all(t.compact_every == 1 for t in eager.tables.values())
+    with pytest.raises(ValueError, match="sink_mode"):
+        Indexer(spark, f"{workdir}/bad", chain, CONTRACTS, sink_mode="delta")
 
 
 def test_indexer_auto_compaction_policy(spark, workdir):
@@ -666,7 +726,7 @@ def test_compact_deltas_minor_merge(spark, workdir):
     tables (era resolution needs the per-delta seq history)."""
     mk = lambda rows, cols: spark.createDataFrame(rows, cols)
     tbl = ParquetUpsertTable(
-        spark, f"{workdir}/t", keys=["k"], version_col="ver", mode="mor",
+        spark, f"{workdir}/t", keys=["k"], version_col="ver",
         compact_every=1000,
     )
     tbl.upsert(mk([(1, "a", 5), (2, "b", 5)], ["k", "v", "ver"]))
@@ -703,7 +763,7 @@ def test_compact_deltas_minor_merge(spark, workdir):
 
     # tombstone refusal
     tbl2 = ParquetUpsertTable(
-        spark, f"{workdir}/t2", keys=["k"], mode="mor", compact_every=1000
+        spark, f"{workdir}/t2", keys=["k"], compact_every=1000
     )
     tbl2.upsert(mk([(1, "a")], ["k", "v"]))
     tbl2.upsert(mk([(2, "b")], ["k", "v"]))
@@ -721,7 +781,7 @@ def test_compact_deltas_never_triggers_full_compact(spark, workdir):
     before the fix it auto-compacted the whole table to one base."""
     mk = lambda rows, cols: spark.createDataFrame(rows, cols)
     tbl = ParquetUpsertTable(
-        spark, f"{workdir}/t", keys=["k"], mode="mor", compact_every=4
+        spark, f"{workdir}/t", keys=["k"], compact_every=4
     )
     tbl.upsert(mk([(1, "a")], ["k", "v"]))
     tbl.upsert(mk([(2, "b")], ["k", "v"]))
