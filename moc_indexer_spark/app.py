@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from .operators.events import run_event_pipeline
 from .session import get_spark
 from .sources.chain import BlockFetcher, FakeChain, ScanRange, scan_blocks
+from .streaming.compaction import FoldScheduler
 from .streaming.sink import ParquetUpsertTable
 
 CONTRACTS = ["0x" + "ab" * 20, "0x" + "cd" * 20]
@@ -68,12 +69,13 @@ class Indexer:
         fresh; mor_read_vs_deltas shows the resolve cost growing with
         dir count and the post-compact map-only fast path reclaiming
         it). The fold is amortized maintenance under a CYCLE BUDGET: the
-        Indexer folds at most ONE crossed table per cycle
-        (_maybe_compact_one — a tick never absorbs two rewrites), every
-        other cycle reads the single-dir fast path, and the sinks keep a
-        4x-threshold backstop for use outside run_incremental. 16 here
-        vs the bare sink's 64: an indexer tick appends to SIX sinks per
-        cycle and the serving reads (§3.2) sit on the same tables.
+        Indexer folds at most ONE crossed table per cycle (`self.folds`,
+        a compaction.FoldScheduler — a tick never absorbs two rewrites),
+        every other cycle reads the single-dir fast path, and the sinks
+        keep a 4x-threshold backstop for use outside run_incremental.
+        16 here vs the bare sink's 64: an indexer tick appends to SIX
+        sinks per cycle and the serving reads (§3.2) sit on the same
+        tables.
 
         `config` (moc_indexer_spark.config.IndexerConfig) supplies the scan
         knobs (blocks_recession / blocks_look_behind, the forced
@@ -92,13 +94,12 @@ class Indexer:
             raise ValueError(
                 f"sink_mode must be 'cow' or 'mor', got {sink_mode!r}"
             )
-        # The INDEXER owns the fold policy (see _maybe_compact_one: at
-        # most one sink fold per cycle — a hard invariant; per-table
-        # threshold staggering still collides at lcm points). The sinks
-        # keep a 4x backstop so state stays bounded even if someone
-        # drives these tables outside run_incremental.
-        self._compact_threshold = compact_every
-        self._compact_rr = 0  # round-robin cursor over self.tables
+        # The INDEXER owns the fold policy (self.folds below: at most one
+        # sink fold per cycle — a hard invariant; per-table threshold
+        # staggering still collides at lcm points). A table queued behind
+        # the cursor overshoots the threshold by at most the table count;
+        # the sinks' 4x backstop dwarfs that and keeps state bounded even
+        # if someone drives these tables outside run_incremental.
         ce = 1 if sink_mode == "cow" else 4 * compact_every
         self.tables = {
             "raw_transactions": ParquetUpsertTable(
@@ -129,26 +130,15 @@ class Indexer:
                 version_col="block_height", compact_every=ce,
             ),
         }
-
-    def _maybe_compact_one(self) -> str | None:
-        """Fold AT MOST ONE sink whose delta-dir count crossed the
-        policy threshold — called once per cycle, so a tick never absorbs
-        two table rewrites (review finding: per-table threshold
-        staggering only shifts the collision to lcm points; a cycle-level
-        budget is the real invariant). Tables that cross together queue
-        behind the round-robin cursor and fold on the following cycles —
-        their dir count overshoots the threshold by at most the table
-        count while waiting, which the sinks' 4x backstop dwarfs. Returns
-        the folded table's name (None if nothing crossed)."""
-        names = list(self.tables)
-        for k in range(len(names)):
-            name = names[(self._compact_rr + k) % len(names)]
-            t = self.tables[name]
-            if len(t.history()) >= self._compact_threshold:
-                t.compact()
-                self._compact_rr = (self._compact_rr + k + 1) % len(names)
-                return name
-        return None
+        # fold_fn looks `compact` up at call time, so a class-level
+        # wrapper on ParquetUpsertTable.compact sees every policy fold
+        self.folds = FoldScheduler(
+            tuple(
+                (name, lambda t=t: len(t.history()), lambda t=t: t.compact())
+                for name, t in self.tables.items()
+            ),
+            compact_every,
+        )
 
     def run_balance_refresh(self, queue_df, tip: int) -> int:
         """Task-7 analog (scan_moc_user.py:33-78 + moc_balances.py:110-171):
@@ -233,7 +223,7 @@ class Indexer:
                 # tx) on every tick until the 3 s cadence can't keep up
                 self.last_indexed = scan.end
                 # quiet cycles are the CHEAPEST place to pay maintenance
-                self._maybe_compact_one()
+                self.folds.maybe_fold_one()
                 return {"last_indexed": self.last_indexed}
             outs = run_event_pipeline(
                 raw, moc_contract=self.contracts[0],
@@ -276,7 +266,7 @@ class Indexer:
                 for f in futures:
                     f.result()  # surface the first failure
             self.last_indexed = scan.end
-            self._maybe_compact_one()
+            self.folds.maybe_fold_one()
             if not report_counts:
                 return {"last_indexed": self.last_indexed}
             return {name: (t.read().count() if t.read() is not None else 0)

@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 
 from ..operators import retrieval as RT
 from .compaction import (  # noqa: F401
-    over_fold_budget,
+    FoldScheduler,
     _BATCH_RE,
     _FOLD_MARKER,
     compact_batched_dir,
@@ -67,29 +67,29 @@ class IncrementalBm25Index:
         compact_every: int | None = None,
         fold_budget_sec: float | None = None,
     ):
-        """`compact_every` is the AUTO-COMPACTION policy — the Indexer's
-        threshold + per-cycle fold budget (app.py _maybe_compact_one)
-        transplanted: once a batched relation's dir count crosses the
-        threshold, fold it — but AT MOST ONE relation per update (the
-        postings and lengths folds round-robin behind a cursor, so an
-        update tick never absorbs two rewrites; the waiting relation
-        overshoots by at most one update). None (default) keeps the
-        bare out-of-band compact() contract the flat update exponents
-        previously assumed.
-
-        `fold_budget_sec` (round 10) is the OFF-TICK DEFERRAL rule —
-        the Indexer's budget deferral completing the policy: when the
-        tick's own work already consumed the budget, a due minor fold
-        is SKIPPED this tick (counted in `deferred_folds`) and the
-        still-crossed threshold fires it on a later, faster tick — so
-        maintenance can never stack on an already-slow tick and push it
-        over the operator's envelope. None keeps folds unconditional."""
+        """`compact_every` and `fold_budget_sec` drive `self.folds`, the
+        shared in-tick fold policy (compaction.FoldScheduler): once a
+        batched relation's tail above its fold base reaches
+        `compact_every` dirs, fold it — AT MOST ONE relation per update
+        (lengths and postings round-robin, so an update tick never
+        absorbs two rewrites; the waiting relation overshoots by at most
+        one update). None (default) keeps the bare out-of-band compact()
+        contract the flat update exponents previously assumed."""
         self.spark = spark
         self.path = path.rstrip("/") or path
-        self._compact_every = compact_every
-        self._fold_budget_sec = fold_budget_sec
-        self.deferred_folds = 0
-        self._compact_rr = 0  # round-robin cursor over batched relations
+        # MINOR folds only (round 9): the in-tick merge covers the tail
+        # since the newest full-fold base, O(post-base tail) rows
+        # regardless of index size; the O(index) full fold stays
+        # compact_index()'s out-of-band contract
+        self.folds = FoldScheduler(
+            tuple(
+                (name, lambda n=name: self._tail_len(n),
+                 lambda n=name: _compact_relation(
+                     self, n, self.committed_batch(), minor=True))
+                for name in ("lengths", "postings")
+            ),
+            compact_every, fold_budget_sec,
+        )
         os.makedirs(self.path, exist_ok=True)
         # startup heal (round 9): a crash inside an in-tick policy fold
         # leaves swept originals in __fold_trash; without this, every
@@ -156,37 +156,16 @@ class IncrementalBm25Index:
             self._write_generation(batch, batch_id, committed)
         finally:
             batch.unpersist()
-        self._maybe_compact_one(tick_start)
+        self.folds.maybe_fold_one(tick_start)
 
-    def _maybe_compact_one(self, tick_start: float | None = None) -> str | None:
-        """Fold AT MOST ONE batched relation whose dir count crossed the
-        policy threshold (cheap listdirs, no data read) — MINOR folds
-        only (round 9): the in-tick merge covers the tail since the
-        newest full-fold base, O(post-base tail) rows regardless of
-        index size; the O(index) full fold stays compact_index()'s
-        out-of-band contract. Returns the folded relation's name, None
-        if nothing crossed or no policy."""
-        if self._compact_every is None:
-            return None
-        names = ("lengths", "postings")
+    def _tail_len(self, name: str) -> int:
+        """Committed dirs above `name`'s fold base (cheap listdirs, no
+        data read) — what the in-tick policy counts."""
+        fold_base = self._fold_base(name)
         committed = self.committed_batch()
-        for k in range(len(names)):
-            name = names[(self._compact_rr + k) % len(names)]
-            fold_base = self._fold_base(name)  # hoisted: O(dirs), once
-            n_tail = len([
-                b for b in self._batches(name)
-                if fold_base < b <= committed
-            ])
-            if n_tail >= self._compact_every:
-                if over_fold_budget(self._fold_budget_sec, tick_start):
-                    # budget deferral: the threshold stays crossed, so
-                    # the next (faster) tick absorbs this fold instead
-                    self.deferred_folds += 1
-                    return None
-                _compact_relation(self, name, committed, minor=True)
-                self._compact_rr = (self._compact_rr + k + 1) % len(names)
-                return name
-        return None
+        return sum(
+            1 for b in self._batches(name) if fold_base < b <= committed
+        )
 
     def _fold_base(self, name: str) -> int:
         """Newest FULL-fold dir id (`_FOLDBASE`-marked), -1 if none —

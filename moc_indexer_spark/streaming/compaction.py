@@ -34,6 +34,14 @@ Contract: an OUT-OF-BAND maintenance action — do not run concurrently
 with update(); lazy probe plans built before compaction are invalidated
 (fresh probes resolve the current directories), the same reader
 contract as Delta VACUUM.
+
+WHEN to fold inside a tick is one policy too, `FoldScheduler`: each
+owner (the Indexer's six sinks, the BM25 / IVF / semdedup / near-dup
+maintainers, the funnel's docs and corpus tables) lists its fold units
+as (name, count, fold) and calls `folds.maybe_fold_one(tick_start)`
+once per tick — a threshold on a cheap count, at most one fold per
+tick behind a round-robin cursor, deferred when the tick already used
+up its `fold_budget_sec`.
 """
 
 from __future__ import annotations
@@ -49,21 +57,56 @@ from pyspark.sql import DataFrame
 _FOLD_MARKER = "_FOLD_COMMITTED"
 
 
-def over_fold_budget(
-    fold_budget_sec: float | None, tick_start: float | None
-) -> bool:
-    """THE off-tick deferral rule (round 10), shared by every
-    maintainer's policy check: True when the tick's pre-fold work
-    already consumed the budget, so a due minor fold must wait for a
-    faster tick (the caller counts it in `deferred_folds`). One
-    definition — the budget semantics (what counts as the tick's
-    elapsed, see the composed-tick threading in funnel.process_batch)
-    must not drift between maintainers."""
-    return (
-        fold_budget_sec is not None
-        and tick_start is not None
-        and time.perf_counter() - tick_start > fold_budget_sec
-    )
+class FoldScheduler:
+    """THE in-tick fold policy, shared by the Indexer, the four index
+    maintainers and the funnel: fold AT MOST ONE unit per call, so a tick
+    never absorbs two rewrites.
+
+    `units` is a tuple of `(name, count_fn, fold_fn)`, owned by the
+    caller (it knows what to count and what to fold). A unit is due when
+    `count_fn()` (a cheap listdir, no data read) reaches `threshold`; the
+    first due unit from a round-robin cursor folds and the cursor moves
+    to the slot after it, so units that cross together queue and fold on
+    the following ticks. `threshold=None` is no policy (never folds).
+
+    `budget_sec` is the OFF-TICK DEFERRAL rule: when the tick started at
+    `tick_start` (a `time.perf_counter()` value) already used up the
+    budget, a due fold is skipped and counted in `deferred`, the cursor
+    does not move, and the still-crossed threshold fires it on a later,
+    faster tick — maintenance never stacks on an already-slow tick and
+    pushes it over the operator's envelope. `budget_sec=None` (or no
+    `tick_start`) folds unconditionally. What counts as the tick's
+    elapsed is the caller's `tick_start`: the funnel threads its
+    COMPOSED tick's start into every maintainer (funnel.process_batch)."""
+
+    def __init__(self, units, threshold: int | None,
+                 budget_sec: float | None = None):
+        self.units = tuple(units)
+        self.threshold = threshold
+        self.budget_sec = budget_sec
+        self.deferred = 0
+        self._cursor = 0
+
+    def maybe_fold_one(self, tick_start: float | None = None) -> str | None:
+        """Fold the first due unit; return its name, or None when nothing
+        was due, there is no policy, or the due fold was deferred."""
+        if self.threshold is None:
+            return None
+        n = len(self.units)
+        for k in range(n):
+            name, count, fold = self.units[(self._cursor + k) % n]
+            if count() >= self.threshold:
+                if (
+                    self.budget_sec is not None
+                    and tick_start is not None
+                    and time.perf_counter() - tick_start > self.budget_sec
+                ):
+                    self.deferred += 1
+                    return None
+                fold()
+                self._cursor = (self._cursor + k + 1) % n
+                return name
+        return None
 
 
 _BATCH_RE = re.compile(r"^batch=(\d+)$")

@@ -256,10 +256,11 @@ class IncrementalNearDup:
     (replays re-deliver the same keys) but is MoR — O(batch) delta
     appends; readers pay the resolve until compaction.
 
-    Single-writer, like every maintainer here. `compact_every` is the
-    auto-compaction policy (the Indexer's per-cycle budget: at most one
-    unit folded per update, minor folds only — an in-tick fold reads
-    O(cadence) rows regardless of corpus size)."""
+    Single-writer, like every maintainer here. `compact_every` and
+    `fold_budget_sec` drive `self.folds`, the shared in-tick fold policy
+    (compaction.FoldScheduler: at most one unit folded per update),
+    minor folds only — an in-tick fold reads O(cadence) rows regardless
+    of corpus size."""
 
     def __init__(
         self,
@@ -268,20 +269,25 @@ class IncrementalNearDup:
         compact_every: int | None = None,
         fold_budget_sec: float | None = None,
     ):
-        """`fold_budget_sec` (round 10): off-tick deferral — a due
-        minor fold is skipped (counted in `deferred_folds`) when the
-        tick's own work already consumed the budget; the crossed
-        threshold fires it on a later, faster tick. None = folds
-        unconditional."""
         self.spark = spark
         self.state_dir = state_dir.rstrip("/") or state_dir
-        self._compact_every = compact_every
-        self._fold_budget_sec = fold_budget_sec
-        self.deferred_folds = 0
-        self._compact_rr = 0  # round-robin over (bands, feats, pairs)
         self._relation_cache: dict[tuple, DataFrame] = {}
         os.makedirs(self.state_dir, exist_ok=True)
-        from .compaction import heal_batched_dir
+        from .compaction import FoldScheduler, heal_batched_dir
+
+        self.folds = FoldScheduler(
+            (
+                ("bands", lambda: self._flat_count("bands"),
+                 lambda: self._compact_state("bands", minor=True)),
+                ("feats", lambda: self._flat_count("feats"),
+                 lambda: self._compact_state("feats", minor=True)),
+                # in-tick pairs maintenance is the delta-tail merge
+                # (O(cadence)); the full fold is compact()'s job
+                ("pairs", lambda: len(self.pairs_tbl.history()),
+                 lambda: self.pairs_tbl.compact_deltas()),
+            ),
+            compact_every, fold_budget_sec,
+        )
 
         for name in ("bands", "feats"):
             heal_batched_dir(self._dir(name))
@@ -473,7 +479,7 @@ class IncrementalNearDup:
                 new.unpersist()
             if cand is not None:
                 cand.unpersist()
-        self._maybe_compact_one(tick_start)
+        self.folds.maybe_fold_one(tick_start)
 
     # -- maintenance ------------------------------------------------------
 
@@ -539,48 +545,16 @@ class IncrementalNearDup:
         self.pairs_tbl.compact()
         return n
 
-    def _maybe_compact_one(
-        self, tick_start: float | None = None
-    ) -> str | None:
-        """Fold AT MOST ONE state unit whose accretion crossed the policy
-        threshold (cheap listdirs, no data read) — minor folds only, so
-        a tick never absorbs an O(corpus) rewrite. With a
-        fold_budget_sec, a due fold is DEFERRED when the tick's own
-        work already consumed the budget (off-tick deferral, round 10)."""
-        if self._compact_every is None:
-            return None
+    def _flat_count(self, name: str) -> int:
+        """Unfolded batch dirs of `name` (cheap listdirs, no data read)
+        — what the in-tick policy counts."""
         from .compaction import list_committed_batches
 
-        def flats(name):
-            return sum(
-                1 for b in list_committed_batches(self._dir(name))
-                if not self._is_fold(name, b)
-            )
-
-        units = (
-            ("bands", lambda: flats("bands"),
-             lambda: self._compact_state("bands", minor=True)),
-            ("feats", lambda: flats("feats"),
-             lambda: self._compact_state("feats", minor=True)),
-            # in-tick pairs maintenance is the delta-tail merge
-            # (O(cadence)); the full fold is compact()'s job
-            ("pairs", lambda: len(self.pairs_tbl.history()),
-             self.pairs_tbl.compact_deltas),
+        return sum(
+            1 for b in list_committed_batches(self._dir(name))
+            if not self._is_fold(name, b)
         )
-        for k in range(len(units)):
-            name, count, fold = units[(self._compact_rr + k) % len(units)]
-            if count() >= self._compact_every:
-                from .compaction import over_fold_budget
 
-                if over_fold_budget(self._fold_budget_sec, tick_start):
-                    # budget deferral: the threshold stays crossed, so a
-                    # later, faster tick absorbs this fold
-                    self.deferred_folds += 1
-                    return None
-                fold()
-                self._compact_rr = (self._compact_rr + k + 1) % len(units)
-                return name
-        return None
 
 def run_near_dedup_stream_available_now(
     spark: SparkSession,

@@ -79,6 +79,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .compaction import FoldScheduler
 from .corpus import (
     IncrementalNearDup,
     NEAR_BANDS,
@@ -92,6 +93,11 @@ from .corpus import (
 from .semdedup_stream import IncrementalSemDeDup
 from .sink import ParquetUpsertTable
 from .triggers import apply_max_files_per_trigger
+
+# delta count at which one of the funnel's own docs/corpus MoR tables
+# gets its in-tick delta-tail merge (independent of `compact_every`,
+# which sets the maintainers' thresholds)
+TABLE_MERGE_EVERY = 16
 
 
 class StreamingCurationFunnel:
@@ -116,8 +122,11 @@ class StreamingCurationFunnel:
         """`compact_every` is the maintainers' auto-compaction policy
         (minor folds / delta-tail merges, at most one unit per tick per
         maintainer — see IncrementalNearDup / IncrementalSemDeDup); the
-        funnel's own docs/corpus MoR tables run their fixed one-merge-
-        per-tick budget regardless. `track_quarantine` (the JSONL
+        funnel's own docs/corpus MoR tables get the same policy
+        (`self.folds`) at the fixed TABLE_MERGE_EVERY threshold.
+        `fold_budget_sec` defers due folds in all three (see
+        compaction.FoldScheduler), gated on the composed tick's
+        elapsed. `track_quarantine` (the JSONL
         arrival mode) makes publish() report `quarantined_lines` —
         present even at zero, the batch CLI's key set.
 
@@ -169,10 +178,18 @@ class StreamingCurationFunnel:
         self.corpus_tbl = corpus_table(
             spark, f"{state_dir}/corpus", compact_every=64
         )
-        self._merge_rr = 0  # round-robin delta-merge cursor
-        # fold_budget_sec: the maintainers' off-tick deferral (round 10)
-        # — a due minor fold is skipped when the tick already consumed
-        # the budget; see IncrementalNearDup.__init__
+        # in-tick maintenance of these two tables is the delta-tail merge
+        # (O(cadence) work, never a table rewrite); the returned name is
+        # the merged table's path (the long-run soak attributes fold
+        # ticks with it)
+        self.folds = FoldScheduler(
+            tuple(
+                (t.path, lambda t=t: len(t.history()),
+                 lambda t=t: t.compact_deltas())
+                for t in (self.docs_tbl, self.corpus_tbl)
+            ),
+            TABLE_MERGE_EVERY, fold_budget_sec,
+        )
         self.near = IncrementalNearDup(
             spark, f"{state_dir}/near", compact_every=compact_every,
             fold_budget_sec=fold_budget_sec,
@@ -325,7 +342,7 @@ class StreamingCurationFunnel:
                     "batch_id long, n_raw long",
                 )
             )
-            self._maybe_merge_one()
+            self.folds.maybe_fold_one(tick_start)
         finally:
             gated.unpersist()
 
@@ -362,22 +379,6 @@ class StreamingCurationFunnel:
                 )
             )
         return ebatch.filter(F.col("embedding").isNotNull())
-
-    def _maybe_merge_one(self) -> str | None:
-        """In-tick maintenance budget for the funnel's own MoR tables
-        (the near-dup and semdedup maintainers run their own policies):
-        delta-tail-merge AT MOST ONE table per tick once its delta count
-        crosses the threshold — O(cadence) work, never a table rewrite.
-        Returns the merged table's path (observability: the long-run
-        soak attributes fold ticks), None when nothing crossed."""
-        tables = (self.docs_tbl, self.corpus_tbl)
-        for k in range(len(tables)):
-            t = tables[(self._merge_rr + k) % len(tables)]
-            if len(t.history()) >= 16:
-                t.compact_deltas()
-                self._merge_rr = (self._merge_rr + k + 1) % len(tables)
-                return t.path
-        return None
 
     # -- publish ---------------------------------------------------------------
 

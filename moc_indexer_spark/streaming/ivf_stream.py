@@ -39,7 +39,11 @@ import time
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .compaction import heal_batched_dir, list_committed_batches
+from .compaction import (
+    FoldScheduler,
+    heal_batched_dir,
+    list_committed_batches,
+)
 from .triggers import apply_max_files_per_trigger
 
 
@@ -53,25 +57,25 @@ class IncrementalIvfIndex:
         compact_every: int | None = None,
         fold_budget_sec: float | None = None,
     ):
-        """`compact_every` is the AUTO-COMPACTION policy (the Indexer's
-        threshold pattern, app.py: fold once the delta-dir count crosses
-        the threshold, at most one fold per update — an update never
-        absorbs two rewrites). Without it the measured flat update
+        """`compact_every` and `fold_budget_sec` drive `self.folds`, the
+        shared in-tick fold policy (compaction.FoldScheduler): once the
+        flat batch-dir count reaches the threshold, MINOR-fold the flat
+        tail (tiered, round 9: O(cadence) rows regardless of index size,
+        so the policy never lands an O(index) rewrite inside a tick;
+        fold LEVELS are re-merged only by the out-of-band
+        compact_index(idx)). Without it the measured flat update
         exponents assume an operator calls compact() out-of-band; a
         daemon that never does rides the flat-batch tail growth
         (SCALE_CURVE.json *_stream_policy_longrun measures both arms).
-        None (default) keeps the bare out-of-band contract.
-
-        `fold_budget_sec` (round 10): off-tick deferral — a due minor
-        fold is skipped (counted in `deferred_folds`) when the tick's
-        own work already consumed the budget; the still-crossed
-        threshold fires it on a later, faster tick, so maintenance can
-        never stack on an already-slow tick. None = unconditional."""
+        None (default) keeps the bare out-of-band contract."""
         self.spark = spark
         self.path = path.rstrip("/") or path
-        self._compact_every = compact_every
-        self._fold_budget_sec = fold_budget_sec
-        self.deferred_folds = 0
+        self.folds = FoldScheduler(
+            (("vectors",
+              lambda: sum(1 for b in self._batches() if not self._is_fold(b)),
+              lambda: compact_index(self, minor=True)),),
+            compact_every, fold_budget_sec,
+        )
         # relation cache for _read_upto (see its docstring): building a
         # DataFrame over the fold re-lists its O(cells) partition dirs
         # with a fresh distributed listing job EVERY read (measured at
@@ -214,29 +218,6 @@ class IncrementalIvfIndex:
 
     # -- maintenance ---------------------------------------------------------
 
-    def _maybe_compact(self, tick_start: float | None = None) -> bool:
-        """Apply the auto-compaction policy after a committed update:
-        MINOR-fold the flat tail iff its dir count crossed the threshold
-        (a cheap listdir — no data read). Minor = tiered (round 9): the
-        in-tick fold reads O(cadence) rows regardless of index size, so
-        the policy can never land an O(index) rewrite inside a tick;
-        fold LEVELS are re-merged only by the out-of-band
-        compact_index(idx). Returns True when a fold ran. With a
-        fold_budget_sec, a due fold is DEFERRED when the tick's own
-        work already consumed the budget (off-tick deferral)."""
-        if self._compact_every is not None:
-            n_flats = sum(1 for b in self._batches() if not self._is_fold(b))
-            if n_flats >= self._compact_every:
-                from .compaction import over_fold_budget
-
-                if over_fold_budget(self._fold_budget_sec, tick_start):
-                    # budget deferral: a later, faster tick absorbs it
-                    self.deferred_folds += 1
-                    return False
-                compact_index(self, minor=True)
-                return True
-        return False
-
     def update(
         self,
         batch_vectors: DataFrame,
@@ -337,7 +318,7 @@ class IncrementalIvfIndex:
             if assigned_new is not assigned:
                 assigned_new.unpersist()
             assigned.unpersist()
-        self._maybe_compact(tick_start)
+        self.folds.maybe_fold_one(tick_start)
 
     # -- probe ---------------------------------------------------------------
 
@@ -568,7 +549,7 @@ class IncrementalIvfPqIndex(IncrementalIvfIndex):
             if encoded_new is not encoded:
                 encoded_new.unpersist()
             encoded.unpersist()
-        self._maybe_compact(tick_start)
+        self.folds.maybe_fold_one(tick_start)
 
     def probe(
         self,

@@ -78,10 +78,10 @@ from ..operators.similarity import (
     semantic_dedup_with_centroids,
 )
 from .compaction import (
+    FoldScheduler,
     compact_batched_dir,
     heal_batched_dir,
     list_committed_batches,
-    over_fold_budget,
 )
 from .sink import ParquetUpsertTable
 from .triggers import apply_max_files_per_trigger
@@ -98,29 +98,41 @@ class IncrementalSemDeDup:
         compact_every: int | None = None,
         fold_budget_sec: float | None = None,
     ):
-        """`compact_every` is the AUTO-COMPACTION policy (the Indexer's
-        threshold + per-cycle fold budget, app.py _maybe_compact_one):
-        once the vector batch-dir count or the dup table's MoR delta
-        count crosses the threshold, fold it — AT MOST ONE of the two
-        per update (round-robin cursor), so a tick never absorbs two
-        rewrites. None (default) keeps the bare out-of-band compact()
-        contract the flat update exponent previously assumed.
-
-        `fold_budget_sec` (round 10): off-tick deferral — a due minor
-        fold is skipped (counted in `deferred_folds`) when the tick's
-        own work already consumed the budget; the still-crossed
-        threshold fires it on a later, faster tick, so maintenance can
-        never stack on an already-slow tick. None = unconditional."""
+        """`compact_every` and `fold_budget_sec` drive `self.folds`, the
+        shared in-tick fold policy (compaction.FoldScheduler): once the
+        flat vector batch count or the dup table's MoR delta count
+        reaches the threshold, fold it — AT MOST ONE of the two per
+        update, so a tick never absorbs two rewrites. None (default)
+        keeps the bare out-of-band compact() contract the flat update
+        exponent previously assumed."""
         self.spark = spark
         self.path = path.rstrip("/") or path
         os.makedirs(self.path, exist_ok=True)
         self.dups = ParquetUpsertTable(
             spark, f"{self.path}/dups", keys=["vec_id"]
         )
-        self._compact_every = compact_every
-        self._fold_budget_sec = fold_budget_sec
-        self.deferred_folds = 0
-        self._compact_rr = 0  # round-robin over (vectors, dups)
+        self.folds = FoldScheduler(
+            (
+                # the in-tick vector fold is MINOR (tiered): only flat
+                # batches since the newest fold — O(cadence) work bounded
+                # regardless of index size, so the policy can never land
+                # an O(index) rewrite inside a tick (the round-8
+                # long-run's ON-arm p90 spike). Accordingly the trigger
+                # counts FLAT batches, not fold levels; levels are
+                # re-merged only by the out-of-band compact().
+                ("vectors", lambda: sum(
+                    1 for b in list_committed_batches(self._vectors_dir())
+                    if not self._is_fold(b)
+                ), lambda: self._compact_vectors(minor=True)),
+                # the dup table's in-tick maintenance is the delta-tail
+                # merge (O(cadence)), for the same reason: its full fold
+                # is O(table) and was the residual ON-arm spike after the
+                # vector fold went minor
+                ("dups", lambda: len(self.dups.history()),
+                 lambda: self.dups.compact_deltas()),
+            ),
+            compact_every, fold_budget_sec,
+        )
         # relation cache for _read_upto — the ivf_stream design: building
         # a DataFrame over the cell-partitioned fold re-lists its
         # O(cells) partition dirs with a fresh distributed listing job
@@ -353,7 +365,7 @@ class IncrementalSemDeDup:
             if new_ids is not new:
                 new_ids.unpersist()
             new.unpersist()
-        self._maybe_compact_one(tick_start)
+        self.folds.maybe_fold_one(tick_start)
 
     def _compact_vectors(self, minor: bool = False) -> int:
         """Fold committed vector batches into one cell-partitioned
@@ -457,47 +469,6 @@ class IncrementalSemDeDup:
         folded = self._compact_vectors()
         self.dups.compact()
         return folded
-
-    def _maybe_compact_one(
-        self, tick_start: float | None = None
-    ) -> str | None:
-        """Fold AT MOST ONE state relation whose accretion crossed the
-        policy threshold (cheap listdirs — no data read). Returns the
-        folded unit's name, None if nothing crossed or no policy. With
-        a fold_budget_sec, a due fold is DEFERRED when the tick's own
-        work already consumed the budget (off-tick deferral)."""
-        if self._compact_every is None:
-            return None
-        units = (
-            # the in-tick vector fold is MINOR (tiered): only flat
-            # batches since the newest fold — O(cadence) work bounded
-            # regardless of index size, so the policy can never land an
-            # O(index) rewrite inside a tick (the round-8 long-run's
-            # ON-arm p90 spike). Accordingly the trigger counts FLAT
-            # batches, not fold levels; levels are re-merged only by
-            # the out-of-band compact().
-            ("vectors", lambda: sum(
-                1 for b in list_committed_batches(self._vectors_dir())
-                if not self._is_fold(b)
-            ), lambda: self._compact_vectors(minor=True)),
-            # the dup table's in-tick maintenance is the delta-tail
-            # merge (O(cadence)), for the same reason: its full fold is
-            # O(table) and was the residual ON-arm spike after the
-            # vector fold went minor
-            ("dups", lambda: len(self.dups.history()),
-             self.dups.compact_deltas),
-        )
-        for k in range(len(units)):
-            name, count, fold = units[(self._compact_rr + k) % len(units)]
-            if count() >= self._compact_every:
-                if over_fold_budget(self._fold_budget_sec, tick_start):
-                    # budget deferral: a later, faster tick absorbs it
-                    self.deferred_folds += 1
-                    return None
-                fold()
-                self._compact_rr = (self._compact_rr + k + 1) % len(units)
-                return name
-        return None
 
     # -- reads ----------------------------------------------------------------
 

@@ -80,6 +80,14 @@ def _quant(xs, q):
     return round(s[min(len(s) - 1, int(len(s) * q))], 3)
 
 
+def _deferred(funnel):
+    """Deferred folds so far, summed over the funnel's fold schedulers."""
+    scheds = [funnel.folds, funnel.near.folds]
+    if funnel.sem is not None:
+        scheds.append(funnel.sem.folds)
+    return sum(s.deferred for s in scheds)
+
+
 def run_arm(spark, base_rows, emb, label, preload, cycles,
             publish_every, compact_every, fold_budget_sec=None):
     import numpy as np
@@ -116,10 +124,10 @@ def run_arm(spark, base_rows, emb, label, preload, cycles,
 
         setattr(obj, attr, w)
 
-    wrap(funnel.near, "_maybe_compact_one", "near")
+    wrap(funnel.near.folds, "maybe_fold_one", "near")
     if funnel.sem is not None:
-        wrap(funnel.sem, "_maybe_compact_one", "sem")
-    wrap(funnel, "_maybe_merge_one", "tbl")
+        wrap(funnel.sem.folds, "maybe_fold_one", "sem")
+    wrap(funnel.folds, "maybe_fold_one", "tbl")
 
     t0 = time.perf_counter()
     done, bid = 0, 0
@@ -142,9 +150,7 @@ def run_arm(spark, base_rows, emb, label, preload, cycles,
     # cyc=-1 (filtered below) and the deferral counters are SNAPSHOTTED
     # so the reported numbers cover only the measured cycles (review
     # finding: lifetime counters mixed preload into the attribution)
-    deferred0 = funnel.near.deferred_folds + (
-        funnel.sem.deferred_folds if funnel.sem else 0
-    )
+    deferred0 = _deferred(funnel)
     lat: list[float] = []
     publishes: list[dict] = []
     for c in range(cycles):
@@ -196,11 +202,7 @@ def run_arm(spark, base_rows, emb, label, preload, cycles,
             tag: sum(1 for c_, t in events if t == tag and c_ >= 0)
             for tag in ("near", "sem", "tbl")
         },
-        "deferred_folds": (
-            funnel.near.deferred_folds
-            + (funnel.sem.deferred_folds if funnel.sem else 0)
-            - deferred0
-        ),
+        "deferred_folds": _deferred(funnel) - deferred0,
         "envelope_violations_3s": sum(1 for x in lat if x > ENVELOPE_TIGHT),
         "envelope_violations_15s": sum(
             1 for x in lat if x > ENVELOPE_FUNNEL

@@ -637,7 +637,7 @@ def _longrun_arms(mk_index, update_fn, count_state,
             "fold_overhead_p50": round(
                 statistics.median(foldlat) - statistics.median(clean), 3
             ) if foldlat and clean else None,
-            "deferred_folds": getattr(idx, "deferred_folds", 0),
+            "deferred_folds": idx.folds.deferred,
             "fold_budget_sec": budget,
         }
         print(json.dumps({label: out[label]}), flush=True)

@@ -140,7 +140,7 @@ def main() -> None:
             ) + time.perf_counter() - t0
 
     idx._read_state = timed_read
-    timer.wrap(idx, "_maybe_compact_one", "policy_folds")
+    timer.wrap(idx.folds, "maybe_fold_one", "policy_folds")
 
     def one_update():
         nonlocal done

@@ -1,16 +1,22 @@
 """Off-tick fold deferral (round 10): with `fold_budget_sec`, a due
 minor fold is SKIPPED when the tick's own work already consumed the
-budget — counted in `deferred_folds` — and the still-crossed threshold
+budget — counted in `folds.deferred` — and the still-crossed threshold
 fires it on a later tick where the budget allows. The semantics are
 physical-only: folding never changes answers (pinned by the existing
 fold-invariance tests), so these tests pin the POLICY mechanics:
 budget 0 defers every due fold, budget None folds unconditionally, and
-a deferred fold still runs once the budget permits.
+a deferred fold still runs once the budget permits. The `FoldScheduler`
+tests pin the shared policy itself on fake counter units, without Spark.
 """
+
+import time
 
 import pytest
 
-from moc_indexer_spark.streaming.compaction import list_committed_batches
+from moc_indexer_spark.streaming.compaction import (
+    FoldScheduler,
+    list_committed_batches,
+)
 from moc_indexer_spark.streaming.corpus import IncrementalNearDup
 from moc_indexer_spark.streaming.semdedup_stream import IncrementalSemDeDup
 
@@ -18,6 +24,77 @@ from moc_indexer_spark.streaming.semdedup_stream import IncrementalSemDeDup
 @pytest.fixture()
 def workdir(tmp_path):
     return str(tmp_path)
+
+
+class _Unit:
+    """A fake fold unit: a plain counter that its fold resets."""
+
+    def __init__(self, name, n=0):
+        self.name, self.n, self.folds = name, n, 0
+
+    def fold(self):
+        self.n, self.folds = 0, self.folds + 1
+
+    def spec(self):
+        return (self.name, lambda: self.n, self.fold)
+
+
+def _scheduler(units, threshold=2, budget_sec=None):
+    return FoldScheduler(tuple(u.spec() for u in units), threshold,
+                         budget_sec)
+
+
+def test_scheduler_folds_one_unit_per_call_round_robin():
+    a, b, c = _Unit("a", 2), _Unit("b", 5), _Unit("c", 1)
+    s = _scheduler((a, b, c))
+    # a and b are due (count >= threshold); only the first one folds
+    assert s.maybe_fold_one() == "a"
+    assert (a.folds, b.folds, c.folds) == (1, 0, 0)
+    assert s.maybe_fold_one() == "b"
+    assert s.maybe_fold_one() is None  # c sits one below the threshold
+    # every unit due again: the cursor sits on c, the slot after b
+    a.n = b.n = c.n = 2
+    assert [s.maybe_fold_one() for _ in range(4)] == ["c", "a", "b", None]
+    assert s.deferred == 0
+
+
+def test_scheduler_cursor_moves_to_the_slot_after_the_folded_unit():
+    a, b, c, d = _Unit("a"), _Unit("b"), _Unit("c", 2), _Unit("d")
+    s = _scheduler((a, b, c, d))
+    assert s.maybe_fold_one() == "c"  # skips a and b, folds c
+    b.n = d.n = 2
+    # the cursor moved past c, not one slot on from a: d before b
+    assert s.maybe_fold_one() == "d"
+    assert s.maybe_fold_one() == "b"
+
+
+def test_scheduler_zero_budget_defers_without_moving_the_cursor():
+    a, b, c = _Unit("a", 2), _Unit("b", 2), _Unit("c")
+    s = _scheduler((a, b, c), budget_sec=0.0)
+    spent = time.perf_counter() - 1.0
+    assert s.maybe_fold_one(spent) is None
+    assert s.deferred == 1 and (a.folds, b.folds) == (0, 0)
+    # lifting the budget fires the deferred fold where the cursor stayed
+    s.budget_sec = None
+    assert s.maybe_fold_one(spent) == "a"
+    # with a budget but no tick reference, nothing is deferred
+    s.budget_sec = 0.0
+    assert s.maybe_fold_one() == "b"
+    assert s.deferred == 1
+
+
+def test_scheduler_without_budget_folds_unconditionally():
+    a = _Unit("a", 2)
+    s = _scheduler((a,), budget_sec=None)
+    assert s.maybe_fold_one(time.perf_counter() - 1e6) == "a"
+    assert a.folds == 1 and s.deferred == 0
+
+
+def test_scheduler_without_threshold_never_folds():
+    a = _Unit("a", 10**9)
+    s = _scheduler((a,), threshold=None, budget_sec=0.0)
+    assert s.maybe_fold_one(time.perf_counter() - 1.0) is None
+    assert a.folds == 0 and s.deferred == 0
 
 
 def _doc_batch(spark, start, n=4):
@@ -37,22 +114,22 @@ def test_neardedup_budget_zero_defers_then_folds(spark, workdir):
     for b in range(3):
         idx.update(_doc_batch(spark, 100 * b), b)
     # every due fold deferred: flat dirs accreted past the threshold
-    assert idx.deferred_folds >= 1
+    assert idx.folds.deferred >= 1
     flats = [
         b for b in list_committed_batches(f"{idx.state_dir}/feats")
         if not idx._is_fold("feats", b)
     ]
     assert len(flats) >= 2
     # lift the budget: the crossed threshold fires on the next check
-    idx._fold_budget_sec = None
-    assert idx._maybe_compact_one() is not None
+    idx.folds.budget_sec = None
+    assert idx.folds.maybe_fold_one() is not None
 
 
 def test_neardedup_no_budget_folds_unconditionally(spark, workdir):
     idx = IncrementalNearDup(spark, f"{workdir}/near", compact_every=2)
     for b in range(3):
         idx.update(_doc_batch(spark, 100 * b), b)
-    assert idx.deferred_folds == 0
+    assert idx.folds.deferred == 0
     # at least one unit folded under pressure (bands/feats/pairs round-
     # robin; each tick folds at most one)
     folds = [
@@ -80,14 +157,14 @@ def test_semdedup_budget_zero_defers_then_folds(spark, workdir):
     idx.train(_vec_batch(spark, 0, 32), threshold=0.2)
     for b in range(3):
         idx.update(_vec_batch(spark, 1000 * (b + 1)), b)
-    assert idx.deferred_folds >= 1
+    assert idx.folds.deferred >= 1
     flats = [
         b for b in list_committed_batches(idx._vectors_dir())
         if not idx._is_fold(b)
     ]
     assert len(flats) >= 2
-    idx._fold_budget_sec = None
-    assert idx._maybe_compact_one() is not None
+    idx.folds.budget_sec = None
+    assert idx.folds.maybe_fold_one() is not None
 
 
 def test_funnel_threads_composed_tick_start_into_budgets(spark, workdir):
@@ -126,4 +203,4 @@ def test_funnel_threads_composed_tick_start_into_budgets(spark, workdir):
     # the composed tick's start reached the maintainer...
     assert seen["tick_start"] is not None
     # ...and the zero budget deferred its due folds, counted
-    assert funnel.near.deferred_folds >= 1
+    assert funnel.near.folds.deferred >= 1
