@@ -42,19 +42,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators import retrieval as RT
-from .compaction import (  # noqa: F401
+from .compaction import (
+    BatchLog,
     FoldScheduler,
     _BATCH_RE,
-    _FOLD_MARKER,
-    compact_batched_dir,
-    heal_batched_dir,
     list_committed_batches,
-    read_batches_upto,
 )
 from .triggers import apply_max_files_per_trigger
-# (_FOLD_MARKER re-exported for the fault-injection tests)
-
-_FOLD_BASE_MARKER = "_FOLDBASE"  # marks a full-fold base dir (round 9)
 
 
 class IncrementalBm25Index:
@@ -77,44 +71,38 @@ class IncrementalBm25Index:
         contract the flat update exponents previously assumed."""
         self.spark = spark
         self.path = path.rstrip("/") or path
+        os.makedirs(self.path, exist_ok=True)
+        # postings/lengths are batch logs (compaction.BatchLog); a fold
+        # writes one file per four folded dirs
+        self.logs = {
+            name: BatchLog(spark, self._dir(name), batches_per_file=4)
+            for name in ("lengths", "postings")
+        }
         # MINOR folds only (round 9): the in-tick merge covers the tail
         # since the newest full-fold base, O(post-base tail) rows
         # regardless of index size; the O(index) full fold stays
         # compact_index()'s out-of-band contract
         self.folds = FoldScheduler(
             tuple(
-                (name, lambda n=name: self._tail_len(n),
-                 lambda n=name: _compact_relation(
-                     self, n, self.committed_batch(), minor=True))
-                for name in ("lengths", "postings")
+                (name, lambda log=log: log.tail_count(self.committed_batch()),
+                 lambda log=log: log.fold(self.committed_batch(), minor=True))
+                for name, log in self.logs.items()
             ),
             compact_every, fold_budget_sec,
         )
-        os.makedirs(self.path, exist_ok=True)
-        # startup heal (round 9): a crash inside an in-tick policy fold
-        # leaves swept originals in __fold_trash; without this, every
-        # update until the next fold would read a hole in the state
-        for name in ("lengths", "postings"):
-            heal_batched_dir(self._dir(name))
 
     # -- state ---------------------------------------------------------------
 
     def _dir(self, name: str) -> str:
         return f"{self.path}/{name}"
 
-    def _batches(self, name: str) -> list[int]:
-        return list_committed_batches(self._dir(name))
-
     def committed_batch(self) -> int:
         """Highest batch whose commit record (stats snapshot) exists."""
-        b = self._batches("stats")
+        b = list_committed_batches(self._dir("stats"))
         return b[-1] if b else -1
 
-    def _read_upto(self, name: str, upto: int) -> DataFrame | None:
-        return read_batches_upto(self.spark, self._dir(name), upto)
-
     def _read_snapshot(self, name: str, batch: int) -> DataFrame | None:
-        if batch < 0 or batch not in self._batches(name):
+        if batch < 0 or batch not in list_committed_batches(self._dir(name)):
             return None
         return self.spark.read.parquet(f"{self._dir(name)}/batch={batch}")
 
@@ -146,7 +134,7 @@ class IncrementalBm25Index:
             .filter(F.col("rn") == 1)
             .drop("rn")
         )
-        seen = self._read_upto("lengths", batch_id - 1)
+        seen = self.logs["lengths"].read(batch_id - 1)
         if seen is not None:
             batch = batch.join(seen.select("doc_id"), "doc_id", "left_anti")
         # four write actions consume the delta — cache it for the update's
@@ -158,36 +146,12 @@ class IncrementalBm25Index:
             batch.unpersist()
         self.folds.maybe_fold_one(tick_start)
 
-    def _tail_len(self, name: str) -> int:
-        """Committed dirs above `name`'s fold base (cheap listdirs, no
-        data read) — what the in-tick policy counts."""
-        fold_base = self._fold_base(name)
-        committed = self.committed_batch()
-        return sum(
-            1 for b in self._batches(name) if fold_base < b <= committed
-        )
-
-    def _fold_base(self, name: str) -> int:
-        """Newest FULL-fold dir id (`_FOLDBASE`-marked), -1 if none —
-        the lower bound minor folds merge above."""
-        base = -1
-        for b in self._batches(name):
-            if os.path.exists(
-                f"{self._dir(name)}/batch={b}/{_FOLD_BASE_MARKER}"
-            ):
-                base = b
-        return base
-
     def _write_generation(self, batch, batch_id: int, committed: int) -> None:
         postings, lengths, dfreq_delta, stats_delta = RT._index_relations(
             batch
         )
-        lengths.write.mode("overwrite").parquet(
-            f"{self._dir('lengths')}/batch={batch_id}"
-        )
-        postings.write.mode("overwrite").parquet(
-            f"{self._dir('postings')}/batch={batch_id}"
-        )
+        self.logs["lengths"].append(batch_id, lengths)
+        self.logs["postings"].append(batch_id, postings)
 
         prev_dfreq = self._read_snapshot("dfreq", committed)
         dfreq = dfreq_delta if prev_dfreq is None else (
@@ -234,12 +198,12 @@ class IncrementalBm25Index:
         if committed < 0:
             return self.spark.createDataFrame([], empty_schema)
         terms = sorted({t for _, q in queries for t in q.split(" ")})
-        postings = self._read_upto("postings", committed).filter(
+        postings = self.logs["postings"].read(committed).filter(
             F.col("term").isin(terms)
         )
         return RT._score_probe(
             postings,
-            self._read_upto("lengths", committed),
+            self.logs["lengths"].read(committed),
             self._read_snapshot("dfreq", committed),
             self._read_snapshot("stats", committed),
             RT._qterms(self.spark, queries),
@@ -306,44 +270,4 @@ def compact_index(idx: IncrementalBm25Index) -> int:
     number of batch partitions folded away.
     """
     committed = idx.committed_batch()
-    if committed < 0:
-        return 0
-    removed = 0
-    for name in ("lengths", "postings"):
-        removed += _compact_relation(idx, name, committed)
-    return removed
-
-
-def _compact_relation(
-    idx: IncrementalBm25Index, name: str, committed: int,
-    minor: bool = False,
-) -> int:
-    """minor=True merges only the tail above the newest full-fold base
-    (O(post-base tail), the in-tick policy form) into one UNMARKED flat
-    dir; minor=False folds everything into a new `_FOLDBASE`-marked
-    base (out-of-band)."""
-    lo = idx._fold_base(name) if minor else -1
-
-    def _read(upto):
-        if lo >= 0:
-            batches = [b for b in idx._batches(name) if lo < b <= upto]
-            return idx.spark.read.parquet(
-                *[f"{idx._dir(name)}/batch={b}" for b in batches]
-            )
-        return read_batches_upto(idx.spark, idx._dir(name), upto)
-
-    def _write(df, tmp, n):
-        df.coalesce(max(1, n // 4)).write.mode("overwrite").parquet(tmp)
-        # full folds become the base — and so does a minor with NO base
-        # yet (the first policy fold fires while the state is small)
-        if not minor or lo < 0:
-            open(os.path.join(tmp, _FOLD_BASE_MARKER), "w").close()
-
-    return compact_batched_dir(
-        base=idx._dir(name),
-        committed=committed,
-        list_batches=lambda: idx._batches(name),
-        read_upto=_read,
-        write_fold=_write,
-        min_batch=lo,
-    )
+    return sum(log.fold(committed) for log in idx.logs.values())

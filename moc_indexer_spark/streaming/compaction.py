@@ -1,7 +1,8 @@
 """Crash-consistent compaction swap protocol for batch-partitioned
-streaming state (shared by the BM25 and IVF incremental indexes).
+streaming state (shared by the four index maintainers: BM25, IVF,
+SemDeDup and near-dup).
 
-Both indexes append one `batch=N` parquet directory per micro-batch —
+Every maintainer appends one `batch=N` parquet directory per micro-batch —
 idempotent and exactly-once, but at cluster scale thousands of tiny
 partitions destroy probe scan throughput the same way small files do.
 Compaction folds every batch <= the committed id into ONE partition at
@@ -42,6 +43,19 @@ as (name, count, fold) and calls `folds.maybe_fold_one(tick_start)`
 once per tick — a threshold on a cheap count, at most one fold per
 tick behind a round-robin cursor, deferred when the tick already used
 up its `fold_budget_sec`.
+
+WHERE the state lives is one class too, `BatchLog`: one relation
+directory of `batch=N` dirs, each an overwrite-idempotent append. A dir
+is committed once Spark's `_SUCCESS` is in it. The FOLD BASE is the
+newest dir carrying an empty `_FOLDBASE` file; only a full fold (or the
+first minor fold, while there is no base yet) writes one, so the base
+holds every batch up to its id and the TAIL is every committed dir above
+it. A minor fold merges the tail into one flat dir and leaves the base
+alone. A read is two cached relations, the base group and the tail
+group (a vector log's base is `cell`-partitioned while its tail is flat,
+and one scan cannot discover both layouts), each keyed by its exact
+batch-id group; a fold drops only the entries whose group touches the
+range it swept, so the base's listing survives every minor fold.
 """
 
 from __future__ import annotations
@@ -127,19 +141,6 @@ def list_committed_batches(d: str) -> list[int]:
     return sorted(out)
 
 
-def read_batches_upto(spark, d: str, upto: int, with_batch_col: bool = False):
-    """Union of all committed `batch=N <= upto` partitions under `d`
-    (None if empty). with_batch_col=True reads with basePath so the batch
-    id is available as a partition column."""
-    batches = [b for b in list_committed_batches(d) if b <= upto]
-    if not batches:
-        return None
-    reader = spark.read
-    if with_batch_col:
-        reader = reader.option("basePath", d)
-    return reader.parquet(*[f"{d}/batch={b}" for b in batches])
-
-
 def assert_unique_ids(df: DataFrame, id_col: str, context: str) -> None:
     """Maintenance-time invariant: the folded state must hold one row per
     id. The cell-pruned anti-joins in the vector maintainers (ivf_stream,
@@ -166,6 +167,163 @@ def assert_unique_ids(df: DataFrame, id_col: str, context: str) -> None:
             "maintainer contract); rebuild the index from the corrected "
             "source"
         )
+
+
+_FOLD_BASE = "_FOLDBASE"
+_RETIRED_FOLD_LEVEL = "_FOLDLEVEL"
+
+
+class BatchLog:
+    """One append-only `batch=N` relation directory of an index
+    maintainer: its commit listing, its fold base, its relation cache and
+    its folds (layout and cache rule in the module docstring).
+
+    The owners differ only in data: `partition_by` names the column a
+    base is partitioned by (`cell` for the vector logs, whose tail stays
+    flat so a cell predicate pushes to its row groups);
+    `batches_per_file` makes a fold write one file per that many folded
+    dirs instead of one file; `unique_ids` runs the `assert_unique_ids`
+    tripwire on the first column of every fold's input.
+
+    Cache safety: batch ids are monotonic and a committed dir's files are
+    immutable between folds, so a batch-id group always names the same
+    files, EXCEPT across a fold, which rewrites `batch=<committed>` in
+    place (a singleton tail group `(N,)` read inside the fold would alias
+    the folded `(N,)`). A fold therefore drops every group touching its
+    range, and a recovered crashed swap (whose range may be wider) clears
+    the whole cache. An uncommitted partial dir is never listed."""
+
+    def __init__(
+        self,
+        spark,
+        path: str,
+        partition_by: str | None = None,
+        batches_per_file: int | None = None,
+        unique_ids: bool = False,
+    ):
+        self.spark = spark
+        self.path = path
+        self.partition_by = partition_by
+        self.batches_per_file = batches_per_file
+        self.unique_ids = unique_ids
+        self._cache: dict[tuple, DataFrame] = {}
+        # a crash inside an in-tick fold leaves the swept originals in
+        # __fold_trash; healed here, or every update until the next fold
+        # would read a hole in the state
+        heal_batched_dir(path)
+        for b in self.batches():
+            names = os.listdir(self._dir(b))
+            if _RETIRED_FOLD_LEVEL in names:
+                raise ValueError(
+                    f"{self._dir(b)} marks its fold base with the retired "
+                    f"{_RETIRED_FOLD_LEVEL} file: replace it with an empty "
+                    f"{_FOLD_BASE} file"
+                )
+            if any("=" in n for n in names) and _FOLD_BASE not in names:
+                raise ValueError(
+                    f"{self._dir(b)} is a partitioned fold base without a "
+                    f"{_FOLD_BASE} file: add an empty {_FOLD_BASE} file "
+                    "to it"
+                )
+
+    def _dir(self, batch_id: int) -> str:
+        return f"{self.path}/batch={batch_id}"
+
+    def append(self, batch_id: int, df: DataFrame) -> None:
+        """Commit `df` as `batch=<batch_id>` (an overwrite, so a replay
+        rewrites the same dir)."""
+        df.write.mode("overwrite").parquet(self._dir(batch_id))
+
+    def batches(self) -> list[int]:
+        return list_committed_batches(self.path)
+
+    def last(self) -> int:
+        b = self.batches()
+        return b[-1] if b else -1
+
+    def _scan(self) -> tuple[list[int], int]:
+        ids = self.batches()
+        marked = [b for b in ids
+                  if os.path.exists(f"{self._dir(b)}/{_FOLD_BASE}")]
+        return ids, (marked[-1] if marked else -1)
+
+    def base(self) -> int:
+        """Id of the fold base, -1 if there is none."""
+        return self._scan()[1]
+
+    def tail_count(self, upto: int) -> int:
+        """Committed dirs in (base, upto]: cheap listdirs, no data read
+        (what `FoldScheduler` counts)."""
+        ids, base = self._scan()
+        return sum(1 for b in ids if base < b <= upto)
+
+    def read(self, upto: int, above: int = -1) -> DataFrame | None:
+        """Committed dirs in (above, upto] (None if there are none): the
+        base group and the tail group, each one cached relation, unioned
+        by name."""
+        ids, base = self._scan()
+        ids = [b for b in ids if above < b <= upto]
+        parts = [
+            self._relation(group)
+            for group in (tuple(b for b in ids if b <= base),
+                          tuple(b for b in ids if b > base))
+            if group
+        ]
+        if not parts:
+            return None
+        return parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+
+    def _relation(self, group: tuple) -> DataFrame:
+        df = self._cache.get(group)
+        if df is None:
+            if len(self._cache) > 8:
+                self._cache.clear()
+            df = self.spark.read.parquet(*[self._dir(b) for b in group])
+            self._cache[group] = df
+        return df
+
+    def fold(self, committed: int, minor: bool = False) -> int:
+        """Fold the committed dirs up to `committed` into one dir at
+        `committed`; returns `compact_batched_dir`'s count. A minor fold
+        merges only the tail above the base into one flat dir (the
+        in-tick form: O(cadence) rows whatever the index size); a full
+        fold, or a minor fold with no base yet, writes a new marked base
+        (the full fold is the out-of-band form)."""
+        lo = self.base() if minor else -1
+        writes_base = lo < 0
+
+        def _read(upto: int) -> DataFrame:
+            df = self.read(upto, above=lo)
+            if self.unique_ids:
+                # a minor fold checks its own range; cross-level
+                # duplicates are covered by the full fold
+                assert_unique_ids(df, df.columns[0], f"fold({self.path})")
+            return df
+
+        def _write(df: DataFrame, tmp: str, n: int) -> None:
+            if writes_base and self.partition_by:
+                # the partition-keyed shuffle bounds the fold at one
+                # file per value (without it each read task writes one
+                # file per value it holds, and the next fold reads all
+                # of them)
+                (df.repartition(self.partition_by).write.mode("overwrite")
+                 .partitionBy(self.partition_by).parquet(tmp))
+            else:
+                files = (max(1, n // self.batches_per_file)
+                         if self.batches_per_file else 1)
+                df.coalesce(files).write.mode("overwrite").parquet(tmp)
+            if writes_base:
+                open(os.path.join(tmp, _FOLD_BASE), "w").close()
+
+        folded = compact_batched_dir(
+            self.path, committed, self.batches, _read, _write,
+            min_batch=lo, on_recovered=self._cache.clear,
+        )
+        if folded:
+            for group in [g for g in self._cache
+                          if any(lo < b <= committed for b in g)]:
+                del self._cache[group]
+        return folded
 
 
 def compact_batched_dir(

@@ -227,9 +227,6 @@ def _verify_pairs(
     )
 
 
-_FOLD_LEVEL = "_FOLDLEVEL"  # marks a fold-level dir (Spark ignores _files)
-
-
 class IncrementalNearDup:
     """Parquet-backed MinHash-LSH near-dup state maintained one
     micro-batch at a time — the reusable core of
@@ -248,11 +245,13 @@ class IncrementalNearDup:
     batch-bounded delta (SCALE_CURVE.json neardedup at_500k, pre-fix).
     Bands and feats rows are append-only by construction (a doc's
     signature is immutable and rows are only added for ids never seen
-    before), so they now accrete as flat `batch=N` single-file dirs —
-    the BM25/IVF/semdedup protocol: O(batch) writes, replays resolved
-    by the committed-batch rule, folds (tiered: minor in-tick, full
-    out-of-band) bound the file count. The FEATS dir is written last
-    and is the COMMIT RECORD. The pairs table keeps MERGE semantics
+    before), so they now accrete as flat `batch=N` single-file dirs in
+    two compaction.BatchLogs — the BM25/IVF/semdedup protocol: O(batch)
+    writes, replays resolved by the committed-batch rule, folds (tiered:
+    minor in-tick, full out-of-band) bound the file count. Bands/feats
+    have no pruning dimension (LSH buckets are uniform hash scatter), so
+    every fold is a flat single-file merge. The FEATS log is written
+    last and is the COMMIT RECORD. The pairs table keeps MERGE semantics
     (replays re-deliver the same keys) but is MoR — O(batch) delta
     appends; readers pay the resolve until compaction.
 
@@ -271,16 +270,20 @@ class IncrementalNearDup:
     ):
         self.spark = spark
         self.state_dir = state_dir.rstrip("/") or state_dir
-        self._relation_cache: dict[tuple, DataFrame] = {}
         os.makedirs(self.state_dir, exist_ok=True)
-        from .compaction import FoldScheduler, heal_batched_dir
+        from .compaction import BatchLog, FoldScheduler
 
+        self.logs = {
+            name: BatchLog(spark, f"{self.state_dir}/{name}")
+            for name in ("bands", "feats")
+        }
         self.folds = FoldScheduler(
-            (
-                ("bands", lambda: self._flat_count("bands"),
-                 lambda: self._compact_state("bands", minor=True)),
-                ("feats", lambda: self._flat_count("feats"),
-                 lambda: self._compact_state("feats", minor=True)),
+            tuple(
+                (name,
+                 lambda log=log: log.tail_count(self.committed_batch()),
+                 lambda log=log: log.fold(self.committed_batch(), minor=True))
+                for name, log in self.logs.items()
+            ) + (
                 # in-tick pairs maintenance is the delta-tail merge
                 # (O(cadence)); the full fold is compact()'s job
                 ("pairs", lambda: len(self.pairs_tbl.history()),
@@ -288,9 +291,6 @@ class IncrementalNearDup:
             ),
             compact_every, fold_budget_sec,
         )
-
-        for name in ("bands", "feats"):
-            heal_batched_dir(self._dir(name))
         self.pairs_tbl = ParquetUpsertTable(
             spark, f"{self.state_dir}/pairs", keys=["doc_i", "doc_j"],
             compact_every=(4 * compact_every) if compact_every else 64,
@@ -298,43 +298,11 @@ class IncrementalNearDup:
 
     # -- state ----------------------------------------------------------------
 
-    def _dir(self, name: str) -> str:
-        return f"{self.state_dir}/{name}"
-
     def committed_batch(self) -> int:
         """Feats is written last => its newest committed dir is the
         commit record; a bands dir beyond it is an orphan a replay will
         overwrite."""
-        from .compaction import list_committed_batches
-
-        b = list_committed_batches(self._dir("feats"))
-        return b[-1] if b else -1
-
-    def _is_fold(self, name: str, b: int) -> bool:
-        return os.path.exists(
-            os.path.join(self._dir(name), f"batch={b}", _FOLD_LEVEL)
-        )
-
-    def _read_state(self, name: str, upto: int,
-                    above: int = -1) -> DataFrame | None:
-        from .compaction import list_committed_batches
-
-        base = self._dir(name)
-        group = tuple(
-            b for b in list_committed_batches(base) if above < b <= upto
-        )
-        if not group:
-            return None
-        key = (base, group)
-        df = self._relation_cache.get(key)
-        if df is None:
-            if len(self._relation_cache) > 8:
-                self._relation_cache.clear()
-            df = self.spark.read.parquet(
-                *[f"{base}/batch={b}" for b in group]
-            )
-            self._relation_cache[key] = df
-        return df
+        return self.logs["feats"].last()
 
     def pairs(self) -> DataFrame | None:
         """Confirmed (doc_i, doc_j, jaccard) over all ingested docs."""
@@ -375,7 +343,7 @@ class IncrementalNearDup:
         new = feats
         cand = None
         try:
-            stored_feats = self._read_state("feats", committed)
+            stored_feats = self.logs["feats"].read(committed)
             if stored_feats is not None:
                 # new-id detection with the state side MAP-ONLY: scan
                 # stored ids against the broadcast batch ids (their
@@ -393,7 +361,7 @@ class IncrementalNearDup:
                 if new.isEmpty():
                     return  # fully-redelivered batch: nothing to add
             new_bands = _band_rows(new)
-            stored_bands = self._read_state("bands", committed)
+            stored_bands = self.logs["bands"].read(committed)
             # cross-batch candidates: new docs vs the persisted index
             if stored_bands is not None:
                 # broadcast the BATCH side explicitly: the stored index is
@@ -467,12 +435,8 @@ class IncrementalNearDup:
             # appends commit the batch: bands first, feats LAST (the
             # commit record) — a crash between them leaves an orphan
             # bands dir the replay overwrites identically
-            new_bands.coalesce(1).write.mode("overwrite").parquet(
-                f"{self._dir('bands')}/batch={batch_id}"
-            )
-            new.coalesce(1).write.mode("overwrite").parquet(
-                f"{self._dir('feats')}/batch={batch_id}"
-            )
+            self.logs["bands"].append(batch_id, new_bands.coalesce(1))
+            self.logs["feats"].append(batch_id, new.coalesce(1))
         finally:
             feats.unpersist()
             if new is not feats:
@@ -483,77 +447,13 @@ class IncrementalNearDup:
 
     # -- maintenance ------------------------------------------------------
 
-    def _compact_state(self, name: str, minor: bool = False) -> int:
-        """Fold `name`'s committed batch dirs (tiered: a minor fold
-        merges the tail since the BASE — the newest full-fold dir —
-        into one unmarked flat file, O(post-base tail) rows, and is the
-        only form the in-tick policy runs; the full fold re-merges
-        everything into a new _FOLDLEVEL base, out-of-band). Bands/feats
-        have no pruning dimension (LSH buckets are uniform hash
-        scatter), so folds are flat single-file merges whose job is
-        bounding the file count — minor merges must NOT accrete marked
-        levels (the vector maintainers measured level read-amp; here
-        levels would at least grow the per-tick listing)."""
-        from .compaction import compact_batched_dir, list_committed_batches
-
-        base = self._dir(name)
-        committed = self.committed_batch()
-        if committed < 0:
-            return 0
-        lo = -1
-        if minor:
-            folds = [
-                b for b in list_committed_batches(base)
-                if b <= committed and self._is_fold(name, b)
-            ]
-            lo = folds[-1] if folds else -1
-
-        def _write(df, tmp, n):
-            df.coalesce(1).write.mode("overwrite").parquet(tmp)
-            # full folds become the base — and so does a minor with NO
-            # base yet (it fires while the state is ce batches small;
-            # leaving it unmarked would make every later policy fold
-            # re-merge the whole corpus)
-            if not minor or lo < 0:
-                open(os.path.join(tmp, _FOLD_LEVEL), "w").close()
-
-        folded = compact_batched_dir(
-            base,
-            committed,
-            lambda: list_committed_batches(base),
-            lambda upto: self._read_state(name, upto, above=lo),
-            _write,
-            min_batch=lo,
-            # a recovery-installed crashed swap may exceed this call's
-            # (lo, committed] range — selective invalidation would keep
-            # dangling relations; clear everything (ADVICE r9)
-            on_recovered=self._relation_cache.clear,
-        )
-        if folded:
-            # dirs in (lo, committed] were swept; keep cached relations
-            # that only touch the untouched base
-            self._relation_cache = {
-                k: v for k, v in self._relation_cache.items()
-                if k[0] != base or not any(lo < b <= committed for b in k[1])
-            }
-        return folded
-
     def compact(self) -> int:
         """Full folds of bands + feats and the pairs MoR deltas —
         OUT-OF-BAND maintenance, like the other maintainers' folds."""
-        n = self._compact_state("bands") + self._compact_state("feats")
+        committed = self.committed_batch()
+        n = sum(log.fold(committed) for log in self.logs.values())
         self.pairs_tbl.compact()
         return n
-
-    def _flat_count(self, name: str) -> int:
-        """Unfolded batch dirs of `name` (cheap listdirs, no data read)
-        — what the in-tick policy counts."""
-        from .compaction import list_committed_batches
-
-        return sum(
-            1 for b in list_committed_batches(self._dir(name))
-            if not self._is_fold(name, b)
-        )
 
 
 def run_near_dedup_stream_available_now(

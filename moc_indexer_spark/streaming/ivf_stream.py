@@ -13,7 +13,8 @@ is a single relation):
   centroids) and writes them to `vectors/batch=N/` as ONE FLAT file
   with overwrite — the partition-per-batch idempotence trick; `cell`
   is a DATA column in the tail and becomes a PARTITION column only in
-  `compact_index`'s fold (semdedup_stream's mixed layout, ported here
+  `compact_index`'s fold base (the mixed layout and cached mixed read
+  of a `partition_by="cell"` compaction.BatchLog, adopted here
   after the round-8 200k scale axis measured the per-batch
   partitionBy("cell") layout at 9.7 s/update and 7.7 s/probe: a
   1000-vector batch spans ~650 of 781 cells, so every tail batch dir
@@ -39,11 +40,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .compaction import (
-    FoldScheduler,
-    heal_batched_dir,
-    list_committed_batches,
-)
+from .compaction import BatchLog, FoldScheduler
 from .triggers import apply_max_files_per_trigger
 
 
@@ -70,26 +67,26 @@ class IncrementalIvfIndex:
         None (default) keeps the bare out-of-band contract."""
         self.spark = spark
         self.path = path.rstrip("/") or path
+        os.makedirs(self.path, exist_ok=True)
+        # the vectors are a compaction.BatchLog: flat single-file tail
+        # dirs (`cell` a data column, so a cell predicate pushes to their
+        # row groups) over a cell-partitioned fold base (a cell predicate
+        # prunes its dirs). Its cached base relation matters here: a
+        # fresh DataFrame over the base re-lists its O(cells) partition
+        # dirs with a distributed listing job (measured at 200k/781
+        # cells: a 781-task listing stage per probe, ~1.2 s of the 2.3 s
+        # steady probe). A fold checks the one-row-per-id invariant
+        # (compaction.assert_unique_ids).
+        self.vectors = BatchLog(
+            spark, f"{self.path}/vectors", partition_by="cell",
+            unique_ids=True,
+        )
         self.folds = FoldScheduler(
             (("vectors",
-              lambda: sum(1 for b in self._batches() if not self._is_fold(b)),
+              lambda: self.vectors.tail_count(self.committed_batch()),
               lambda: compact_index(self, minor=True)),),
             compact_every, fold_budget_sec,
         )
-        # relation cache for _read_upto (see its docstring): building a
-        # DataFrame over the fold re-lists its O(cells) partition dirs
-        # with a fresh distributed listing job EVERY read (measured at
-        # 200k/781 cells: a 781-task listing stage per probe, ~1.2 s of
-        # the 2.3 s steady probe). The fold only changes at compaction,
-        # so the relation is cached keyed by the exact batch-id group it
-        # reads — batch ids are monotonic and folds replace the group,
-        # so a key can never silently alias different on-disk states.
-        self._relation_cache: dict[tuple, DataFrame] = {}
-        os.makedirs(self.path, exist_ok=True)
-        # startup heal (round 9): a crash inside an in-tick policy fold
-        # leaves swept originals in __fold_trash; without this, every
-        # update until the next fold would read a hole in the state
-        heal_batched_dir(f"{self.path}/vectors")
 
     # -- quantizer -----------------------------------------------------------
 
@@ -149,72 +146,8 @@ class IncrementalIvfIndex:
 
     # -- state ---------------------------------------------------------------
 
-    def _batches(self) -> list[int]:
-        return list_committed_batches(f"{self.path}/vectors")
-
     def committed_batch(self) -> int:
-        b = self._batches()
-        return b[-1] if b else -1
-
-    def _is_fold(self, b: int) -> bool:
-        d = f"{self.path}/vectors/batch={b}"
-        return os.path.isdir(d) and any(
-            f.startswith("cell=") for f in os.listdir(d)
-        )
-
-    def _read_upto(self, upto: int) -> DataFrame | None:
-        """Committed vectors from batches <= upto, with the inferred
-        `batch` partition column (compact_index's fold write drops it).
-
-        MIXED-LAYOUT read — semdedup_stream's design: the fold (the
-        bulk of the index) is cell-PARTITIONED, so a cell predicate
-        prunes its directories at the scan; the post-fold tail batches
-        are FLAT single files carrying `cell` as a DATA column, so the
-        same predicate pushes to their parquet row groups and the tail
-        read cost is bounded by the compaction cadence. The two halves
-        cannot share one scan (partition discovery needs a consistent
-        layout), so they are read separately and unioned by name.
-        Schema-agnostic: works for the flat-IVF row shape and the PQ
-        subclass's wider rows alike."""
-        base = f"{self.path}/vectors"
-        batches = [b for b in list_committed_batches(base) if b <= upto]
-        if not batches:
-            return None
-        folds = tuple(b for b in batches if self._is_fold(b))
-        flats = tuple(b for b in batches if b not in folds)
-        parts = [
-            self._cached_relation(base, group)
-            for group in (folds, flats)
-            if group
-        ]
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-        return df
-
-    def _cached_relation(self, base: str, group: tuple) -> DataFrame:
-        """One DataFrame (and thus ONE file-index listing) per distinct
-        committed batch-id group. The fold group's key changes only at
-        compaction; the flat-tail group's key changes every update (its
-        listing is a handful of single-file dirs — cheap). Batch ids are
-        monotonic and a committed batch's files are immutable BETWEEN
-        folds, so a key always names the same on-disk content — EXCEPT
-        across a fold, which rewrites batch=<committed> in place (the id
-        is reused: a singleton flat group `(N,)` cached before the fold
-        would alias the fold group `(N,)` after it, reading deleted
-        files). compact_index therefore clears this cache after every
-        fold; a replayed UNcommitted partial dir is invisible here (no
-        _SUCCESS -> not in list_committed_batches)."""
-        key = (base, group)
-        df = self._relation_cache.get(key)
-        if df is None:
-            if len(self._relation_cache) > 8:
-                self._relation_cache.clear()
-            df = self.spark.read.option("basePath", base).parquet(
-                *[f"{base}/batch={b}" for b in group]
-            )
-            self._relation_cache[key] = df
-        return df
+        return self.vectors.last()
 
     # -- maintenance ---------------------------------------------------------
 
@@ -233,8 +166,8 @@ class IncrementalIvfIndex:
         ids reads O(index) per batch; a redelivered id carries the same
         payload, the quantizer is deterministic, so it lands in the SAME
         cell and the cell-pruned read catches it — the filter prunes the
-        fold's cell directories and pushes to the flat tail's row groups,
-        see _read_upto. An id re-sent with a different payload is an
+        base's cell directories and pushes to the flat tail's row groups
+        (compaction.BatchLog). An id re-sent with a different payload is an
         upstream correction -> rebuild, the shared maintainer
         contract)."""
         tick_start = time.perf_counter()
@@ -285,7 +218,7 @@ class IncrementalIvfIndex:
             touched = [
                 r[0] for r in assigned.select("cell").distinct().collect()
             ]
-            seen = self._read_upto(batch_id - 1)
+            seen = self.vectors.read(batch_id - 1)
             if seen is not None and touched:
                 # persist BEFORE the emptiness probe: isEmpty() executes
                 # the anti-join, and without the cache the write below
@@ -299,8 +232,9 @@ class IncrementalIvfIndex:
                 if assigned_new.isEmpty():
                     # a batch fully redelivered under a NEW batch id:
                     # writing an EMPTY batch=N partition (with _SUCCESS)
-                    # would poison _read_upto's schema inference — the
-                    # same guard semdedup_stream.update carries.
+                    # would poison the schema inference of every later
+                    # state read (BatchLog.read) — the same guard
+                    # semdedup_stream.update carries.
                     # Replays stay no-ops through this same anti-join.
                     return
             # FLAT single-file write (coalesce(1) also absorbs the
@@ -311,9 +245,7 @@ class IncrementalIvfIndex:
             # cells), and the round-8 200k axis measured the resulting
             # tail at 9.7 s/update, 7.7 s/probe vs 2.1 s post-compact —
             # the same defect class the round-7 semdedup review fixed.
-            assigned_new.coalesce(1).write.mode("overwrite").parquet(
-                f"{self.path}/vectors/batch={batch_id}"
-            )
+            self.vectors.append(batch_id, assigned_new.coalesce(1))
         finally:
             if assigned_new is not assigned:
                 assigned_new.unpersist()
@@ -356,7 +288,7 @@ class IncrementalIvfIndex:
         probes = order[:, :n_probe]
         cells = sorted({int(c) for row in probes for c in row})
 
-        idx = self._read_upto(committed).filter(F.col("cell").isin(cells))
+        idx = self.vectors.read(committed).filter(F.col("cell").isin(cells))
         qdf = self.spark.createDataFrame(
             [
                 (int(i), [float(x) for x in v], [int(c) for c in p])
@@ -526,7 +458,7 @@ class IncrementalIvfPqIndex(IncrementalIvfIndex):
             touched = [
                 r[0] for r in encoded.select("cell").distinct().collect()
             ]
-            seen = self._read_upto(batch_id - 1)
+            seen = self.vectors.read(batch_id - 1)
             if seen is not None and touched:
                 # persist before isEmpty — see the flat-IVF update
                 encoded_new = encoded.join(
@@ -537,14 +469,12 @@ class IncrementalIvfPqIndex(IncrementalIvfIndex):
                 if encoded_new.isEmpty():
                     # fully-redelivered batch under a new id — see the
                     # flat-IVF update: an empty batch=N partition would
-                    # poison _read_upto's schema inference
+                    # poison BatchLog.read's schema inference
                     return
             # FLAT single-file write — see the flat-IVF update above
             # (cell-partitioning is compact_index's job; per-batch
             # partitionBy was the measured 200k-axis wall)
-            encoded_new.coalesce(1).write.mode("overwrite").parquet(
-                f"{self.path}/vectors/batch={batch_id}"
-            )
+            self.vectors.append(batch_id, encoded_new.coalesce(1))
         finally:
             if encoded_new is not encoded:
                 encoded_new.unpersist()
@@ -576,7 +506,7 @@ class IncrementalIvfPqIndex(IncrementalIvfIndex):
         C, B = self._load_model()
         return ivfpq_probe_frame(
             self.spark,
-            lambda cells: self._read_upto(committed).filter(
+            lambda cells: self.vectors.read(committed).filter(
                 F.col("cell").isin(cells)
             ),
             C, B, query_vectors, k=k, n_probe=n_probe, refine=refine,
@@ -594,85 +524,15 @@ def compact_index(idx: IncrementalIvfIndex, minor: bool = False) -> int:
     Returns the number of batch partitions folded away.
 
     `minor=True` is the TIERED in-tick form (semdedup_stream's round-9
-    design, incl. its two measured-and-rejected predecessors — see that
-    docstring): merge the flat tail since the cell-partitioned base
-    into ONE FLAT file (cell stays a data column -> row-group pushdown;
-    never a new partitioned level), leaving the base untouched;
-    O(post-base tail) rows, bounded between out-of-band full folds.
-    The full fold stays the OUT-OF-BAND contract."""
-    from .compaction import assert_unique_ids, compact_batched_dir
-
-    committed = idx.committed_batch()
-    if committed < 0:
-        return 0
-    lo = -1
-    if minor:
-        folds = [b for b in idx._batches() if idx._is_fold(b)]
-        lo = folds[-1] if folds else -1
-
-    def _read_checked(upto: int) -> DataFrame:
-        if lo >= 0:
-            group = tuple(b for b in idx._batches() if lo < b <= upto)
-            df = idx._cached_relation(f"{idx.path}/vectors", group)
-        else:
-            df = idx._read_upto(upto)
-        # contract tripwire (ADVICE r7): a changed-payload redelivery
-        # escapes the cell-pruned anti-join; surface it here rather than
-        # silently corrupting probe results. The id is the first stored
-        # column (update() writes `{id_col} long, ...`), whatever name
-        # the caller chose. A minor fold checks its own range; cross-
-        # level duplicates are still covered by the full fold.
-        assert_unique_ids(df, df.columns[0], f"compact_index({idx.path})")
-        return df
-
-    folded = compact_batched_dir(
-        base=f"{idx.path}/vectors",
-        committed=committed,
-        list_batches=idx._batches,
-        read_upto=_read_checked,
-        # drop the partition-inferred `batch` column before writing: the
-        # basePath read materializes it, and persisting the (now-stale)
-        # ids INSIDE the fold's data files would leave correctness hanging
-        # on Spark's partition-over-data precedence — any schema-explicit
-        # or non-Spark reader would see the wrong batch ids.
-        # repartition("cell") before the write (the semdedup fold's
-        # shape): without it each READ task writes one file per cell it
-        # holds, so a fold emits O(read_tasks x cells) files — and the
-        # bloat COMPOUNDS, because those files become the next fold's
-        # read tasks (measured at 200k vectors / 160 cells: 19,659 files
-        # after 12 policy folds, updates dominated by file opens). The
-        # one cell-keyed shuffle bounds every fold at one file per cell.
-        # a minor with NO base yet writes the base itself (the first
-        # policy fold fires while the state is ce batches small) — see
-        # semdedup_stream._compact_vectors
-        write_fold=(
-            (lambda df, tmp, n: df.drop("batch").coalesce(1)
-             .write.mode("overwrite").parquet(tmp))
-            if minor and lo >= 0 else
-            (lambda df, tmp, n: df.drop("batch")
-             .repartition("cell")
-             .write.mode("overwrite")
-             .partitionBy("cell")
-             .parquet(tmp))
-        ),
-        min_batch=lo,
-        # a recovery-installed crashed swap may carry WIDER bounds than
-        # this call's (lo, committed] (e.g. a crashed full fold healed
-        # during a minor) — the selective invalidation below would keep
-        # cached relations over batches <= lo that now point at deleted
-        # part files; clear everything (ADVICE r9)
-        on_recovered=idx._relation_cache.clear,
-    )
-    if folded:
-        # every dir in (lo, committed] was swept (batch=<committed>
-        # rewritten in place — id reuse): cached relations touching the
-        # range dangle. Selective invalidation keeps the untouched
-        # base-fold relation (its O(cells) listing is the expensive one)
-        idx._relation_cache = {
-            k: v for k, v in idx._relation_cache.items()
-            if not any(lo < b <= committed for b in k[1])
-        }
-    return folded
+    design, incl. its two measured-and-rejected predecessors — see its
+    compact() docstring): merge the flat tail since the cell-partitioned
+    base into ONE FLAT file (cell stays a data column -> row-group
+    pushdown; never a new partitioned level), leaving the base
+    untouched; O(post-base tail) rows, bounded between out-of-band full
+    folds. The full fold stays the OUT-OF-BAND contract. Either form
+    raises on an id stored twice in the folded range (the changed-
+    payload redelivery the cell-pruned anti-join cannot see)."""
+    return idx.vectors.fold(idx.committed_batch(), minor)
 
 
 def run_ivf_index_stream_available_now(

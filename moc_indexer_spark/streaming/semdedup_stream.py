@@ -10,8 +10,9 @@ smallest-id same-cell vector with a strictly smaller id whose
 6dp-rounded cosine clears the threshold, NULL for keepers.
 
 Design — flat micro-batch files folded into a cell-partitioned dir
-(the mixed layout ivf_stream now shares, ported there in round 8 after
-its 200k axis measured the per-batch partitionBy tail) for the VECTOR
+(a `partition_by="cell"` compaction.BatchLog, the mixed layout
+ivf_stream shares since its round-8 200k axis measured the per-batch
+partitionBy tail) for the VECTOR
 state + one keyed MERGE table for the dup rows (which ARE retroactively
 invalidated and need last-writer-wins):
 
@@ -77,12 +78,7 @@ from ..operators.similarity import (
     semantic_dedup_keep,
     semantic_dedup_with_centroids,
 )
-from .compaction import (
-    FoldScheduler,
-    compact_batched_dir,
-    heal_batched_dir,
-    list_committed_batches,
-)
+from .compaction import BatchLog, FoldScheduler
 from .sink import ParquetUpsertTable
 from .triggers import apply_max_files_per_trigger
 
@@ -111,19 +107,26 @@ class IncrementalSemDeDup:
         self.dups = ParquetUpsertTable(
             spark, f"{self.path}/dups", keys=["vec_id"]
         )
+        # the vectors are a compaction.BatchLog, the mixed layout
+        # ivf_stream shares: flat tail dirs over a cell-partitioned base,
+        # read as two cached relations; a fold checks one row per id
+        self.vectors = BatchLog(
+            spark, f"{self.path}/vectors", partition_by="cell",
+            unique_ids=True,
+        )
         self.folds = FoldScheduler(
             (
                 # the in-tick vector fold is MINOR (tiered): only flat
-                # batches since the newest fold — O(cadence) work bounded
+                # batches since the base — O(cadence) work bounded
                 # regardless of index size, so the policy can never land
                 # an O(index) rewrite inside a tick (the round-8
                 # long-run's ON-arm p90 spike). Accordingly the trigger
-                # counts FLAT batches, not fold levels; levels are
-                # re-merged only by the out-of-band compact().
-                ("vectors", lambda: sum(
-                    1 for b in list_committed_batches(self._vectors_dir())
-                    if not self._is_fold(b)
-                ), lambda: self._compact_vectors(minor=True)),
+                # counts the tail above the base; the base is re-merged
+                # only by the out-of-band compact().
+                ("vectors",
+                 lambda: self.vectors.tail_count(self.committed_batch()),
+                 lambda: self.vectors.fold(self.committed_batch(),
+                                           minor=True)),
                 # the dup table's in-tick maintenance is the delta-tail
                 # merge (O(cadence)), for the same reason: its full fold
                 # is O(table) and was the residual ON-arm spike after the
@@ -133,27 +136,13 @@ class IncrementalSemDeDup:
             ),
             compact_every, fold_budget_sec,
         )
-        # relation cache for _read_upto — the ivf_stream design: building
-        # a DataFrame over the cell-partitioned fold re-lists its
-        # O(cells) partition dirs with a fresh distributed listing job
-        # every read; the fold only changes at compaction, so cache the
-        # relation keyed by the exact batch-id group (monotonic ids +
-        # fold-replaces-group => no key aliasing)
-        self._relation_cache: dict[tuple, DataFrame] = {}
         self._model_cache = None
         self._bc = None
-        # startup heal (round 9): a crash inside an in-tick policy fold
-        # leaves swept originals in __fold_trash; without this, every
-        # update until the next fold would read a hole in the state
-        heal_batched_dir(self._vectors_dir())
 
     # -- quantizer ----------------------------------------------------------
 
     def _model_path(self) -> str:
         return f"{self.path}/_model.json"
-
-    def _vectors_dir(self) -> str:
-        return f"{self.path}/vectors"
 
     def is_trained(self) -> bool:
         return os.path.exists(self._model_path())
@@ -224,68 +213,12 @@ class IncrementalSemDeDup:
     # -- state ----------------------------------------------------------------
 
     def committed_batch(self) -> int:
-        b = list_committed_batches(self._vectors_dir())
-        return b[-1] if b else -1
-
-    def _is_fold(self, b: int) -> bool:
-        d = f"{self._vectors_dir()}/batch={b}"
-        return os.path.isdir(d) and any(
-            f.startswith("cell=") for f in os.listdir(d)
-        )
-
-    def _read_upto(self, upto: int) -> DataFrame | None:
-        """Committed vectors from batches <= upto, (vec_id, v, cell).
-
-        MIXED-LAYOUT read: micro-batch partitions are FLAT single files
-        (a per-batch partitionBy("cell") wrote up to |batch| tiny
-        directories per tick and was measured SLOWER than the state it
-        replaced); compaction folds everything into ONE cell-partitioned
-        batch dir. So the bulk of the index (the fold) is read with
-        basePath and prunes on the cell partition column, while the
-        small post-fold tail (bounded by the maintenance cadence) is a
-        plain read whose cell predicate pushes to the parquet scan. The
-        two halves carry identical columns and union."""
-        cols = ["vec_id", "v", "cell"]
-        batches = [
-            b for b in list_committed_batches(self._vectors_dir())
-            if b <= upto
-        ]
-        if not batches:
-            return None
-        folds = tuple(b for b in batches if self._is_fold(b))
-        flats = tuple(b for b in batches if b not in folds)
-        parts = [
-            self._cached_relation(group).select(*cols)
-            for group in (folds, flats)
-            if group
-        ]
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-        return df
-
-    def _cached_relation(self, group: tuple) -> DataFrame:
-        """One DataFrame (one file-index listing) per distinct committed
-        batch-id group — see IncrementalIvfIndex._cached_relation for
-        the safety argument (monotonic ids, uncommitted partials
-        invisible, cache cleared on fold because the fold reuses the
-        committed batch id in place)."""
-        key = group
-        df = self._relation_cache.get(key)
-        if df is None:
-            if len(self._relation_cache) > 8:
-                self._relation_cache.clear()
-            df = self.spark.read.option(
-                "basePath", self._vectors_dir()
-            ).parquet(
-                *[f"{self._vectors_dir()}/batch={b}" for b in group]
-            )
-            self._relation_cache[key] = df
-        return df
+        return self.vectors.last()
 
     def vectors_df(self) -> DataFrame | None:
         """All committed vectors (vec_id, v, cell)."""
-        return self._read_upto(self.committed_batch())
+        df = self.vectors.read(self.committed_batch())
+        return None if df is None else df.select("vec_id", "v", "cell")
 
     # -- maintenance ----------------------------------------------------------
 
@@ -298,7 +231,7 @@ class IncrementalSemDeDup:
         """Fold one micro-batch in (foreachBatch body). Idempotent under
         replay (batch partitions commit at most once); the keeper rule is
         recomputed over the full touched cells — read pruned to those
-        cells (see _read_upto) — so late smaller ids retro-invalidate
+        cells (the mixed layout of compaction.BatchLog) — so late smaller ids retro-invalidate
         stale dup rows at a cost independent of index size. `tick_start`:
         a composed driver's own tick start, so the fold budget gates on
         the WHOLE tick's elapsed (see IncrementalNearDup.update)."""
@@ -326,7 +259,7 @@ class IncrementalSemDeDup:
             touched = [r[0] for r in new.select("cell").distinct().collect()]
             if not touched:
                 return
-            seen = self._read_upto(batch_id - 1)
+            seen = self.vectors.read(batch_id - 1)
             if seen is not None:
                 # the cell filter prunes batch=*/cell=* directories at the
                 # scan — this read costs O(touched cells), not O(index)
@@ -342,7 +275,7 @@ class IncrementalSemDeDup:
                 if new_ids.isEmpty():
                     # a fully-redelivered batch: nothing to add, nothing
                     # to recompute, and writing an EMPTY batch partition
-                    # would poison read_batches_upto's schema inference.
+                    # would poison BatchLog.read's schema inference.
                     # Replays of this batch id stay no-ops through this
                     # same anti-join (idempotent without a commit record).
                     return
@@ -356,117 +289,37 @@ class IncrementalSemDeDup:
             # vectors land LAST: a crash before this write leaves dup rows
             # a replay of the same batch recomputes identically (the MERGE
             # re-converges), because the batch partition never committed.
-            # FLAT single-file write — the cell layout is compaction's job
-            # (see _read_upto's mixed-layout contract)
-            new_ids.coalesce(1).write.mode("overwrite").parquet(
-                f"{self._vectors_dir()}/batch={batch_id}"
-            )
+            # FLAT single-file write — the cell layout is the fold base's
+            # (compaction.BatchLog)
+            self.vectors.append(batch_id, new_ids.coalesce(1))
         finally:
             if new_ids is not new:
                 new_ids.unpersist()
             new.unpersist()
         self.folds.maybe_fold_one(tick_start)
 
-    def _compact_vectors(self, minor: bool = False) -> int:
-        """Fold committed vector batches into one cell-partitioned
-        partition (the shared crash-consistent protocol).
-
-        `minor=True` is the TIERED form the in-tick policy uses: only
-        the flat tail SINCE THE CELL-PARTITIONED BASE is read and
-        merged into ONE FLAT file (cell stays a data column, so the
-        touched-cell predicate pushes to its row groups) — O(post-base
-        tail) rows, bounded between out-of-band full folds — and the
-        base fold stays in place untouched. Two designs measured and
-        rejected on the way here (round 9 long-runs): the round-8 full
-        fold in-tick (O(index): the ON-arm p90/max spike), and minor
-        folds that wrote cell-PARTITIONED levels (read amplification:
-        every level multiplies the listing + file-open cost of every
-        later tick — ON-arm CLEAN-cycle median rose 0.55 s over the OFF
-        arm). The full fold (minor=False) re-merges everything into one
-        cell-partitioned base; it stays the OUT-OF-BAND compact()
-        contract."""
-        from .compaction import assert_unique_ids
-
-        committed = self.committed_batch()
-        if committed < 0:
-            return 0
-        lo = -1
-        if minor:
-            folds = [
-                b for b in list_committed_batches(self._vectors_dir())
-                if self._is_fold(b)
-            ]
-            lo = folds[-1] if folds else -1
-
-        def _read_checked(upto):
-            if lo >= 0:
-                batches = tuple(
-                    b for b in list_committed_batches(self._vectors_dir())
-                    if lo < b <= upto
-                )
-                df = self._cached_relation(batches).select(
-                    "vec_id", "v", "cell"
-                )
-            else:
-                df = self._read_upto(upto)
-            # contract tripwire (ADVICE r7): an id redelivered with a
-            # CHANGED payload lands in a different cell and escapes the
-            # cell-pruned anti-join in update(); surface the corruption
-            # here during maintenance instead of silently poisoning the
-            # keeper recompute. A minor fold checks its own range; the
-            # full fold (and any cross-level duplicate) is still covered
-            # by compact().
-            assert_unique_ids(df, "vec_id", f"semdedup.compact({self.path})")
-            return df
-
-        if minor and lo >= 0:
-            # ONE flat file: the merged tail stays in the flats group
-            # (cell = data column, predicate pushdown); never a new
-            # partitioned level — see the docstring's rejected designs
-            def _write(df, tmp, n):
-                df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        else:
-            # full fold — or a minor with NO base yet, whose output IS
-            # the base: the first policy fold fires while the state is
-            # ce batches small, so paying the partitioned write here is
-            # what keeps every LATER minor bounded (without it a driver
-            # that never calls compact() out-of-band would re-merge the
-            # whole corpus on every policy fold)
-            def _write(df, tmp, n):
-                (df.repartition("cell").write.mode("overwrite")
-                 .partitionBy("cell").parquet(tmp))
-
-        folded = compact_batched_dir(
-            self._vectors_dir(),
-            committed,
-            lambda: list_committed_batches(self._vectors_dir()),
-            _read_checked,
-            _write,
-            min_batch=lo,
-            # a recovery-installed crashed swap may exceed this call's
-            # (lo, committed] range — selective invalidation would keep
-            # dangling relations; clear everything (ADVICE r9)
-            on_recovered=self._relation_cache.clear,
-        )
-        if folded:
-            # every dir in (lo, committed] was swept (and batch=
-            # <committed> rewritten in place — id reuse): any cached
-            # relation whose group touches that range points at deleted
-            # part files. Invalidate SELECTIVELY — a full clear would
-            # force a fresh O(cells) distributed listing of the
-            # untouched base fold on the next read, which is most of
-            # what every post-fold tick then pays
-            self._relation_cache = {
-                k: v for k, v in self._relation_cache.items()
-                if not any(lo < b <= committed for b in k)
-            }
-        return folded
-
     def compact(self) -> int:
-        """Fold committed vector batches into one partition (the shared
-        crash-consistent protocol) and the dup table's MoR deltas —
-        OUT-OF-BAND maintenance, like the BM25/IVF folds."""
-        folded = self._compact_vectors()
+        """Fold committed vector batches into one cell-partitioned base
+        (the shared crash-consistent protocol) and the dup table's MoR
+        deltas — OUT-OF-BAND maintenance, like the BM25/IVF folds.
+
+        The in-tick policy runs the TIERED minor vector fold instead: only
+        the flat tail since the base is merged into ONE FLAT file (cell
+        stays a data column, so the touched-cell predicate pushes to its
+        row groups) — O(post-base tail) rows, bounded between
+        out-of-band full folds — and the base stays in place. Two designs
+        measured and rejected on the way there (round 9 long-runs): the
+        round-8 full fold in-tick (O(index): the ON-arm p90/max spike),
+        and minor folds that wrote cell-PARTITIONED levels (read
+        amplification: every level multiplies the listing + file-open
+        cost of every later tick — ON-arm CLEAN-cycle median rose 0.55 s
+        over the OFF arm). The first policy fold, while there is no base
+        yet, writes the base itself, so a driver that never calls
+        compact() still gets bounded minors. Every fold raises on an id
+        stored twice in its range: an id redelivered with a CHANGED
+        payload lands in a different cell and escapes update()'s
+        cell-pruned anti-join."""
+        folded = self.vectors.fold(self.committed_batch())
         self.dups.compact()
         return folded
 

@@ -681,9 +681,6 @@ def run_policy_longrun(spark) -> dict:
     from moc_indexer_spark.streaming.semdedup_stream import (
         IncrementalSemDeDup,
     )
-    from moc_indexer_spark.streaming.compaction import (
-        list_committed_batches,
-    )
 
     src = spark.read.parquet(f"{SF01}/embeddings.parquet")
     vecs = [list(r.embedding) for r in src.select("embedding").collect()]
@@ -716,8 +713,7 @@ def run_policy_longrun(spark) -> dict:
         state[id(idx)] = [bid + 1, done + LONGRUN_TICK_VECS, rng]
 
     def count_sem(idx):
-        return (len(list_committed_batches(idx._vectors_dir()))
-                + len(idx.dups.history()))
+        return len(idx.vectors.batches()) + len(idx.dups.history())
 
     out["semdedup_stream_policy_longrun"] = _longrun_arms(
         mk_sem, upd_sem, count_sem)
@@ -735,7 +731,7 @@ def run_policy_longrun(spark) -> dict:
         return idx, None
 
     def count_pq(idx):
-        return len(idx._batches())
+        return len(idx.vectors.batches())
 
     def upd_pq(idx, _c):
         bid, done, rng = state[id(idx)]
@@ -804,7 +800,7 @@ def run_policy_longrun_aux(spark) -> dict:
         state[id(idx)] = [bid + 1, done + BM25_LONGRUN_TICK_DOCS, rng]
 
     def count_bm25(idx):
-        return len(idx._batches("lengths")) + len(idx._batches("postings"))
+        return sum(len(log.batches()) for log in idx.logs.values())
 
     out["bm25_stream_policy_longrun"] = _longrun_arms(
         mk_bm25, upd_bm25, count_bm25,
@@ -835,7 +831,7 @@ def run_policy_longrun_aux(spark) -> dict:
         state[id(idx)] = [bid + 1, done + LONGRUN_TICK_VECS, rng]
 
     def count_ivf(idx):
-        return len(idx._batches())
+        return len(idx.vectors.batches())
 
     out["ivf_stream_policy_longrun"] = _longrun_arms(
         mk_ivf, upd_ivf, count_ivf)

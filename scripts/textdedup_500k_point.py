@@ -59,7 +59,7 @@ COMPACT_EVERY = 16  # the maintained-index posture (policy minor folds)
 
 
 class _PhaseTimer:
-    """Wrap a ParquetUpsertTable method to accumulate wall time."""
+    """Wrap an object's method to accumulate wall time."""
 
     def __init__(self):
         self.acc: dict[str, float] = {}
@@ -128,18 +128,8 @@ def main() -> None:
     timer = _PhaseTimer()
     timer.wrap(idx.pairs_tbl, "upsert", "pairs_append")
     # attribute the state reads per relation (they are the floor claim)
-    orig_read = idx._read_state
-
-    def timed_read(name, upto, above=-1):
-        t0 = time.perf_counter()
-        try:
-            return orig_read(name, upto, above=above)
-        finally:
-            timer.acc[f"{name}_read"] = timer.acc.get(
-                f"{name}_read", 0.0
-            ) + time.perf_counter() - t0
-
-    idx._read_state = timed_read
+    for name, log in idx.logs.items():
+        timer.wrap(log, "read", f"{name}_read")
     timer.wrap(idx.folds, "maybe_fold_one", "policy_folds")
 
     def one_update():

@@ -219,7 +219,7 @@ def test_compaction_crash_recovery_converges(spark, tmp_path):
     # plain re-run: tmp rebuilt and swap completes)
     a, _ = _build_three_batch_index(spark, tmp_path, "a")
     base = a._dir("lengths")
-    merged = a._read_upto("lengths", a.committed_batch())
+    merged = a.logs["lengths"].read(a.committed_batch())
     merged.coalesce(1).write.mode("overwrite").parquet(f"{base}__fold_tmp")
     compact_index(a)
     assert _rows(a.probe(queries=[(0, "common")], k=60)) == want
@@ -229,7 +229,7 @@ def test_compaction_crash_recovery_converges(spark, tmp_path):
     b, _ = _build_three_batch_index(spark, tmp_path, "b")
     for name in ("lengths", "postings"):
         base = b._dir(name)
-        merged = b._read_upto(name, b.committed_batch())
+        merged = b.logs[name].read(b.committed_batch())
         merged.coalesce(1).write.mode("overwrite").parquet(f"{base}__fold_tmp")
         os.makedirs(f"{base}__fold_trash", exist_ok=True)
         os.replace(f"{base}/batch=0", f"{base}__fold_trash/batch=0")
@@ -283,8 +283,9 @@ def test_compaction_recovery_preserves_batches_newer_than_stale_fold(
     import os
 
     from moc_indexer_spark.streaming.bm25_stream import (
-        IncrementalBm25Index, _FOLD_MARKER, compact_index,
+        IncrementalBm25Index, compact_index,
     )
+    from moc_indexer_spark.streaming.compaction import _FOLD_MARKER
 
     clean, docs = _build_three_batch_index(spark, tmp_path, "stale_clean")
 
@@ -296,7 +297,7 @@ def test_compaction_recovery_preserves_batches_newer_than_stale_fold(
             (F.col("doc_id") >= lo) & (F.col("doc_id") < lo + 20)), i)
     for name in ("lengths", "postings"):
         base = stale._dir(name)
-        merged = stale._read_upto(name, 1)
+        merged = stale.logs[name].read(1)
         merged.coalesce(1).write.mode("overwrite").parquet(f"{base}__fold_tmp")
         with open(os.path.join(f"{base}__fold_tmp", _FOLD_MARKER), "w") as f:
             f.write("1")
@@ -395,11 +396,11 @@ def test_bm25_auto_compaction_policy_bounds_dirs(spark, sf_dir, tmp_path):
         s = docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
         bare.update(s, i)
         before = {
-            n: len(auto._batches(n)) for n in ("lengths", "postings")
+            n: len(auto.logs[n].batches()) for n in ("lengths", "postings")
         }
         auto.update(s, i)
         for n in ("lengths", "postings"):
-            after = len(auto._batches(n))
+            after = len(auto.logs[n].batches())
             if after < before[n] + 1:
                 folded.add(n)
             assert after <= 4, n  # threshold + one waiting overshoot
@@ -415,7 +416,7 @@ def test_bm25_minor_fold_merges_above_the_base(spark, sf_dir, tmp_path):
     identical to an unfolded twin."""
     import os
 
-    from moc_indexer_spark.streaming.bm25_stream import _FOLD_BASE_MARKER
+    from moc_indexer_spark.streaming.compaction import _FOLD_BASE
     from moc_indexer_spark.tables import table as _table
 
     docs = _table(spark, sf_dir, "documents").limit(160)
@@ -434,14 +435,14 @@ def test_bm25_minor_fold_merges_above_the_base(spark, sf_dir, tmp_path):
         bare.update(s, i)
         idx.update(s, i)
     for name in ("lengths", "postings"):
-        base_id = idx._fold_base(name)
+        base_id = idx.logs[name].base()
         assert base_id >= 0
         assert os.path.exists(
-            f"{idx._dir(name)}/batch={base_id}/{_FOLD_BASE_MARKER}"
+            f"{idx._dir(name)}/batch={base_id}/{_FOLD_BASE}"
         )
     base_mtimes = {
         name: os.path.getmtime(
-            f"{idx._dir(name)}/batch={idx._fold_base(name)}"
+            f"{idx._dir(name)}/batch={idx.logs[name].base()}"
         )
         for name in ("lengths", "postings")
     }
@@ -450,13 +451,13 @@ def test_bm25_minor_fold_merges_above_the_base(spark, sf_dir, tmp_path):
         bare.update(s, i)
         idx.update(s, i)  # policy minors fire at ce=2
     for name in ("lengths", "postings"):
-        base_id = idx._fold_base(name)
+        base_id = idx.logs[name].base()
         # the base dir was never rewritten by the in-tick minors
         assert os.path.getmtime(
             f"{idx._dir(name)}/batch={base_id}"
         ) == base_mtimes[name]
         # and the tail stays bounded (policy merges above the base)
-        tail = [b for b in idx._batches(name) if b > base_id]
+        tail = [b for b in idx.logs[name].batches() if b > base_id]
         assert len(tail) <= 3
     b = sorted(map(tuple, bare.probe().collect()))
     a = sorted(map(tuple, idx.probe().collect()))

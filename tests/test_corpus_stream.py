@@ -354,13 +354,13 @@ def test_near_dedup_state_joins_broadcast_the_batch_side(
     assert committed >= 0
     batch = docs.filter(F.col("doc_id") % 2 == 1)
     feats = _doc_features(batch)
-    stored_feats = idx._read_state("feats", committed)
+    stored_feats = idx.logs["feats"].read(committed)
     redelivered = stored_feats.select("doc_id").join(
         F.broadcast(feats.select("doc_id")), "doc_id"
     )
     new = feats.join(F.broadcast(redelivered), "doc_id", "left_anti")
     nb = F.broadcast(_band_rows(new)).alias("n")
-    sb = idx._read_state("bands", committed).alias("o")
+    sb = idx.logs["bands"].read(committed).alias("o")
     cross = nb.join(
         sb,
         (F.col("n.band") == F.col("o.band"))

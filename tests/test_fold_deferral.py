@@ -13,10 +13,7 @@ import time
 
 import pytest
 
-from moc_indexer_spark.streaming.compaction import (
-    FoldScheduler,
-    list_committed_batches,
-)
+from moc_indexer_spark.streaming.compaction import FoldScheduler
 from moc_indexer_spark.streaming.corpus import IncrementalNearDup
 from moc_indexer_spark.streaming.semdedup_stream import IncrementalSemDeDup
 
@@ -116,8 +113,8 @@ def test_neardedup_budget_zero_defers_then_folds(spark, workdir):
     # every due fold deferred: flat dirs accreted past the threshold
     assert idx.folds.deferred >= 1
     flats = [
-        b for b in list_committed_batches(f"{idx.state_dir}/feats")
-        if not idx._is_fold("feats", b)
+        b for b in idx.logs["feats"].batches()
+        if b != idx.logs["feats"].base()
     ]
     assert len(flats) >= 2
     # lift the budget: the crossed threshold fires on the next check
@@ -133,11 +130,11 @@ def test_neardedup_no_budget_folds_unconditionally(spark, workdir):
     # at least one unit folded under pressure (bands/feats/pairs round-
     # robin; each tick folds at most one)
     folds = [
-        b for b in list_committed_batches(f"{idx.state_dir}/feats")
-        if idx._is_fold("feats", b)
+        b for b in idx.logs["feats"].batches()
+        if b == idx.logs["feats"].base()
     ] + [
-        b for b in list_committed_batches(f"{idx.state_dir}/bands")
-        if idx._is_fold("bands", b)
+        b for b in idx.logs["bands"].batches()
+        if b == idx.logs["bands"].base()
     ]
     assert folds
 
@@ -159,8 +156,8 @@ def test_semdedup_budget_zero_defers_then_folds(spark, workdir):
         idx.update(_vec_batch(spark, 1000 * (b + 1)), b)
     assert idx.folds.deferred >= 1
     flats = [
-        b for b in list_committed_batches(idx._vectors_dir())
-        if not idx._is_fold(b)
+        b for b in idx.vectors.batches()
+        if b != idx.vectors.base()
     ]
     assert len(flats) >= 2
     idx.folds.budget_sec = None

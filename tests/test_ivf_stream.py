@@ -65,7 +65,7 @@ def test_ivf_stream_replay_and_duplicates_are_noops(spark, sf_dir, tmp_path):
     # second batch re-delivers old vectors plus new
     idx.update(emb, 1)
     assert len(idx.probe(_queries(emb, 3)).collect()) > 0
-    total = idx._read_upto(idx.committed_batch()).count()
+    total = idx.vectors.read(idx.committed_batch()).count()
     assert total == 100  # no duplicates despite redelivery
     # retrain refusal protects stored assignments
     import pytest
@@ -198,7 +198,7 @@ def test_ivf_full_redelivery_new_id_writes_no_empty_partition(
 ):
     """A batch fully redelivered under a NEW batch id must not commit an
     empty batch=N partition (its _SUCCESS would poison
-    read_batches_upto's schema inference) — the guard semdedup_stream
+    BatchLog.read's schema inference) — the guard semdedup_stream
     has always carried, transplanted to both IVF maintainers."""
     import os
 
@@ -224,7 +224,7 @@ def test_ivf_full_redelivery_new_id_writes_no_empty_partition(
         assert idx.committed_batch() == 0, name
         assert _rows(idx.probe(_queries(emb, 3))) == before, name
         # and the state still reads cleanly (no schema poisoning)
-        assert idx._read_upto(idx.committed_batch()).count() == 40
+        assert idx.vectors.read(idx.committed_batch()).count() == 40
 
 
 def test_ivf_compact_detects_changed_payload_redelivery(

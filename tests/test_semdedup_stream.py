@@ -221,10 +221,6 @@ def test_semdedup_auto_compaction_policy_bounds_state(
     """The policy folds at most ONE unit per update (vectors fold or dup
     MoR compaction, round-robin) and keeps both accretion counters
     bounded, with duplicates() identical to the bare twin's."""
-    from moc_indexer_spark.streaming.compaction import (
-        list_committed_batches,
-    )
-
     emb = table(spark, sf_dir, "embeddings").limit(120)
     bare = _mk_index(spark, str(tmp_path / "bare"), emb)
     auto = IncrementalSemDeDup(
@@ -236,10 +232,10 @@ def test_semdedup_auto_compaction_policy_bounds_state(
     for i, (lo, hi) in enumerate(slices):
         s = emb.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi))
         bare.update(s, i)
-        before_v = len(list_committed_batches(auto._vectors_dir()))
+        before_v = len(auto.vectors.batches())
         before_d = len(auto.dups.history())
         auto.update(s, i)
-        after_v = len(list_committed_batches(auto._vectors_dir()))
+        after_v = len(auto.vectors.batches())
         after_d = len(auto.dups.history())
         if after_v < before_v + 1:
             folded_units.add("vectors")
@@ -260,8 +256,8 @@ def test_semdedup_fold_id_reuse_invalidates_cached_relations(
     maintainers (see test_ivf_fold_id_reuse_invalidates_cached_relations)
     — compact_every=2 folds with a single-flat-batch tail, whose
     pre-read caches the `(N,)` relation the fold then rewrites. The
-    update after each fold read deleted files before _compact_vectors
-    cleared the cache."""
+    update after each fold read deleted files before the fold cleared
+    the cache."""
     emb = table(spark, sf_dir, "embeddings").limit(120)
     bare = _mk_index(spark, str(tmp_path / "bare"), emb)
     auto = IncrementalSemDeDup(spark, str(tmp_path / "auto"),
@@ -278,15 +274,17 @@ def test_semdedup_fold_id_reuse_invalidates_cached_relations(
 def test_semdedup_minor_fold_is_tiered_and_crash_safe(spark, sf_dir, tmp_path):
     """Round 9: the in-tick policy fold is MINOR — it merges only the
     flat tail since the cell-partitioned base into ONE FLAT file (no new
-    partitioned level: levels read-amplify, see _compact_vectors), the
+    partitioned level: levels read-amplify, see compact()), the
     base stays in place — and a crashed minor swap recovers WITHOUT
     sweeping the base into trash (the min_batch bound in the marker)."""
     import os
     import shutil
 
-    from moc_indexer_spark.streaming.compaction import (
-        _FOLD_MARKER, list_committed_batches,
-    )
+    from moc_indexer_spark.streaming.compaction import _FOLD_MARKER
+
+    def _is_fold(b):
+        d = f"{idx.vectors.path}/batch={b}"
+        return any(f.startswith("cell=") for f in os.listdir(d))
 
     emb = table(spark, sf_dir, "embeddings").limit(200)
     bare = _mk_index(spark, str(tmp_path / "bare"), emb)
@@ -297,37 +295,36 @@ def test_semdedup_minor_fold_is_tiered_and_crash_safe(spark, sf_dir, tmp_path):
         idx.update(s, i)
         bare.update(s, i)
     # the base: full fold of batches 0..2 (cell-partitioned)
-    idx._compact_vectors()
-    assert [b for b in list_committed_batches(idx._vectors_dir())
-            if idx._is_fold(b)] == [2]
+    idx.vectors.fold(idx.committed_batch())
+    assert [b for b in idx.vectors.batches() if _is_fold(b)] == [2]
     for i, (lo, hi) in enumerate(slices[3:], start=3):
         s = emb.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi))
         idx.update(s, i)
         bare.update(s, i)
     # MINOR fold: tail (batches 3,4) merges to ONE FLAT dir at batch=4;
     # the base must stay the only cell-partitioned fold
-    folded = idx._compact_vectors(minor=True)
+    folded = idx.vectors.fold(idx.committed_batch(), minor=True)
     assert folded >= 1
-    batches = list_committed_batches(idx._vectors_dir())
+    batches = idx.vectors.batches()
     assert batches == [2, 4]
-    assert [b for b in batches if idx._is_fold(b)] == [2]
+    assert [b for b in batches if _is_fold(b)] == [2]
     assert _rows(idx.duplicates()) == _rows(bare.duplicates())
     assert _vec_rows(idx) == _vec_rows(bare)
 
     # crashed MINOR swap: reconstruct tmp (complete, marker "2 4") +
     # trash, with the base (batch=2) still installed — recovery must
     # complete the swap at the RECORDED range and leave the base alone
-    base = idx._vectors_dir()
+    base = idx.vectors.path
     shutil.copytree(f"{base}/batch=4", f"{base}__fold_tmp")
     with open(f"{base}__fold_tmp/{_FOLD_MARKER}", "w") as fh:
         fh.write("2 4")
     shutil.move(f"{base}/batch=4", f"{base}__fold_trash/batch=4")
-    idx._relation_cache.clear()
-    folded = idx._compact_vectors(minor=True)
+    idx.vectors._cache.clear()
+    folded = idx.vectors.fold(idx.committed_batch(), minor=True)
     assert folded >= 1  # the recovery signal
-    batches = list_committed_batches(idx._vectors_dir())
+    batches = idx.vectors.batches()
     assert batches == [2, 4]
-    assert [b for b in batches if idx._is_fold(b)] == [2]
+    assert [b for b in batches if _is_fold(b)] == [2]
     assert not os.path.isdir(f"{base}__fold_trash")
     assert _rows(idx.duplicates()) == _rows(bare.duplicates())
     assert _vec_rows(idx) == _vec_rows(bare)
