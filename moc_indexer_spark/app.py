@@ -4,6 +4,13 @@ Wires the whole engine together over a chain source:
   scan blocks (S1-S3) -> event decode/demux/enrich (J2, F3-F7)
   -> keyed upsert tables (S4, T6-T8) -> serving queries (§3.2)
 
+A tick is routed by the events its scan carries, as the reference's demux
+calls a handler only for the logs a block range holds (scan_events_txs.py:
+134-157): `raw_transactions` upserts whenever the scan has rows, every
+other sink only when an event feeds it (`events.TICK_OUTPUT_EVENTS`) or
+its table does not exist yet. An untouched sink costs no Spark job and
+gains no empty delta dir.
+
 Run demo:  python -m moc_indexer_spark.app [n_blocks]
 
 Production shape: `run_incremental` is one scan cycle (the reference's
@@ -19,7 +26,7 @@ import sys
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from .operators.events import run_event_pipeline
+from .operators.events import TICK_OUTPUT_EVENTS, run_event_pipeline
 from .session import get_spark
 from .sources.chain import BlockFetcher, FakeChain, ScanRange, scan_blocks
 from .streaming.compaction import FoldScheduler
@@ -34,6 +41,16 @@ USERS = ["0x" + f"{i:040x}" for i in range(1, 21)]
 # large enough that tick-sized cycles (10-500 blocks) stay single-file
 SHARD_BLOCKS = 2000
 
+# tick output -> (sink table, inserts?); fastbtc_updates is the reference's
+# update-only upsert (T6). The fastbtc pair runs in this order.
+TICK_SINKS = {
+    "transactions": ("transactions", True),
+    "transfers": ("transfers", True),
+    "fastbtc_new": ("fastbtc", True),
+    "fastbtc_updates": ("fastbtc", False),
+    "notifications": ("notifications", True),
+}
+
 
 def _delta_shards(n_blocks: int, parallelism: int) -> int:
     """Delta shard gate: how many files a cycle's delta append writes.
@@ -46,6 +63,26 @@ def _delta_shards(n_blocks: int, parallelism: int) -> int:
     tests/test_sink_mor.py both use THIS function, so the gate cannot
     drift from its test."""
     return min(parallelism, max(1, n_blocks // SHARD_BLOCKS))
+
+
+def _scan_events(raw) -> tuple[bool, set[str]]:
+    """The tick's routing action over the cached scan: whether it holds any
+    row, and the distinct event names of its confirmed logs (the logs
+    run_event_pipeline decodes). Like the isEmpty it replaced, it is one
+    job and materializes the cache the upserts then read: both values are
+    observed metrics of a no-op write, so no shuffle runs (a plain
+    aggregate costs a shuffle and, under AQE, two more jobs)."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    names = F.when(F.col("status") == "confirmed", F.col("logs.event_name"))
+    (
+        raw.select(F.explode_outer(names).alias("event_name"))
+        .observe(obs, F.count(F.lit(1)).alias("rows"),
+                 F.collect_set("event_name").alias("events"))
+        .write.format("noop").mode("overwrite").save()
+    )
+    return obs.get["rows"] > 0, set(obs.get["events"])
 
 
 class Indexer:
@@ -73,9 +110,10 @@ class Indexer:
         a compaction.FoldScheduler — a tick never absorbs two rewrites),
         every other cycle reads the single-dir fast path, and the sinks
         keep a 4x-threshold backstop for use outside run_incremental.
-        16 here vs the bare sink's 64: an indexer tick appends to SIX
-        sinks per cycle and the serving reads (§3.2) sit on the same
-        tables.
+        16 here vs the bare sink's 64: a tick appends to
+        `raw_transactions` and to each sink its events feed (the routing
+        rule in run_incremental), and the serving reads (§3.2) sit on the
+        same tables.
 
         `config` (moc_indexer_spark.config.IndexerConfig) supplies the scan
         knobs (blocks_recession / blocks_look_behind, the forced
@@ -180,8 +218,28 @@ class Indexer:
         finally:
             bal.unpersist()
 
+    def routed_outputs(self, events: set[str]) -> tuple[str, ...]:
+        """The tick outputs a scan carrying `events` upserts: those fed by
+        one of them, and those whose table does not exist yet."""
+        return tuple(
+            out for out, names in TICK_OUTPUT_EVENTS.items()
+            if events.intersection(names)
+            or not self.tables[TICK_SINKS[out][0]].exists()
+        )
+
     def run_incremental(self, tip: int, report_counts: bool = False) -> dict[str, int]:
-        """One scan cycle: checkpoint+1 .. tip-recession -> all sinks.
+        """One scan cycle: checkpoint+1 .. tip-recession -> the routed sinks.
+
+        Routing: one job over the cached scan (`_scan_events`) gives
+        whether it holds any row and the event names of its confirmed
+        logs. A scan without rows only advances the cursor. Otherwise
+        `raw_transactions` upserts every scanned row, and each tick
+        output of `routed_outputs` is built and upserted: those the
+        scan's events feed (`TICK_OUTPUT_EVENTS`) and those whose table
+        does not exist when the tick starts, so the first non-quiet cycle
+        creates every table. A routed output may still be empty after its
+        handler's filters; an output with rows is never skipped. Each half
+        of the fastbtc pair routes on its own.
 
         report_counts runs a full count on every sink table after the cycle
         — diagnostic only (6 extra jobs, ~2 s at demo scale); the production
@@ -216,7 +274,8 @@ class Indexer:
             self.spark, self.fetcher, scan, set(self.contracts)
         ).cache()
         try:
-            if raw.isEmpty():
+            has_rows, events = _scan_events(raw)
+            if not has_rows:
                 # the scan itself succeeded — advance the cursor even with
                 # zero matching txs, or a quiet contract re-fetches an
                 # ever-growing window (every block since the last matching
@@ -225,12 +284,11 @@ class Indexer:
                 # quiet cycles are the CHEAPEST place to pay maintenance
                 self.folds.maybe_fold_one()
                 return {"last_indexed": self.last_indexed}
+            routed = self.routed_outputs(events)
+            # build only the plans this cycle consumes — the full
+            # 12-output build is ~2x the driver analysis per tick
             outs = run_event_pipeline(
-                raw, moc_contract=self.contracts[0],
-                # build only the plans this cycle consumes — the full
-                # 12-output build is ~2x the driver analysis per tick
-                only=("transactions", "transfers", "fastbtc_new",
-                      "fastbtc_updates", "notifications"),
+                raw, moc_contract=self.contracts[0], only=routed
             )
             # the sinks are independent tables -> submit their merge jobs
             # concurrently (Spark's scheduler interleaves them; the
@@ -243,34 +301,30 @@ class Indexer:
             shards = _delta_shards(
                 n_blocks, self.spark.sparkContext.defaultParallelism
             )
+            chains = {"raw_transactions": [(raw, True)]}
+            for out in routed:
+                table, insert = TICK_SINKS[out]
+                chains.setdefault(table, []).append((outs[out], insert))
 
-            def _fastbtc():
-                self.tables["fastbtc"].upsert(outs["fastbtc_new"],
+            def _upserts(table, batches):
+                for batch, insert in batches:
+                    self.tables[table].upsert(batch, insert=insert,
                                               shards=shards)
-                self.tables["fastbtc"].upsert(outs["fastbtc_updates"],
-                                              insert=False, shards=shards)
 
-            jobs = [
-                lambda: self.tables["raw_transactions"].upsert(
-                    raw, shards=shards),
-                lambda: self.tables["transactions"].upsert(
-                    outs["transactions"], shards=shards),
-                lambda: self.tables["transfers"].upsert(
-                    outs["transfers"], shards=shards),
-                _fastbtc,
-                lambda: self.tables["notifications"].upsert(
-                    outs["notifications"], shards=shards),
-            ]
-            with ThreadPoolExecutor(max_workers=5) as pool:
-                futures = [pool.submit(j) for j in jobs]
+            with ThreadPoolExecutor(max_workers=len(chains)) as pool:
+                futures = [pool.submit(_upserts, table, batches)
+                           for table, batches in chains.items()]
                 for f in futures:
                     f.result()  # surface the first failure
             self.last_indexed = scan.end
             self.folds.maybe_fold_one()
             if not report_counts:
                 return {"last_indexed": self.last_indexed}
-            return {name: (t.read().count() if t.read() is not None else 0)
-                    for name, t in self.tables.items()}
+            counts = {}
+            for name, t in self.tables.items():
+                df = t.read()
+                counts[name] = df.count() if df is not None else 0
+            return counts
         finally:
             # a long-running daemon must not accrete one cached RDD per tick
             raw.unpersist()

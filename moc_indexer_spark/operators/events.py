@@ -378,16 +378,20 @@ def _fastbtc_new_cols() -> tuple:
     )
 
 
-def enrich_fastbtc(logs: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """FastBtcBridge: NewBitcoinTransfer inserts; StatusUpdated is
-    update-only (T6, fastbtcbridge.py:58-78). Returns (inserts, updates)."""
-    new = decode_event(logs, "NewBitcoinTransfer").select(
+def enrich_fastbtc_new(logs: DataFrame) -> DataFrame:
+    """FastBtcBridge NewBitcoinTransfer -> the insert rows
+    (fastbtcbridge.py:58-67)."""
+    return decode_event(logs, "NewBitcoinTransfer").select(
         *_fastbtc_new_cols()
     )
-    upd = decode_event(logs, "BitcoinTransferStatusUpdated").select(
+
+
+def enrich_fastbtc_updates(logs: DataFrame) -> DataFrame:
+    """FastBtcBridge BitcoinTransferStatusUpdated -> the update-only rows
+    (T6, fastbtcbridge.py:69-78: upsert=False)."""
+    return decode_event(logs, "BitcoinTransferStatusUpdated").select(
         *_fastbtc_upd_cols()
     )
-    return new, upd
 
 
 @lru_cache(maxsize=None)
@@ -513,6 +517,19 @@ def enrich_state_transition(logs: DataFrame) -> DataFrame:
     return df.select(*_state_transition_cols())
 
 
+# The tick outputs the indexer writes, each with the event names whose
+# handler gives it rows; a tick builds and upserts an output only when its
+# scan holds one of them. A name missing here would lose rows, so the map
+# may over-approximate, never under-approximate.
+TICK_OUTPUT_EVENTS: dict[str, tuple[str, ...]] = {
+    "transactions": EXCHANGE_EVENTS,
+    "transfers": ("Transfer",),
+    "fastbtc_new": ("NewBitcoinTransfer",),
+    "fastbtc_updates": ("BitcoinTransferStatusUpdated",),
+    "notifications": ("StateTransition",),
+}
+
+
 def run_event_pipeline(
     raw: DataFrame,
     moc_contract: str = "0x" + "ab" * 20,
@@ -531,8 +548,8 @@ def run_event_pipeline(
     are lazy, but constructing them is driver work — ~12 from_json
     subplans cost several hundred ms of analysis per call, which the
     round-5 ingest profile showed being paid every 3 s tick for outputs
-    the cycle never consumed. The fastbtc pair builds together (one
-    handler produces both).
+    the cycle never consumed. The indexer tick passes the outputs its
+    scan's events feed (`TICK_OUTPUT_EVENTS`).
 
     `token_contracts` routes Transfers per EMITTING CONTRACT the way the
     reference's map_events does (scan_events_txs.py:147-153: BProToken ->
@@ -588,10 +605,10 @@ def run_event_pipeline(
                 )
             )
         out["approvals"] = enrich_approvals(alogs, moc_contract)
-    if want("fastbtc_new") or want("fastbtc_updates"):
-        fastbtc_new, fastbtc_upd = enrich_fastbtc(logs)
-        out["fastbtc_new"] = fastbtc_new
-        out["fastbtc_updates"] = fastbtc_upd
+    if want("fastbtc_new"):
+        out["fastbtc_new"] = enrich_fastbtc_new(logs)
+    if want("fastbtc_updates"):
+        out["fastbtc_updates"] = enrich_fastbtc_updates(logs)
     if want("notifications"):
         out["notifications"] = enrich_state_transition(logs)
     if want("holders_interest"):

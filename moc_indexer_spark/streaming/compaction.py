@@ -55,7 +55,9 @@ alone. A read is two cached relations, the base group and the tail
 group (a vector log's base is `cell`-partitioned while its tail is flat,
 and one scan cannot discover both layouts), each keyed by its exact
 batch-id group; a fold drops only the entries whose group touches the
-range it swept, so the base's listing survives every minor fold.
+range it swept, so the base's listing survives every minor fold. Past
+8 cached groups the tail groups are evicted, never the base group: it
+leaves the cache only through a fold or a recovered crashed swap.
 """
 
 from __future__ import annotations
@@ -264,7 +266,7 @@ class BatchLog:
         ids, base = self._scan()
         ids = [b for b in ids if above < b <= upto]
         parts = [
-            self._relation(group)
+            self._relation(group, base)
             for group in (tuple(b for b in ids if b <= base),
                           tuple(b for b in ids if b > base))
             if group
@@ -273,11 +275,14 @@ class BatchLog:
             return None
         return parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
 
-    def _relation(self, group: tuple) -> DataFrame:
+    def _relation(self, group: tuple, base: int) -> DataFrame:
         df = self._cache.get(group)
         if df is None:
             if len(self._cache) > 8:
-                self._cache.clear()
+                # every read names a new tail group; the base group's
+                # listing is the O(cells) one, so it stays
+                for g in [g for g in self._cache if g[-1] > base]:
+                    del self._cache[g]
             df = self.spark.read.parquet(*[self._dir(b) for b in group])
             self._cache[group] = df
         return df

@@ -83,10 +83,10 @@ class ParquetUpsertTable:
         # table); first access populates it.
         self._schema = None
         # Tombstones only enter via delete_where; while none were ever
-        # appended, "key exists" degrades to a cheap distinct-keys scan
-        # (no per-key window resolve). The flag survives restarts via a
-        # marker protocol (a restarting daemon must not pay the resolve on
-        # every update-only upsert forever): `__meta` is written on the
+        # appended, resolution skips the version-era window (_resolve) and
+        # compact_deltas() may run. The flag survives restarts via a
+        # marker protocol (a restarting daemon must not pay the era window
+        # on every read and upsert forever): `__meta` is written on the
         # first append by a marker-aware writer, `__tombstones` is touched
         # by delete_where BEFORE the tombstone delta lands (crash-safe:
         # the marker can claim tombstones that never landed — conservative
@@ -317,24 +317,25 @@ class ParquetUpsertTable:
             if c not in ("__seq", "__deleted")
         ]
         missing = [c for c in raw_cols if c not in batch.columns]
-        if missing:
-            # partial $set: fill absent columns from the matched current row
-            fill = self.read().select(*self.keys, *missing)
-            batch = batch.join(F.broadcast(fill), self.keys, "left")
-        if not insert:
-            # update-only (T6): drop incoming keys with no current match.
-            # While this writer has never appended a tombstone, "the key
-            # exists" is just "the key appears in any row" — a distinct
-            # scan, no per-key window resolve (the resolve's only job here
-            # would be deciding whether a tombstone wins).
-            if self._may_have_tombstones is False:
-                existing_keys = self._read_raw().select(*self.keys).dropDuplicates(
-                    self.keys
-                )
-            else:
-                existing_keys = self.read().select(*self.keys)
+        if missing or not insert:
+            # the current rows of the batch's keys only: the table's rows
+            # semi-joined to the batch keys, then resolved (era filter
+            # included), so the fill and the existence check cost
+            # O(batch keys' rows), not O(table). A left join fills absent
+            # columns (partial $set) and keeps new keys; update-only (T6)
+            # joins inner, dropping keys with no current row. Tick-sized
+            # batches (shards=1) broadcast both small sides; catch-up
+            # batches leave the join choice to AQE.
+            keys = batch.select(*self.keys)
+            if shards <= 1:
+                keys = F.broadcast(keys)
+            current = self._resolve(
+                self._read_raw().join(keys, self.keys, "left_semi")
+            ).select(*self.keys, *missing)
+            if shards <= 1:
+                current = F.broadcast(current)
             batch = batch.join(
-                F.broadcast(existing_keys), self.keys, "left_semi"
+                current, self.keys, "left" if insert else "inner"
             )
         self._append_delta(batch, shards)
 
@@ -422,9 +423,9 @@ class ParquetUpsertTable:
 
         swap_dir(self.path, _write)
         # The folded base is tombstone-free by construction (resolution
-        # dropped every deleted key), so the update-only fast path is valid
+        # dropped every deleted key), so the era-free resolve is valid
         # again — without this, one retention delete would tax every future
-        # update-only upsert with a per-key resolve forever. Marker removed
+        # read and upsert with the era window forever. Marker removed
         # AFTER the swap: a crash in between leaves a stale marker
         # (conservative restart), never a tombstone the fast path misses.
         tomb = self._marker("__tombstones")
@@ -499,7 +500,7 @@ class ParquetUpsertTable:
         victims = existing.filter(condition)
         if victims.isEmpty():
             # nothing matched: appending an empty tombstone delta would
-            # permanently demote the table off the update-only fast path
+            # permanently demote the table off the era-free fast path
             # (and on a fold-every-write table cost an O(table) no-op
             # fold). Retention ticks usually expire nothing, so this is
             # the common case under the 3 s cadence.

@@ -267,13 +267,15 @@ def run_ingest(spark) -> dict:
     # a big scan range decoded in one cycle) — isolates the demux/from_json
     # /wei-decimal stage from sink writes; expect ~linear work, sub-1
     # exponent from parallel slack
-    from moc_indexer_spark.operators.events import run_event_pipeline
+    from moc_indexer_spark.operators.events import (
+        TICK_OUTPUT_EVENTS,
+        run_event_pipeline,
+    )
     from moc_indexer_spark.sources.chain import ScanRange, scan_blocks
 
     row = {"t": {}}
     blocks_ax = [1000, 3000, 10000]
-    consumed = ("transactions", "transfers", "fastbtc_new",
-                "fastbtc_updates", "notifications")
+    consumed = tuple(TICK_OUTPUT_EVENTS)  # every output a tick can route
     for nb in blocks_ax:
         raw = scan_blocks(
             spark, FakeChain(CONTRACTS, USERS, 20),

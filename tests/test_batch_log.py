@@ -111,3 +111,20 @@ def test_unmarked_partitioned_base_is_refused(spark, tmp_path):
     open(f"{p}/batch=0/{_FOLD_BASE}", "w").close()
     log = BatchLog(spark, p, partition_by="cell")
     assert _rows(log.read(1)) == _want([1, 2, 3])
+
+
+def test_tail_reads_keep_the_cached_base(spark, tmp_path):
+    """Every read past the base names a new tail group. Past the cache's
+    8 groups the tail groups are evicted, never the base group, whose
+    listing is the O(cells) one of a vector log."""
+    log = BatchLog(spark, str(tmp_path / "log"))
+    for b in range(3):
+        log.append(b, _frame(spark, [b]))
+    log.fold(2)
+    base_df = log.read(2)
+    for b in range(3, 15):
+        log.append(b, _frame(spark, [b]))
+        assert _rows(log.read(b, above=2)) == _want(range(3, b + 1))
+    assert len(log._cache) <= 9
+    assert log.read(2) is base_df
+    assert _rows(log.read(14)) == _want(range(15))

@@ -798,3 +798,58 @@ def test_compact_deltas_never_triggers_full_compact(spark, workdir):
     assert len(tbl.history()) == 3
     tbl.upsert(mk([(4, "d")], ["k", "v"]))
     assert len(tbl.history()) == 1
+
+
+def _plan_ancestors(plan: str, leaf: str) -> list[str]:
+    """Operator names above the first plan line containing `leaf`,
+    nearest first (read off the tree string's indentation)."""
+    lines = plan.splitlines()
+    start = next(i for i, ln in enumerate(lines) if leaf in ln)
+
+    def depth(ln):
+        return len(ln) - len(ln.lstrip(" :+-"))
+
+    out, d = [], depth(lines[start])
+    for ln in reversed(lines[:start]):
+        if depth(ln) < d:
+            out.append(ln.lstrip(" :+-"))
+            d = depth(ln)
+    return out
+
+
+def test_partial_set_fill_reads_only_the_batch_keys(spark, workdir):
+    """The partial-$set fill and the update-only existence check read the
+    table's rows semi-joined to the batch keys, then resolve those: the
+    broadcast build side holds a LeftSemi join between the table scan and
+    any window, so no window runs over the whole table."""
+    tbl = ParquetUpsertTable(spark, f"{workdir}/t", keys=["k"],
+                             version_col="ver")
+    mk = lambda rows, cols: spark.createDataFrame(rows, cols)
+    tbl.upsert(mk([(1, "a", 1, "x"), (2, "b", 1, "y")], ["k", "v", "ver", "w"]))
+    tbl.upsert(mk([(3, "c", 1, "z")], ["k", "v", "ver", "w"]))
+    deltas = []
+    append = ParquetUpsertTable._append_delta
+
+    def spy(self, batch, *args, **kwargs):
+        deltas.append(batch._jdf.queryExecution().executedPlan().toString())
+        return append(self, batch, *args, **kwargs)
+
+    ParquetUpsertTable._append_delta = spy
+    try:
+        tbl.upsert(mk([(1, 5), (9, 5)], ["k", "ver"]))
+        tbl.upsert(mk([(2, "b2", 6), (8, "g", 6)], ["k", "v", "ver"]),
+                   insert=False)
+    finally:
+        ParquetUpsertTable._append_delta = append
+    for plan, join in zip(deltas, ("LeftOuter", "Inner")):
+        above = _plan_ancestors(plan, f"{workdir}/t]")
+        semi = next(i for i, op in enumerate(above) if "LeftSemi" in op)
+        window = next(i for i, op in enumerate(above) if op.startswith("Window"))
+        assert semi < window, above
+        build = next(i for i, op in enumerate(above)
+                     if op.startswith("BroadcastExchange"))
+        assert window < build
+        assert f"{join}, BuildRight" in above[build + 1]
+    assert _snapshot(tbl) == [
+        (1, "a", 5, "x"), (2, "b2", 6, "y"), (3, "c", 1, "z"),
+        (9, None, 5, None)]
