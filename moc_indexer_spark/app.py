@@ -42,7 +42,9 @@ USERS = ["0x" + f"{i:040x}" for i in range(1, 21)]
 SHARD_BLOCKS = 2000
 
 # tick output -> (sink table, inserts?); fastbtc_updates is the reference's
-# update-only upsert (T6). The fastbtc pair runs in this order.
+# update-only upsert (T6). A tick upserts its routed outputs in this order,
+# so the fastbtc insert runs before the update-only pass that must see the
+# rows it created. The keys are the outputs of events.TICK_OUTPUT_EVENTS.
 TICK_SINKS = {
     "transactions": ("transactions", True),
     "transfers": ("transfers", True),
@@ -222,9 +224,9 @@ class Indexer:
         """The tick outputs a scan carrying `events` upserts: those fed by
         one of them, and those whose table does not exist yet."""
         return tuple(
-            out for out, names in TICK_OUTPUT_EVENTS.items()
-            if events.intersection(names)
-            or not self.tables[TICK_SINKS[out][0]].exists()
+            out for out, (table, _) in TICK_SINKS.items()
+            if events.intersection(TICK_OUTPUT_EVENTS[out])
+            or not self.tables[table].exists()
         )
 
     def run_incremental(self, tip: int, report_counts: bool = False) -> dict[str, int]:

@@ -323,19 +323,14 @@ class ParquetUpsertTable:
             # included), so the fill and the existence check cost
             # O(batch keys' rows), not O(table). A left join fills absent
             # columns (partial $set) and keeps new keys; update-only (T6)
-            # joins inner, dropping keys with no current row. Tick-sized
-            # batches (shards=1) broadcast both small sides; catch-up
-            # batches leave the join choice to AQE.
-            keys = batch.select(*self.keys)
-            if shards <= 1:
-                keys = F.broadcast(keys)
+            # joins inner, dropping keys with no current row. Both
+            # broadcast sides are bounded by the batch.
+            keys = F.broadcast(batch.select(*self.keys))
             current = self._resolve(
                 self._read_raw().join(keys, self.keys, "left_semi")
             ).select(*self.keys, *missing)
-            if shards <= 1:
-                current = F.broadcast(current)
             batch = batch.join(
-                current, self.keys, "left" if insert else "inner"
+                F.broadcast(current), self.keys, "left" if insert else "inner"
             )
         self._append_delta(batch, shards)
 

@@ -817,11 +817,13 @@ def _plan_ancestors(plan: str, leaf: str) -> list[str]:
     return out
 
 
-def test_partial_set_fill_reads_only_the_batch_keys(spark, workdir):
+@pytest.mark.parametrize("shards", [1, 2])
+def test_partial_set_fill_reads_only_the_batch_keys(spark, workdir, shards):
     """The partial-$set fill and the update-only existence check read the
     table's rows semi-joined to the batch keys, then resolve those: the
     broadcast build side holds a LeftSemi join between the table scan and
-    any window, so no window runs over the whole table."""
+    any window, so no window runs over the whole table. Catch-up batches
+    (shards > 1) take the same broadcast plan."""
     tbl = ParquetUpsertTable(spark, f"{workdir}/t", keys=["k"],
                              version_col="ver")
     mk = lambda rows, cols: spark.createDataFrame(rows, cols)
@@ -836,9 +838,9 @@ def test_partial_set_fill_reads_only_the_batch_keys(spark, workdir):
 
     ParquetUpsertTable._append_delta = spy
     try:
-        tbl.upsert(mk([(1, 5), (9, 5)], ["k", "ver"]))
+        tbl.upsert(mk([(1, 5), (9, 5)], ["k", "ver"]), shards=shards)
         tbl.upsert(mk([(2, "b2", 6), (8, "g", 6)], ["k", "v", "ver"]),
-                   insert=False)
+                   insert=False, shards=shards)
     finally:
         ParquetUpsertTable._append_delta = append
     for plan, join in zip(deltas, ("LeftOuter", "Inner")):

@@ -13,7 +13,7 @@ import json
 
 from pyspark.sql import functions as F
 
-from moc_indexer_spark.app import CONTRACTS, USERS, Indexer
+from moc_indexer_spark.app import CONTRACTS, TICK_SINKS, USERS, Indexer
 from moc_indexer_spark.operators.events import (
     EVENT_SCHEMAS,
     TICK_OUTPUT_EVENTS,
@@ -150,13 +150,16 @@ def test_routed_ticks_resolve_like_unrouted_ticks(spark, tmp_path):
         _ok(APPROVAL),  # an event no tick output reads
         _ok(_exchange(2), _transfer(3), _peg_out("t3"), _status("t2", 3),
             STATE),
+        # an insert and its status update in one tick: the update-only
+        # pass must run after the insert that creates the key
+        _ok(_peg_out("t5"), _status("t5", 2)),
     ]
     every = set(TICK_TABLES)
     gains = [every, {"raw_transactions", "transfers"},
              {"raw_transactions", "fastbtc"}, set(),
              {"raw_transactions", "fastbtc"},
              {"raw_transactions", "notifications"}, {"raw_transactions"},
-             {"raw_transactions"}, every]
+             {"raw_transactions"}, every, {"raw_transactions", "fastbtc"}]
     chain = ScheduledChain(ticks)
     routed = _indexer(spark, str(tmp_path / "routed"), chain)
     unrouted = _indexer(spark, str(tmp_path / "unrouted"), chain)
@@ -172,8 +175,14 @@ def test_routed_ticks_resolve_like_unrouted_ticks(spark, tmp_path):
                 unrouted.tables[name]), (k, name)
     fb = {r.transferId: r.status for r in routed.tables["fastbtc"].read()
           .select("transferId", "status").collect()}
-    assert fb == {"t1": 2, "t2": 3, "t3": 1}
+    assert fb == {"t1": 2, "t2": 3, "t3": 1, "t5": 2}
     assert routed.tables["notifications"].read().count() == 2
+
+
+def test_every_routed_output_has_a_sink():
+    """The routing map (event names per output) and the sink map (table
+    per output, in upsert order) name the same outputs."""
+    assert set(TICK_SINKS) == set(TICK_OUTPUT_EVENTS)
 
 
 def test_each_event_feeds_only_its_routed_outputs(spark):
