@@ -8,8 +8,9 @@ A tick is routed by the events its scan carries, as the reference's demux
 calls a handler only for the logs a block range holds (scan_events_txs.py:
 134-157): `raw_transactions` upserts whenever the scan has rows, every
 other sink only when an event feeds it (`events.TICK_OUTPUT_EVENTS`) or
-its table does not exist yet. An untouched sink costs no Spark job and
-gains no empty delta dir.
+its table does not exist yet — then from its outputs' schemas alone when
+no event feeds it. An untouched sink costs no Spark job and gains no empty
+delta dir.
 
 Run demo:  python -m moc_indexer_spark.app [n_blocks]
 
@@ -43,8 +44,9 @@ SHARD_BLOCKS = 2000
 
 # tick output -> (sink table, inserts?); fastbtc_updates is the reference's
 # update-only upsert (T6). A tick upserts its routed outputs in this order,
-# so the fastbtc insert runs before the update-only pass that must see the
-# rows it created. The keys are the outputs of events.TICK_OUTPUT_EVENTS.
+# so each table's first output is an insert (it creates the table), and the
+# fastbtc insert runs before the update-only pass that must see the rows it
+# created. The keys are the outputs of events.TICK_OUTPUT_EVENTS.
 TICK_SINKS = {
     "transactions": ("transactions", True),
     "transfers": ("transfers", True),
@@ -220,14 +222,40 @@ class Indexer:
         finally:
             bal.unpersist()
 
-    def routed_outputs(self, events: set[str]) -> tuple[str, ...]:
-        """The tick outputs a scan carrying `events` upserts: those fed by
-        one of them, and those whose table does not exist yet."""
-        return tuple(
-            out for out, (table, _) in TICK_SINKS.items()
-            if events.intersection(TICK_OUTPUT_EVENTS[out])
-            or not self.tables[table].exists()
+    def tick_chains(self, raw, events: set[str]) -> dict[str, list]:
+        """The cycle's upserts over the cached scan `raw` whose confirmed
+        logs carry `events`: {table: [(batch, insert), ...]} in TICK_SINKS
+        order. `raw_transactions` takes every scanned row and each output
+        one of `events` feeds its sink. A table that does not exist yet is
+        created by its first (insert) output carrying the columns of all
+        its outputs, as a cycle feeding them all would create it; an unfed
+        output adds its columns under `limit(0)`, which Catalyst folds to
+        an empty local relation, so no job scans the cache for it. An
+        unfed update-only output is not upserted."""
+        missing = {t for t, tbl in self.tables.items() if not tbl.exists()}
+        fed = {
+            out: bool(events.intersection(TICK_OUTPUT_EVENTS[out]))
+            for out in TICK_SINKS
+        }
+        # build only the plans this cycle consumes — the full 12-output
+        # build is ~2x the driver analysis per tick
+        outs = run_event_pipeline(
+            raw, moc_contract=self.contracts[0],
+            only=tuple(out for out, (table, _) in TICK_SINKS.items()
+                       if fed[out] or table in missing),
         )
+        chains = {"raw_transactions": [(raw, True)]}
+        for out, (table, insert) in TICK_SINKS.items():
+            if table in missing and table not in chains:
+                batch = outs[out] if fed[out] else outs[out].limit(0)
+                for other, (t, _) in TICK_SINKS.items():
+                    if t == table and other != out:
+                        batch = batch.unionByName(
+                            outs[other].limit(0), allowMissingColumns=True)
+                chains[table] = [(batch, insert)]
+            elif fed[out]:
+                chains.setdefault(table, []).append((outs[out], insert))
+        return chains
 
     def run_incremental(self, tip: int, report_counts: bool = False) -> dict[str, int]:
         """One scan cycle: checkpoint+1 .. tip-recession -> the routed sinks.
@@ -236,12 +264,15 @@ class Indexer:
         whether it holds any row and the event names of its confirmed
         logs. A scan without rows only advances the cursor. Otherwise
         `raw_transactions` upserts every scanned row, and each tick
-        output of `routed_outputs` is built and upserted: those the
-        scan's events feed (`TICK_OUTPUT_EVENTS`) and those whose table
-        does not exist when the tick starts, so the first non-quiet cycle
-        creates every table. A routed output may still be empty after its
-        handler's filters; an output with rows is never skipped. Each half
-        of the fastbtc pair routes on its own.
+        output the scan's events feed (`TICK_OUTPUT_EVENTS`) is built and
+        upserted (`tick_chains`). A table that does not exist when the
+        tick starts is created with the columns of all its outputs; the
+        unfed ones give columns only (creation-only outputs), so the
+        first non-quiet cycle creates every table without scanning for
+        rows no event can give, and an unfed update-only pass appends no
+        empty delta. A fed output may still be empty after its handler's
+        filters; an output with rows is never skipped. Each half of the
+        fastbtc pair routes on its own.
 
         report_counts runs a full count on every sink table after the cycle
         — diagnostic only (6 extra jobs, ~2 s at demo scale); the production
@@ -286,12 +317,7 @@ class Indexer:
                 # quiet cycles are the CHEAPEST place to pay maintenance
                 self.folds.maybe_fold_one()
                 return {"last_indexed": self.last_indexed}
-            routed = self.routed_outputs(events)
-            # build only the plans this cycle consumes — the full
-            # 12-output build is ~2x the driver analysis per tick
-            outs = run_event_pipeline(
-                raw, moc_contract=self.contracts[0], only=routed
-            )
+            chains = self.tick_chains(raw, events)
             # the sinks are independent tables -> submit their merge jobs
             # concurrently (Spark's scheduler interleaves them; the
             # reference runs its tasks on a 5-worker pool the same way).
@@ -303,10 +329,6 @@ class Indexer:
             shards = _delta_shards(
                 n_blocks, self.spark.sparkContext.defaultParallelism
             )
-            chains = {"raw_transactions": [(raw, True)]}
-            for out in routed:
-                table, insert = TICK_SINKS[out]
-                chains.setdefault(table, []).append((outs[out], insert))
 
             def _upserts(table, batches):
                 for batch, insert in batches:

@@ -26,9 +26,16 @@ Shared guards (the reference's semantics):
   - update-only mode (T6, fastbtcbridge.py:58-78 upsert=False):
     incoming rows without a matching key are dropped.
   - in-batch dedup on the key, keeping the highest version (Mongo applies
-    sequential upserts; a set-based MERGE must pre-coalesce).
+    sequential upserts; a set-based MERGE must pre-coalesce); rows that
+    tie on the version are ordered by their content, so the kept row
+    does not depend on how the batch is partitioned.
   - partial `$set`: a batch carrying a column subset keeps missing columns'
     existing values.
+
+Delta layout: a tick-sized append (`shards=1`) runs as one exchange-free
+stage and lands as one file. A catch-up append (`shards>1`) hash-partitions
+the batch on the keys once; that one exchange serves the dedup window and
+is the delta's file layout (one file per shard, each key in one file).
 
 Scale notes: at 100 TB the table would be Delta/Iceberg/Hudi with real
 MERGE and a transaction log; the semantics here are identical and
@@ -44,8 +51,41 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    IntegerType,
+    MapType,
+    StructField,
+    StructType,
+)
 
 from .swap import recover_swap, swap_dir
+
+
+def _has_map(dt: DataType) -> bool:
+    if isinstance(dt, MapType):
+        return True
+    if isinstance(dt, ArrayType):
+        return _has_map(dt.elementType)
+    if isinstance(dt, StructType):
+        return any(_has_map(f.dataType) for f in dt.fields)
+    return False
+
+
+def _nullable(dt: DataType) -> DataType:
+    """`dt` with every field, element and value nullable: the type a
+    parquet file written from `dt` reads back as."""
+    if isinstance(dt, StructType):
+        return StructType([
+            StructField(f.name, _nullable(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
 
 
 class ParquetUpsertTable:
@@ -77,10 +117,11 @@ class ParquetUpsertTable:
         # set (~80 ms of driver analysis per sink per cycle), and every
         # read() paid distributed footer merging across all delta dirs.
         # This instance owns all writes, so the schema is known after one
-        # read and extended on append. Evolution contract: columns are
-        # ADDED, never retyped (sink docstring) — a retype fails loudly at
-        # the parquet scan. None = unknown (fresh instance over an existing
-        # table); first access populates it.
+        # read or the append that creates the table, and extended on
+        # append. Evolution contract: columns are ADDED, never retyped
+        # (sink docstring) — a retype fails loudly at the parquet scan.
+        # None = unknown (fresh instance over an existing table); first
+        # access populates it.
         self._schema = None
         # Tombstones only enter via delete_where; while none were ever
         # appended, resolution skips the version-era window (_resolve) and
@@ -153,9 +194,17 @@ class ParquetUpsertTable:
         # may carry evolved schemas, so merge footers — unless this writer
         # instance already knows the merged schema (then the scan skips
         # footer merging entirely: cheaper reads as the delta count grows)
+        #
+        # The scan is tagged with the table's dir list. Spark's cache
+        # manager matches file scans by root path, schema and options, and
+        # the appends land outside its view (stage + rename), so an untagged
+        # plan cached over an earlier read would answer the same plan read
+        # after an append with the old rows.
+        reader = self.spark.read.option(
+            "__seqs", ",".join(map(str, self._delta_seqs())))
         if self._schema is not None:
-            return self.spark.read.schema(self._schema).parquet(self.path)
-        df = self.spark.read.option("mergeSchema", "true").parquet(self.path)
+            return reader.schema(self._schema).parquet(self.path)
+        df = reader.option("mergeSchema", "true").parquet(self.path)
         self._schema = df.schema
         return df
 
@@ -263,12 +312,20 @@ class ParquetUpsertTable:
     # -- write --------------------------------------------------------------
 
     def _dedup_incoming(self, batch: DataFrame) -> DataFrame:
-        """Keep one row per key: highest version (or arbitrary-but-stable
-        last if unversioned) — Mongo's sequential upserts collapse to this."""
-        order = (
-            [F.desc(self.version_col)] if self.version_col else [F.lit(1)]
+        """Keep one row per key: the highest version — Mongo's sequential
+        upserts collapse to this. Rows that tie (unversioned keys, equal
+        versions) are ordered by their other columns, so the kept row is a
+        function of the batch's rows alone, never of its partitioning (a
+        map column, which has no order, compares as its JSON)."""
+        content = [
+            F.to_json(f.name) if _has_map(f.dataType) else F.col(f.name)
+            for f in batch.schema.fields
+            if f.name not in self.keys and f.name != self.version_col
+        ]
+        order = [F.desc(self.version_col)] if self.version_col else []
+        w = Window.partitionBy(*self.keys).orderBy(
+            *order, *(F.desc(c) for c in content)
         )
-        w = Window.partitionBy(*self.keys).orderBy(*order)
         return (
             batch.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
@@ -287,26 +344,26 @@ class ParquetUpsertTable:
         version loses at read.
         Batches may carry a column subset (partial $set) — missing columns
         keep their existing values.
-        shards -> write the delta as up-to-`shards` files instead of one:
-        a catch-up cycle's or a one-shot batch's whole input would
-        otherwise fold through a single write task (the one serialization
-        point in the recovery path). The caller gates it on known batch
-        size — driver-side, no extra count job; tick-sized batches keep
-        the measured single-file default.
+        shards -> write the delta as `shards` files hash-partitioned on
+        the keys instead of one: a catch-up cycle's or a one-shot batch's
+        whole input would otherwise fold through a single write task (the
+        one serialization point in the recovery path). The caller gates it
+        on known batch size — driver-side, no extra count job; tick-sized
+        batches keep the measured single-file default. The batch itself
+        is shuffled once at most: not at `shards=1`, by key hash at
+        `shards>1`.
         """
+        # Either shape satisfies the dedup window's clustering, so the
+        # window adds no exchange and _append_delta writes the partitions
+        # as they are. shards=1: coalesce, so compute -> dedup -> write is
+        # one exchange-free stage (a shuffle per sink per 3 s tick was pure
+        # scheduling overhead). shards>1: an explicit count, which AQE
+        # respects (coalesce can only narrow, and AQE may have collapsed
+        # the batch's own shuffles to one partition).
         if shards <= 1:
-            # Tick-path append (shards=1): the delta lands as ONE file
-            # anyway (_append_delta coalesces post-dedup), so coalesce
-            # BEFORE the key-dedup window instead — a SinglePartition
-            # child satisfies the window's ClusteredDistribution, so the
-            # whole append (compute batch -> dedup -> write) runs as one
-            # exchange-free stage instead of paying a hash shuffle + a
-            # second stage per sink per tick (6 sinks x 1 shuffle on a 3 s
-            # cadence was pure scheduling overhead on a few hundred rows).
-            # Catch-up batches (shards>1) keep their parallel shape; the
-            # dedup result is unchanged — same window, same ordering, ties
-            # were arbitrary-but-stable under either partitioning.
             batch = batch.coalesce(1)
+        else:
+            batch = batch.repartition(shards, *self.keys)
         batch = self._dedup_incoming(batch)
         if not self.exists():
             if insert:
@@ -339,8 +396,9 @@ class ParquetUpsertTable:
     ) -> None:
         """Append one batch as the next `__seq=N/` partition dir. The batch
         is written to a temp dir and renamed in — one atomic directory per
-        upsert, O(batch) bytes, no table rewrite. `shards` > 1 keeps the
-        write stage parallel for size-gated catch-up batches (read() is
+        upsert, O(batch) bytes, no table rewrite. `shards` > 1 writes the
+        batch's partitions as they are, one file each — upsert hands over
+        a batch hash-partitioned on the keys (read() is
         multi-file-tolerant inside a `__seq=` dir). `auto_compact=False`
         suppresses the compact_every full-fold check — compact_deltas()'s
         merge-append MUST pass it (ADVICE r9): a minor fold whose
@@ -355,17 +413,9 @@ class ParquetUpsertTable:
         # never leave partial files where partition discovery will read them
         # (a garbage dir inside the path fails EVERY subsequent read)
         tmp = f"{self.path}__stage_{uuid.uuid4().hex[:8]}"
-        # tick path (shards=1): coalesce, not repartition — the delta is
-        # one small file either way, and coalesce folds the write into the
-        # batch's own stage instead of adding a shuffle stage per append
-        # (6 sinks x 1 stage per 3 s tick was measurable scheduling
-        # overhead). Catch-up path (shards>1): repartition, not coalesce —
-        # coalesce can only NARROW, and AQE may already have collapsed the
-        # enrichment shuffle to one partition for exactly the batch the
-        # gate wants spread out; an explicit numPartitions is respected by
-        # AQE, and one extra O(batch) shuffle on an outage-recovery batch
-        # is noise next to serializing its whole write through one task.
-        out = batch.coalesce(1) if shards <= 1 else batch.repartition(shards)
+        # one file per shard: coalesce folds a tick-sized write into the
+        # batch's own stage; a sharded batch arrives partitioned (upsert)
+        out = batch.coalesce(1) if shards <= 1 else batch
         out.write.mode("overwrite").parquet(tmp)
         os.rename(tmp, os.path.join(self.path, f"__seq={nxt}"))
         if self._may_have_tombstones is not None and not os.path.exists(
@@ -379,10 +429,15 @@ class ParquetUpsertTable:
             # compact() is the upgrade path — it PROVES the table clean.
             with open(self._marker("__meta"), "w") as fh:
                 fh.write('{"sink_layout": 2}')
-        # extend the single-writer schema cache with any evolved columns
-        if self._schema is not None:
+        # the single-writer schema cache: a table this append created
+        # reads back as the batch's columns, all nullable, plus the int
+        # `__seq` partition discovery infers; a known schema is extended
+        # with any evolved columns
+        if not seqs:
+            self._schema = _nullable(batch.schema).add("__seq", IntegerType())
+        elif self._schema is not None:
             known = set(self._schema.fieldNames())
-            for f_ in batch.schema.fields:
+            for f_ in _nullable(batch.schema).fields:
                 if f_.name not in known:
                     self._schema = self._schema.add(f_)
         # a lone first delta is already a single base: folding it would

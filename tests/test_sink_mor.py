@@ -7,6 +7,8 @@ guard, update-only, partial $set, retention delete) — and `compact()`
 must be a no-op through the read view.
 """
 
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -855,3 +857,131 @@ def test_partial_set_fill_reads_only_the_batch_keys(spark, workdir, shards):
     assert _snapshot(tbl) == [
         (1, "a", 5, "x"), (2, "b2", 6, "y"), (3, "c", 1, "z"),
         (9, None, 5, None)]
+
+
+@pytest.mark.parametrize("shards", [1, 2, 4])
+@pytest.mark.parametrize("existing", [False, True])
+def test_sharded_append_shuffles_the_batch_once_on_the_keys(
+        spark, workdir, monkeypatch, shards, existing):
+    """The written plan's batch side (the path from the write down to the
+    batch's scan, outside every broadcast) holds one exchange at
+    `shards>1`, the key hash partitioning that both the dedup window and
+    the delta's file layout use, and none at `shards=1`; no write
+    partitions round-robin. `existing` appends a partial $set, whose fill
+    joins a broadcast current-row side."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    tbl = ParquetUpsertTable(spark, f"{workdir}/t", keys=["k"],
+                             version_col="ver")
+    mk = lambda rows, cols: spark.createDataFrame(rows, cols)
+    if existing:
+        tbl.upsert(mk([(1, "a", 1), (2, "b", 1)], ["k", "v", "ver"]))
+        batch = mk([(1, 5), (9, 5)], ["k", "ver"])
+    else:
+        batch = mk([(1, "a", 1), (2, "b", 1), (2, "c", 0)], ["k", "v", "ver"])
+    plans = []
+    parquet = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        plans.append(self._df._jdf.queryExecution().executedPlan().toString())
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    tbl.upsert(batch, shards=shards)
+    monkeypatch.undo()
+    (plan,) = plans
+    assert "RoundRobinPartitioning" not in plan
+    batch_side = _plan_ancestors(plan, "Scan ExistingRDD")
+    assert not any(op.startswith("BroadcastExchange") for op in batch_side)
+    exchanges = [op for op in batch_side if op.startswith("Exchange")]
+    if shards == 1:
+        assert exchanges == [] and "Coalesce 1" in batch_side
+    else:
+        (exchange,) = exchanges
+        assert exchange.startswith("Exchange hashpartitioning(k#")
+        assert f", {shards}), REPARTITION_BY_NUM" in exchange
+    want = ([(1, "a", 5), (2, "b", 1), (9, None, 5)] if existing
+            else [(1, "a", 1), (2, "b", 1)])
+    assert _snapshot(tbl) == want
+
+
+@pytest.mark.parametrize("version_col", [None, "ver"])
+def test_in_batch_dedup_winner_is_independent_of_partitioning(
+        spark, workdir, version_col):
+    """Rows of one key that tie on the version resolve by their content:
+    the same row wins at every shard count, after an input repartition
+    and whatever the input order."""
+    rows = [(1, "a", 5, "p"), (1, "b", 5, "o"), (2, "x", 1, "q"),
+            (2, "y", 1, "q"), (2, "z", 0, "r"), (3, "u", 2, None),
+            (3, "u", 2, "s")]
+    cols = ["k", "v", "ver", "w"]
+    results = set()
+    for i, (shards, parts, order) in enumerate(
+            [(1, None, 1), (1, None, -1), (2, None, 1), (4, None, -1),
+             (1, 8, 1), (4, 8, -1)]):
+        df = spark.createDataFrame(rows[::order], cols)
+        if parts:
+            df = df.repartition(parts)
+        tbl = ParquetUpsertTable(spark, f"{workdir}/t{i}", keys=["k"],
+                                 version_col=version_col)
+        tbl.upsert(df, shards=shards)
+        results.add(tuple(_snapshot(tbl)))
+    # unversioned, `ver` is content too: "z" outranks the newer "y"
+    two = (2, "y", 1, "q") if version_col else (2, "z", 0, "r")
+    assert results == {((1, "b", 5, "o"), two, (3, "u", 2, "s"))}
+
+
+
+def _jobs(spark, fn) -> int:
+    """The number of Spark jobs `fn()` runs."""
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_created_table_knows_its_schema(spark, workdir):
+    """The append that creates a table sets the writer's schema cache:
+    its next upsert runs no schema-inference (footer) job, and the
+    cached schema is the one a fresh instance infers from the files —
+    non-nullable batch columns read back nullable, `__seq` as int."""
+    path = f"{workdir}/t"
+
+    def mk(k):
+        return (spark.range(k, k + 1).withColumn("ver", F.lit(1))
+                .withColumn("tags", F.array(F.lit("x"))))
+
+    tbl = ParquetUpsertTable(spark, path, keys=["id"], version_col="ver")
+    tbl.upsert(mk(0))
+    second = _jobs(spark, lambda: tbl.upsert(mk(1)))
+    third = _jobs(spark, lambda: tbl.upsert(mk(2)))
+    fresh = ParquetUpsertTable(spark, path, keys=["id"], version_col="ver")
+    cold = _jobs(spark, lambda: fresh.upsert(mk(3)))
+    # the fresh instance pays the footer job the creating writer skips
+    assert second == third and cold == third + 1
+    reader = ParquetUpsertTable(spark, path, keys=["id"], version_col="ver")
+    assert tbl.read().schema == reader.read().schema
+    assert tbl._schema == reader._schema
+    assert _snapshot(tbl) == [(i, ["x"], 1) for i in range(4)]
+
+
+def test_cached_plan_over_an_earlier_read_is_not_served_stale(
+        spark, workdir):
+    """A plan cached over one read of the table must not answer the same
+    plan read after an append: Spark matches file scans by path, and the
+    appends land outside its view."""
+    tbl = ParquetUpsertTable(spark, f"{workdir}/t", keys=["k"])
+    mk = lambda k: spark.createDataFrame([(k, "v")], "k long, v string")
+    tbl.upsert(mk(1))
+    tbl.upsert(mk(2))
+    cached = tbl.read().select("k").distinct().cache()
+    try:
+        assert cached.count() == 2
+        tbl.upsert(mk(3))
+        assert tbl.read().select("k").distinct().count() == 3
+    finally:
+        cached.unpersist()
