@@ -70,12 +70,11 @@ def _delta_shards(n_blocks: int, parallelism: int) -> int:
 
 
 def _scan_events(raw) -> tuple[bool, set[str]]:
-    """The tick's routing action over the cached scan: whether it holds any
-    row, and the distinct event names of its confirmed logs (the logs
-    run_event_pipeline decodes). Like the isEmpty it replaced, it is one
-    job and materializes the cache the upserts then read: both values are
-    observed metrics of a no-op write, so no shuffle runs (a plain
-    aggregate costs a shuffle and, under AQE, two more jobs)."""
+    """The tick's routing action over the scan: whether it holds any row,
+    and the distinct event names of its confirmed logs (the logs
+    run_event_pipeline decodes). It is one job over the scan's local rows:
+    both values are observed metrics of a no-op write, so no shuffle runs
+    (a plain aggregate costs a shuffle and, under AQE, two more jobs)."""
     from pyspark.sql import Observation
 
     obs = Observation()
@@ -223,14 +222,14 @@ class Indexer:
             bal.unpersist()
 
     def tick_chains(self, raw, events: set[str]) -> dict[str, list]:
-        """The cycle's upserts over the cached scan `raw` whose confirmed
+        """The cycle's upserts over the scan `raw` whose confirmed
         logs carry `events`: {table: [(batch, insert), ...]} in TICK_SINKS
         order. `raw_transactions` takes every scanned row and each output
         one of `events` feeds its sink. A table that does not exist yet is
         created by its first (insert) output carrying the columns of all
         its outputs, as a cycle feeding them all would create it; an unfed
         output adds its columns under `limit(0)`, which Catalyst folds to
-        an empty local relation, so no job scans the cache for it. An
+        an empty local relation, so no job scans the rows for it. An
         unfed update-only output is not upserted."""
         missing = {t for t, tbl in self.tables.items() if not tbl.exists()}
         fed = {
@@ -260,10 +259,14 @@ class Indexer:
     def run_incremental(self, tip: int, report_counts: bool = False) -> dict[str, int]:
         """One scan cycle: checkpoint+1 .. tip-recession -> the routed sinks.
 
-        Routing: one job over the cached scan (`_scan_events`) gives
-        whether it holds any row and the event names of its confirmed
-        logs. A scan without rows only advances the cursor. Otherwise
-        `raw_transactions` upserts every scanned row, and each tick
+        The scan (`scan_blocks`) fetches the window on the driver into a
+        local relation, so a fetch fault raises before any write and the
+        cursor does not advance; the cycle's rows live in driver memory
+        and every action over them reads that snapshot, with no cache to
+        fill or drop. Routing: one job over the scan (`_scan_events`)
+        gives whether it holds any row and the event names of its
+        confirmed logs. A scan without rows only advances the cursor.
+        Otherwise `raw_transactions` upserts every scanned row, and each tick
         output the scan's events feed (`TICK_OUTPUT_EVENTS`) is built and
         upserted (`tick_chains`). A table that does not exist when the
         tick starts is created with the columns of all its outputs; the
@@ -303,55 +306,49 @@ class Indexer:
                 blocks_recession=cfg.blocks_recession,
                 look_behind=cfg.blocks_look_behind,
             )
-        raw = scan_blocks(
-            self.spark, self.fetcher, scan, set(self.contracts)
-        ).cache()
-        try:
-            has_rows, events = _scan_events(raw)
-            if not has_rows:
-                # the scan itself succeeded — advance the cursor even with
-                # zero matching txs, or a quiet contract re-fetches an
-                # ever-growing window (every block since the last matching
-                # tx) on every tick until the 3 s cadence can't keep up
-                self.last_indexed = scan.end
-                # quiet cycles are the CHEAPEST place to pay maintenance
-                self.folds.maybe_fold_one()
-                return {"last_indexed": self.last_indexed}
-            chains = self.tick_chains(raw, events)
-            # the sinks are independent tables -> submit their merge jobs
-            # concurrently (Spark's scheduler interleaves them; the
-            # reference runs its tasks on a 5-worker pool the same way).
-            # fastbtc's two ops stay ordered: update-only must see the rows
-            # the insert pass created.
-            from concurrent.futures import ThreadPoolExecutor
-
-            n_blocks = scan.end - scan.start + 1
-            shards = _delta_shards(
-                n_blocks, self.spark.sparkContext.defaultParallelism
-            )
-
-            def _upserts(table, batches):
-                for batch, insert in batches:
-                    self.tables[table].upsert(batch, insert=insert,
-                                              shards=shards)
-
-            with ThreadPoolExecutor(max_workers=len(chains)) as pool:
-                futures = [pool.submit(_upserts, table, batches)
-                           for table, batches in chains.items()]
-                for f in futures:
-                    f.result()  # surface the first failure
+        raw = scan_blocks(self.spark, self.fetcher, scan, set(self.contracts))
+        has_rows, events = _scan_events(raw)
+        if not has_rows:
+            # the scan itself succeeded — advance the cursor even with
+            # zero matching txs, or a quiet contract re-fetches an
+            # ever-growing window (every block since the last matching
+            # tx) on every tick until the 3 s cadence can't keep up
             self.last_indexed = scan.end
+            # quiet cycles are the CHEAPEST place to pay maintenance
             self.folds.maybe_fold_one()
-            if not report_counts:
-                return {"last_indexed": self.last_indexed}
-            counts = {}
-            for name, t in self.tables.items():
-                df = t.read()
-                counts[name] = df.count() if df is not None else 0
-            return counts
-        finally:
-            # a long-running daemon must not accrete one cached RDD per tick
-            raw.unpersist()
+            return {"last_indexed": self.last_indexed}
+        chains = self.tick_chains(raw, events)
+        # the sinks are independent tables -> submit their merge jobs
+        # concurrently (Spark's scheduler interleaves them; the
+        # reference runs its tasks on a 5-worker pool the same way).
+        # fastbtc's two ops stay ordered: update-only must see the rows
+        # the insert pass created.
+        from concurrent.futures import ThreadPoolExecutor
+
+        n_blocks = scan.end - scan.start + 1
+        shards = _delta_shards(
+            n_blocks, self.spark.sparkContext.defaultParallelism
+        )
+
+        def _upserts(table, batches):
+            for batch, insert in batches:
+                self.tables[table].upsert(batch, insert=insert,
+                                          shards=shards)
+
+        with ThreadPoolExecutor(max_workers=len(chains)) as pool:
+            futures = [pool.submit(_upserts, table, batches)
+                       for table, batches in chains.items()]
+            for f in futures:
+                f.result()  # surface the first failure
+        self.last_indexed = scan.end
+        self.folds.maybe_fold_one()
+        if not report_counts:
+            return {"last_indexed": self.last_indexed}
+        counts = {}
+        for name, t in self.tables.items():
+            df = t.read()
+            counts[name] = df.count() if df is not None else 0
+        return counts
 
 
 def main() -> None:

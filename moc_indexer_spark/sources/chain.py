@@ -9,11 +9,15 @@ Reference (/root/reference/indexer/):
   round trip (S7)
 
 Spark-first: the chain client is an injected callable (`BlockFetcher`); the
-connector turns an inclusive block range into a DataFrame via
-`mapPartitions` — each partition holds a contiguous block sub-range and
-amortizes RPC round-trips across its blocks (the Multicall idea applied to
-block fetch). Incremental state (checkpoint cursor, reorg margin) lives in
-the caller's streaming checkpoint; this module is stateless.
+connector fetches an inclusive block range on the driver, as the reference
+daemon does in-process, and returns it as a DataFrame over one Arrow-built
+local relation. Contiguous block sub-ranges are fetched concurrently on a
+driver thread pool (the fetch is I/O-bound), so a live client keeps its RPC
+concurrency while a tick runs no Python-worker job. The scan is eager: a
+fetch fault raises from `scan_blocks` itself, and the returned frame is a
+snapshot whose actions issue no further RPCs. Incremental state
+(checkpoint cursor, reorg margin) lives in the caller's streaming
+checkpoint; this module is stateless.
 
 No real RPC library ships in this environment: `FakeChain` is a
 deterministic in-memory chain used by tests and demos. A web3 client drops
@@ -24,8 +28,9 @@ from __future__ import annotations
 
 import hashlib
 import json
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
-from typing import Callable, Iterator
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -68,16 +73,15 @@ def scan_blocks(
     scan: ScanRange,
     contract_addresses: set[str],
     min_confirmations: int = 1,
-    partitions: int | None = None,
 ) -> DataFrame:
     """Block range -> filtered raw-tx DataFrame.
 
-    The address filter (P1) and confirmation filter (S3) run inside the
-    partition right after fetch — rows never reach the shuffle unfiltered.
-    """
-    from ..session import ship_package
-
-    ship_package(spark)
+    The blocks are fetched on the driver, one contiguous sub-range per
+    pool thread (`defaultParallelism` of them at most); the address
+    filter (P1) and confirmation filter (S3) run right after each fetch.
+    The kept rows become one Arrow table, whose DataFrame is a local
+    relation: no job runs to build it, and the cycle's rows live in
+    driver memory until the frame is dropped."""
     if min_confirmations > scan.blocks_recession:
         # the recession margin IS the confirmation guarantee: every
         # in-window block has confs >= blocks_recession, so a larger
@@ -91,16 +95,13 @@ def scan_blocks(
             "would be skipped and never re-scanned — raise "
             "blocks_recession instead"
         )
-    if scan.end < scan.start:
-        return spark.createDataFrame([], RAW_TX_SCHEMA)
     blocks = list(range(scan.start, scan.end + 1))
-    parts = partitions or min(len(blocks), spark.sparkContext.defaultParallelism)
     contracts = {a.lower() for a in contract_addresses}
     tip = scan.tip
 
-    def fetch_partition(block_iter: Iterator[int]) -> Iterator[tuple]:
-        # one client per partition; RPC round-trips amortized over its blocks
-        for bn in block_iter:
+    def fetch_range(sub: list[int]) -> list[tuple]:
+        rows = []
+        for bn in sub:
             for tx in fetcher(bn):
                 to = (tx.get("to") or "").lower()
                 frm = (tx.get("from") or "").lower()
@@ -114,23 +115,46 @@ def scan_blocks(
                     # Given the ValueError guard above this can only fire
                     # for blocks beyond scan.end (defensive).
                     continue
-                yield (
+                rows.append((
                     tx["hash"], tx["blockNumber"], tx.get("from"), tx.get("to"),
                     str(tx.get("value", "0")), tx.get("gas", 0),
                     str(tx.get("gasPrice", "0")), tx.get("input", "0x"), True,
                     False, tx.get("gas_used", 0), confs, tx["timestamp"],
                     tx.get("logs", []), tx.get("status", "confirmed"),
-                )
+                ))
+        return rows
 
-    rdd = spark.sparkContext.parallelize(blocks, parts).mapPartitions(
-        fetch_partition
+    parts = min(len(blocks), spark.sparkContext.defaultParallelism) or 1
+    # contiguous sub-ranges, split as parallelize(blocks, parts) splits
+    subs = [blocks[i * len(blocks) // parts:(i + 1) * len(blocks) // parts]
+            for i in range(parts)]
+    with ThreadPoolExecutor(max_workers=parts) as pool:
+        rows = [row for sub in pool.map(fetch_range, subs) for row in sub]
+    return spark.createDataFrame(_arrow_table(rows))
+
+
+def _arrow_table(rows: list[tuple]):
+    """Raw-tx row tuples -> one pyarrow.Table in RAW_TX_SCHEMA order. A
+    timestamp keeps the meaning Spark's row conversion gives it
+    (`TimestampType.toInternal`: a naive datetime is local time) and is
+    stored as those UTC microseconds."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType, TimestampType
+
+    schema = to_arrow_schema(DataType.fromDDL(RAW_TX_SCHEMA))
+    cols = list(zip(*rows)) or [()] * len(schema)
+    ts = schema.get_field_index("timestamp")
+    cols[ts] = [TimestampType().toInternal(v) for v in cols[ts]]
+    return pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
+        schema=schema,
     )
-    return spark.createDataFrame(rdd, RAW_TX_SCHEMA)
 
 
 class FakeChain:
     """Deterministic in-memory chain for tests/demos: block n derives its
-    txs from sha256(n) — same data on every executor, no driver shipping."""
+    txs from sha256(n) — the same data on every fetch of the block."""
 
     def __init__(self, contracts: list[str], users: list[str], txs_per_block: int = 3):
         self.contracts = contracts

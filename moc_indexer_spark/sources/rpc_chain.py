@@ -10,11 +10,10 @@ switch away from a live RSK/Ethereum node.
 
 Design points:
 
-* Picklable and cheap to construct: the client holds only (url, timeout)
-  and opens a connection per request, so `scan_blocks` can ship one per
-  partition into `mapPartitions` (RPC round-trips amortized over the
-  partition's contiguous block range, as the module docstring of
-  chain.py describes).
+* Stateless and cheap to construct: the client holds only (url, timeout)
+  and opens a connection per request, so `scan_blocks`' driver threads
+  can share one, each fetching its contiguous block sub-range
+  concurrently (as the module docstring of chain.py describes).
 * Receipt semantics mirror chain.py:60-64: a tx's status comes from the
   receipt (`0x1` -> confirmed, `0x0` -> reverted); a missing receipt
   drops the tx (the reference logs-and-skips TransactionNotFound).

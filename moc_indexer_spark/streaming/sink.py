@@ -353,6 +353,10 @@ class ParquetUpsertTable:
         is shuffled once at most: not at `shards=1`, by key hash at
         `shards>1`.
         """
+        # the fill's key side comes from the incoming plan: the dedup drops
+        # rows, never keys, and a side taken after it would re-run the
+        # dedup window (and at shards>1 its exchange) under the broadcast
+        keys = batch.select(*self.keys)
         # Either shape satisfies the dedup window's clustering, so the
         # window adds no exchange and _append_delta writes the partitions
         # as they are. shards=1: coalesce, so compute -> dedup -> write is
@@ -382,9 +386,9 @@ class ParquetUpsertTable:
             # columns (partial $set) and keeps new keys; update-only (T6)
             # joins inner, dropping keys with no current row. Both
             # broadcast sides are bounded by the batch.
-            keys = F.broadcast(batch.select(*self.keys))
             current = self._resolve(
-                self._read_raw().join(keys, self.keys, "left_semi")
+                self._read_raw().join(F.broadcast(keys), self.keys,
+                                      "left_semi")
             ).select(*self.keys, *missing)
             batch = batch.join(
                 F.broadcast(current), self.keys, "left" if insert else "inner"

@@ -3,12 +3,12 @@
 10-block ticks after it spend their time.
 
 Runs the phases of `Indexer.run_incremental` SERIALLY (no thread-pool
-overlap), so cost attributes to phases: block scan plus the routing
-action, the event-pipeline build for the routed outputs, and one real
-`ParquetUpsertTable.upsert` per chained batch — the chains are
-`Indexer.tick_chains`' own, at the shard count the cycle's block count
-gates (`app._delta_shards`). The first cycle is the catch-up that creates
-every table; three 10-block ticks follow.
+overlap), so cost attributes to phases: the driver-side block scan
+plus the routing action, the event-pipeline build for the routed
+outputs, and one real `ParquetUpsertTable.upsert` per chained batch —
+the chains are `Indexer.tick_chains`' own, at the shard count the
+cycle's block count gates (`app._delta_shards`). The first cycle is the
+catch-up that creates every table; three 10-block ticks follow.
 
 Usage: python scripts/profile_ingest.py [catchup_blocks]   (default 60;
 perfbench's indexer_daemon catch-up is 4000)
@@ -31,7 +31,7 @@ from moc_indexer_spark.app import (  # noqa: E402
     _delta_shards,
     _scan_events,
 )
-from moc_indexer_spark.session import get_spark, ship_package  # noqa: E402
+from moc_indexer_spark.session import get_spark  # noqa: E402
 from moc_indexer_spark.sources.chain import FakeChain, ScanRange, scan_blocks  # noqa: E402
 
 FIRST_BLOCK = 10_000
@@ -44,23 +44,20 @@ def profile_cycle(spark, ix: Indexer, tip: int) -> None:
                      look_behind=ix.config.blocks_look_behind)
     shards = _delta_shards(scan.end - scan.start + 1,
                            spark.sparkContext.defaultParallelism)
-    raw = scan_blocks(spark, ix.fetcher, scan, set(ix.contracts)).cache()
-    try:
-        _, events = _scan_events(raw)
-        t1 = time.perf_counter()
-        print(f"  scan+cache+route: {t1 - t0:.3f} events={sorted(events)}")
-        chains = ix.tick_chains(raw, events)
-        t2 = time.perf_counter()
-        print(f"  pipeline build (lazy) {list(chains)}: {t2 - t1:.3f}")
-        for name, batches in chains.items():
-            for batch, insert in batches:
-                s0 = time.perf_counter()
-                ix.tables[name].upsert(batch, insert=insert, shards=shards)
-                print(f"  {name}{'' if insert else '[upd]'}: upsert "
-                      f"{time.perf_counter() - s0:.3f}")
-        ix.last_indexed = scan.end
-    finally:
-        raw.unpersist()
+    raw = scan_blocks(spark, ix.fetcher, scan, set(ix.contracts))
+    _, events = _scan_events(raw)
+    t1 = time.perf_counter()
+    print(f"  scan+route: {t1 - t0:.3f} events={sorted(events)}")
+    chains = ix.tick_chains(raw, events)
+    t2 = time.perf_counter()
+    print(f"  pipeline build (lazy) {list(chains)}: {t2 - t1:.3f}")
+    for name, batches in chains.items():
+        for batch, insert in batches:
+            s0 = time.perf_counter()
+            ix.tables[name].upsert(batch, insert=insert, shards=shards)
+            print(f"  {name}{'' if insert else '[upd]'}: upsert "
+                  f"{time.perf_counter() - s0:.3f}")
+    ix.last_indexed = scan.end
     print(f"  TOTAL {time.perf_counter() - t0:.3f} (shards={shards})")
 
 
@@ -68,7 +65,6 @@ def main() -> None:
     catchup = int(sys.argv[1]) if len(sys.argv) > 1 else 60
     spark = get_spark(app_name="profile-ingest")
     spark.sparkContext.setLogLevel("ERROR")
-    ship_package(spark)
     d = tempfile.mkdtemp(prefix="profile_ingest_")
     try:
         ix = Indexer(spark, d, FakeChain(CONTRACTS, USERS, 20), CONTRACTS)

@@ -96,7 +96,7 @@ def test_failed_cycle_leaves_checkpoint_and_recovery_converges(
     url, state = rpc
     idx = Indexer(spark, str(tmp_path / "faulted"), RpcChain(url), CONTRACTS)
     state.rpc_error_blocks = {12}
-    with pytest.raises(Exception):
+    with pytest.raises(RpcError):  # the fetcher's own error, from the scan
         idx.run_incremental(TIP)
     assert idx.last_indexed == -1  # cursor untouched by the failed cycle
 

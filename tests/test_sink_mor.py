@@ -802,11 +802,12 @@ def test_compact_deltas_never_triggers_full_compact(spark, workdir):
     assert len(tbl.history()) == 1
 
 
-def _plan_ancestors(plan: str, leaf: str) -> list[str]:
-    """Operator names above the first plan line containing `leaf`,
-    nearest first (read off the tree string's indentation)."""
+def _plan_ancestors(plan: str, leaf: str, nth: int = 0) -> list[str]:
+    """Operator names above the `nth` plan line containing `leaf` (the
+    first by default, -1 for the last), nearest first (read off the tree
+    string's indentation)."""
     lines = plan.splitlines()
-    start = next(i for i, ln in enumerate(lines) if leaf in ln)
+    start = [i for i, ln in enumerate(lines) if leaf in ln][nth]
 
     def depth(ln):
         return len(ln) - len(ln.lstrip(" :+-"))
@@ -824,8 +825,10 @@ def test_partial_set_fill_reads_only_the_batch_keys(spark, workdir, shards):
     """The partial-$set fill and the update-only existence check read the
     table's rows semi-joined to the batch keys, then resolve those: the
     broadcast build side holds a LeftSemi join between the table scan and
-    any window, so no window runs over the whole table. Catch-up batches
-    (shards > 1) take the same broadcast plan."""
+    any window, so no window runs over the whole table. The semi join's
+    key side is the incoming batch's keys: above the batch's scan it holds
+    no dedup window and no exchange. Catch-up batches (shards > 1) take
+    the same broadcast plan."""
     tbl = ParquetUpsertTable(spark, f"{workdir}/t", keys=["k"],
                              version_col="ver")
     mk = lambda rows, cols: spark.createDataFrame(rows, cols)
@@ -854,6 +857,12 @@ def test_partial_set_fill_reads_only_the_batch_keys(spark, workdir, shards):
                      if op.startswith("BroadcastExchange"))
         assert window < build
         assert f"{join}, BuildRight" in above[build + 1]
+        key_side = _plan_ancestors(plan, "Scan ExistingRDD", nth=-1)
+        build = next(i for i, op in enumerate(key_side)
+                     if op.startswith("BroadcastExchange"))
+        assert "LeftSemi, BuildRight" in key_side[build + 1], key_side
+        assert not any(op.startswith(("Window", "Exchange"))
+                       for op in key_side[:build]), key_side
     assert _snapshot(tbl) == [
         (1, "a", 5, "x"), (2, "b2", 6, "y"), (3, "c", 1, "z"),
         (9, None, 5, None)]

@@ -1,9 +1,14 @@
 """Chain source connector + multimodal plumbing tests."""
 
+import threading
+import time
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
 from moc_indexer_spark.sources.chain import (
+    RAW_TX_SCHEMA,
     FakeChain,
     ScanRange,
     multicall_enrich,
@@ -57,6 +62,78 @@ def test_scan_blocks_filters_and_feeds_pipeline(spark, chain):
     # S6->J2: the scanned output feeds the event pipeline directly
     outs = run_event_pipeline(df, moc_contract=CONTRACTS[0])
     assert outs["transactions"].count() > 0
+
+
+def _replay_rows(chain, scan):
+    """The scan's row tuples rebuilt in plain Python from the same chain."""
+    contracts = {a.lower() for a in CONTRACTS}
+    return [
+        (tx["hash"], tx["blockNumber"], tx["from"], tx["to"],
+         str(tx["value"]), tx["gas"], str(tx["gasPrice"]),
+         tx.get("input", "0x"), True, False, tx["gas_used"],
+         scan.tip - tx["blockNumber"], tx["timestamp"], tx["logs"],
+         tx["status"])
+        for bn in range(scan.start, scan.end + 1) for tx in chain(bn)
+        if tx["to"].lower() in contracts or tx["from"].lower() in contracts
+    ]
+
+
+@pytest.fixture(params=[None, "America/Sao_Paulo"])
+def local_tz(request, monkeypatch):
+    """Run under the process time zone, then under a non-UTC one: a naive
+    datetime is local time to Spark's row conversion."""
+    if request.param:
+        monkeypatch.setenv("TZ", request.param)
+        time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
+
+
+@pytest.mark.parametrize("n_blocks", [10, 13, 0])
+def test_scan_rows_equal_the_row_conversion(spark, chain, local_tz, n_blocks):
+    """The Arrow-built scan holds exactly the rows the row conversion
+    (`createDataFrame(tuples, RAW_TX_SCHEMA)`) gives for the same replay,
+    timestamps and confirmations included: for a tick-sized range, a
+    range longer than defaultParallelism blocks and an empty range. Its
+    plan is a local table scan, with no RDD scan, so no Python-worker job
+    runs to build it."""
+    assert 13 > spark.sparkContext.defaultParallelism
+    scan = ScanRange(last_indexed=99, tip=100 + n_blocks + 1,
+                     blocks_recession=2)
+    assert scan.end - scan.start + 1 == n_blocks
+    df = scan_blocks(spark, chain, scan, set(CONTRACTS))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan and "PythonRDD" not in plan
+    want = spark.createDataFrame(_replay_rows(chain, scan), RAW_TX_SCHEMA)
+    assert df.schema == want.schema
+    got = sorted(map(repr, df.collect()))
+    assert got == sorted(map(repr, want.collect()))
+    assert len(got) > 0 or n_blocks == 0
+
+
+def test_scan_fetches_each_block_once_on_the_driver(spark, chain):
+    """The scan is a snapshot: two actions over it issue no second fetch,
+    and a fetch fault raises from scan_blocks itself."""
+    calls, lock = Counter(), threading.Lock()
+
+    def fetcher(bn):
+        with lock:
+            calls[bn] += 1
+        if bn == failing:
+            raise ConnectionError(f"block {bn}")
+        return chain(bn)
+
+    failing = None
+    scan = ScanRange(last_indexed=99, tip=111, blocks_recession=2)
+    df = scan_blocks(spark, fetcher, scan, set(CONTRACTS))
+    n = df.count()
+    assert len(df.collect()) == n > 0
+    assert calls == Counter(range(scan.start, scan.end + 1))
+    failing = 105
+    with pytest.raises(ConnectionError, match="block 105"):
+        scan_blocks(spark, fetcher, scan, set(CONTRACTS))
 
 
 def test_multicall_enrich_batches(spark):

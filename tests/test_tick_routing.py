@@ -233,3 +233,30 @@ def test_deltas_per_cycle(spark, tmp_path):
     ix.run_incremental(_tip(ix, 2))
     assert _dirs(ix) == second
     assert ix.last_indexed == FIRST + 3 * TICK_BLOCKS - 1
+
+
+def test_tick_plans_scan_a_local_relation(spark, tmp_path, monkeypatch):
+    """Every write a tick runs (the routing action and each upsert's
+    append) plans over the scan's local relation: no plan holds an RDD
+    scan, so no tick job starts a Python worker for the chain data."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    chain = ScheduledChain([_ok(_exchange(0), _transfer(1)),
+                            _ok(_exchange(2))])
+    ix = _indexer(spark, str(tmp_path / "ix"), chain)
+    ix.run_incremental(_tip(ix, 0))
+    plans = []
+    for meth in ("save", "parquet"):
+        real = getattr(DataFrameWriter, meth)
+
+        def spy(self, *args, _real=real, **kwargs):
+            plans.append(
+                self._df._jdf.queryExecution().executedPlan().toString())
+            return _real(self, *args, **kwargs)
+
+        monkeypatch.setattr(DataFrameWriter, meth, spy)
+    ix.run_incremental(_tip(ix, 1))
+    monkeypatch.undo()
+    assert len(plans) == 3  # routing, raw_transactions, transactions
+    assert all("LocalTableScan" in p for p in plans)
+    assert not any("ExistingRDD" in p or "PythonRDD" in p for p in plans)
