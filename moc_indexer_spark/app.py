@@ -15,14 +15,16 @@ delta dir.
 Run demo:  python -m moc_indexer_spark.app [n_blocks]
 
 Production shape: `run_incremental` is one scan cycle (the reference's
-3-second task); a deployment loops it under the QueryManager (streaming/
-manager.py) or converts the source into a readStream with the same
-transforms (streaming/pipeline.py shows batch/stream parity).
+3-second task), or several for a catch-up longer than SCAN_CHUNK_BLOCKS;
+a deployment loops it under the QueryManager (streaming/manager.py) or
+converts the source into a readStream with the same transforms
+(streaming/pipeline.py shows batch/stream parity).
 """
 
 from __future__ import annotations
 
 import sys
+from dataclasses import replace
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -41,6 +43,11 @@ USERS = ["0x" + f"{i:040x}" for i in range(1, 21)]
 # rows per write task — small enough to stream through one task quickly,
 # large enough that tick-sized cycles (10-500 blocks) stay single-file
 SHARD_BLOCKS = 2000
+
+# a cycle scans at most this many blocks: its rows live in driver memory
+# (scan_blocks), so a long catch-up runs as consecutive cycles of this
+# size, each advancing the cursor, and the driver holds one chunk at a time
+SCAN_CHUNK_BLOCKS = 8000
 
 # tick output -> (sink table, inserts?); fastbtc_updates is the reference's
 # update-only upsert (T6). A tick upserts its routed outputs in this order,
@@ -256,8 +263,8 @@ class Indexer:
                 chains.setdefault(table, []).append((outs[out], insert))
         return chains
 
-    def run_incremental(self, tip: int, report_counts: bool = False) -> dict[str, int]:
-        """One scan cycle: checkpoint+1 .. tip-recession -> the routed sinks.
+    def _run_cycle(self, scan: ScanRange) -> None:
+        """One scan cycle: `scan`'s blocks -> the routed sinks.
 
         The scan (`scan_blocks`) fetches the window on the driver into a
         local relation, so a fetch fault raises before any write and the
@@ -275,37 +282,7 @@ class Indexer:
         rows no event can give, and an unfed update-only pass appends no
         empty delta. A fed output may still be empty after its handler's
         filters; an output with rows is never skipped. Each half of the
-        fastbtc pair routes on its own.
-
-        report_counts runs a full count on every sink table after the cycle
-        — diagnostic only (6 extra jobs, ~2 s at demo scale); the production
-        tick skips it."""
-        cfg = self.config
-        if cfg.from_block or cfg.to_block:
-            # forced replay range ("for testing only", scan_raw_txs.py:94-98):
-            # index exactly [from_block, to_block], ignoring the cursor.
-            # One-sided forms work too: from_block alone replays up to the
-            # LIVE tip (to_block=0 used to freeze the forced tip at the
-            # recession margin — an empty scan forever); to_block alone
-            # replays from GENESIS (look_behind=forced_tip defeats the
-            # cold-start tip-minus-60 heuristic, which would silently skip
-            # every block before to_block-60).
-            forced_tip = (
-                cfg.to_block + cfg.blocks_recession if cfg.to_block else tip
-            )
-            scan = ScanRange(
-                last_indexed=cfg.from_block - 1,
-                tip=forced_tip,
-                blocks_recession=cfg.blocks_recession,
-                look_behind=forced_tip,
-            )
-        else:
-            scan = ScanRange(
-                last_indexed=self.last_indexed,
-                tip=tip,
-                blocks_recession=cfg.blocks_recession,
-                look_behind=cfg.blocks_look_behind,
-            )
+        fastbtc pair routes on its own."""
         raw = scan_blocks(self.spark, self.fetcher, scan, set(self.contracts))
         has_rows, events = _scan_events(raw)
         if not has_rows:
@@ -316,7 +293,7 @@ class Indexer:
             self.last_indexed = scan.end
             # quiet cycles are the CHEAPEST place to pay maintenance
             self.folds.maybe_fold_one()
-            return {"last_indexed": self.last_indexed}
+            return
         chains = self.tick_chains(raw, events)
         # the sinks are independent tables -> submit their merge jobs
         # concurrently (Spark's scheduler interleaves them; the
@@ -342,6 +319,53 @@ class Indexer:
                 f.result()  # surface the first failure
         self.last_indexed = scan.end
         self.folds.maybe_fold_one()
+
+    def run_incremental(self, tip: int, report_counts: bool = False) -> dict[str, int]:
+        """Index checkpoint+1 .. tip-recession into the routed sinks.
+
+        A tick is one cycle (`_run_cycle`). A window longer than
+        SCAN_CHUNK_BLOCKS (a catch-up after an outage) runs as consecutive
+        cycles of that many blocks; each advances the cursor, so a fault
+        leaves it at the end of the last whole chunk. Confirmations count
+        from `tip` in every chunk.
+
+        report_counts runs a full count on every sink table after the last
+        cycle — diagnostic only (6 extra jobs, ~2 s at demo scale); the
+        production tick skips it."""
+        cfg = self.config
+        if cfg.from_block or cfg.to_block:
+            # forced replay range ("for testing only", scan_raw_txs.py:94-98):
+            # index exactly [from_block, to_block], ignoring the cursor.
+            # One-sided forms work too: from_block alone replays up to the
+            # LIVE tip (to_block=0 used to freeze the forced tip at the
+            # recession margin — an empty scan forever); to_block alone
+            # replays from GENESIS (look_behind=forced_tip defeats the
+            # cold-start tip-minus-60 heuristic, which would silently skip
+            # every block before to_block-60).
+            forced_tip = (
+                cfg.to_block + cfg.blocks_recession if cfg.to_block else tip
+            )
+            scan = ScanRange(
+                last_indexed=cfg.from_block - 1,
+                tip=forced_tip,
+                blocks_recession=cfg.blocks_recession,
+                look_behind=forced_tip,
+                max_blocks=SCAN_CHUNK_BLOCKS,
+            )
+        else:
+            scan = ScanRange(
+                last_indexed=self.last_indexed,
+                tip=tip,
+                blocks_recession=cfg.blocks_recession,
+                look_behind=cfg.blocks_look_behind,
+                max_blocks=SCAN_CHUNK_BLOCKS,
+            )
+        while True:
+            self._run_cycle(scan)
+            if scan.end >= scan.window_end:
+                break
+            # a long catch-up advances the cursor one chunk at a time
+            scan = replace(scan, last_indexed=scan.end)
         if not report_counts:
             return {"last_indexed": self.last_indexed}
         counts = {}

@@ -11,11 +11,14 @@ Reference (/root/reference/indexer/):
 Spark-first: the chain client is an injected callable (`BlockFetcher`); the
 connector fetches an inclusive block range on the driver, as the reference
 daemon does in-process, and returns it as a DataFrame over one Arrow-built
-local relation. Contiguous block sub-ranges are fetched concurrently on a
-driver thread pool (the fetch is I/O-bound), so a live client keeps its RPC
-concurrency while a tick runs no Python-worker job. The scan is eager: a
-fetch fault raises from `scan_blocks` itself, and the returned frame is a
-snapshot whose actions issue no further RPCs. Incremental state
+local relation, so a tick runs no Python-worker job. Blocks are fetched one
+per call on a driver thread pool as wide as the session's defaultParallelism
+(capped at FETCH_THREADS): an I/O-bound client such as `RpcChain` overlaps
+its requests, while a CPU-bound one (`FakeChain`) runs GIL-serial. The
+scan is eager: a fetch fault raises from `scan_blocks` itself, and the
+returned frame is a snapshot whose actions issue no further RPCs. A
+caller bounds the range it scans at once (`app.SCAN_CHUNK_BLOCKS`), since
+the rows live in driver memory. Incremental state
 (checkpoint cursor, reorg margin) lives in the caller's streaming
 checkpoint; this module is stateless.
 
@@ -45,16 +48,23 @@ RAW_TX_SCHEMA = (
     "status string"
 )
 
+# upper bound on the scan's driver fetch threads, whatever the session's
+# defaultParallelism (a cluster's can run to hundreds)
+FETCH_THREADS = 16
+
 
 @dataclass
 class ScanRange:
     """One incremental scan window (scan_raw_txs.py:74-98): from the
-    checkpoint cursor + 1 up to tip - recession margin."""
+    checkpoint cursor + 1 up to tip - recession margin, or to its first
+    `max_blocks` blocks when that is set (one chunk of a long catch-up;
+    confirmations still count from `tip`)."""
 
     last_indexed: int
     tip: int
     blocks_recession: int = 2
     look_behind: int = 60
+    max_blocks: int | None = None
 
     @property
     def start(self) -> int:
@@ -63,8 +73,14 @@ class ScanRange:
         return self.last_indexed + 1
 
     @property
-    def end(self) -> int:  # inclusive
+    def window_end(self) -> int:  # inclusive, ignoring max_blocks
         return self.tip - self.blocks_recession
+
+    @property
+    def end(self) -> int:  # inclusive
+        if self.max_blocks is None:
+            return self.window_end
+        return min(self.window_end, self.start + self.max_blocks - 1)
 
 
 def scan_blocks(
@@ -76,12 +92,16 @@ def scan_blocks(
 ) -> DataFrame:
     """Block range -> filtered raw-tx DataFrame.
 
-    The blocks are fetched on the driver, one contiguous sub-range per
-    pool thread (`defaultParallelism` of them at most); the address
-    filter (P1) and confirmation filter (S3) run right after each fetch.
-    The kept rows become one Arrow table, whose DataFrame is a local
-    relation: no job runs to build it, and the cycle's rows live in
-    driver memory until the frame is dropped."""
+    The blocks are fetched on the driver, one per call on the pool
+    threads; the address filter (P1) and confirmation filter (S3) run
+    right after each fetch. The kept rows become one Arrow table, whose
+    DataFrame is a local relation: no job runs to build it, and the
+    rows live in driver memory until the frame is dropped (the caller
+    bounds the range: `app.SCAN_CHUNK_BLOCKS`).
+
+    A naive `timestamp` is read as local time of the driver process, not
+    of an executor (Spark's row conversion). `RpcChain` emits naive UTC,
+    so run the driver in UTC or have the fetcher emit aware datetimes."""
     if min_confirmations > scan.blocks_recession:
         # the recession margin IS the confirmation guarantee: every
         # in-window block has confs >= blocks_recession, so a larger
@@ -99,37 +119,34 @@ def scan_blocks(
     contracts = {a.lower() for a in contract_addresses}
     tip = scan.tip
 
-    def fetch_range(sub: list[int]) -> list[tuple]:
+    def fetch_block(bn: int) -> list[tuple]:
         rows = []
-        for bn in sub:
-            for tx in fetcher(bn):
-                to = (tx.get("to") or "").lower()
-                frm = (tx.get("from") or "").lower()
-                if to not in contracts and frm not in contracts:
-                    continue  # P1 address-set filter (chain.py:18-37)
-                confs = tip - tx["blockNumber"]
-                if confs < min_confirmations:
-                    # S3 receipt confirmation filter (chain.py:49-64) —
-                    # status-independent: a reverted receipt is no more
-                    # final than a confirmed one until the margin passes.
-                    # Given the ValueError guard above this can only fire
-                    # for blocks beyond scan.end (defensive).
-                    continue
-                rows.append((
-                    tx["hash"], tx["blockNumber"], tx.get("from"), tx.get("to"),
-                    str(tx.get("value", "0")), tx.get("gas", 0),
-                    str(tx.get("gasPrice", "0")), tx.get("input", "0x"), True,
-                    False, tx.get("gas_used", 0), confs, tx["timestamp"],
-                    tx.get("logs", []), tx.get("status", "confirmed"),
-                ))
+        for tx in fetcher(bn):
+            to = (tx.get("to") or "").lower()
+            frm = (tx.get("from") or "").lower()
+            if to not in contracts and frm not in contracts:
+                continue  # P1 address-set filter (chain.py:18-37)
+            confs = tip - tx["blockNumber"]
+            if confs < min_confirmations:
+                # S3 receipt confirmation filter (chain.py:49-64) —
+                # status-independent: a reverted receipt is no more
+                # final than a confirmed one until the margin passes.
+                # Given the ValueError guard above this can only fire
+                # for blocks beyond scan.end (defensive).
+                continue
+            rows.append((
+                tx["hash"], tx["blockNumber"], tx.get("from"), tx.get("to"),
+                str(tx.get("value", "0")), tx.get("gas", 0),
+                str(tx.get("gasPrice", "0")), tx.get("input", "0x"), True,
+                False, tx.get("gas_used", 0), confs, tx["timestamp"],
+                tx.get("logs", []), tx.get("status", "confirmed"),
+            ))
         return rows
 
-    parts = min(len(blocks), spark.sparkContext.defaultParallelism) or 1
-    # contiguous sub-ranges, split as parallelize(blocks, parts) splits
-    subs = [blocks[i * len(blocks) // parts:(i + 1) * len(blocks) // parts]
-            for i in range(parts)]
-    with ThreadPoolExecutor(max_workers=parts) as pool:
-        rows = [row for sub in pool.map(fetch_range, subs) for row in sub]
+    threads = min(len(blocks), spark.sparkContext.defaultParallelism,
+                  FETCH_THREADS) or 1
+    with ThreadPoolExecutor(max_workers=threads) as pool:
+        rows = [row for block in pool.map(fetch_block, blocks) for row in block]
     return spark.createDataFrame(_arrow_table(rows))
 
 

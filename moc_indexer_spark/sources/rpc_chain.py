@@ -12,8 +12,8 @@ Design points:
 
 * Stateless and cheap to construct: the client holds only (url, timeout)
   and opens a connection per request, so `scan_blocks`' driver threads
-  can share one, each fetching its contiguous block sub-range
-  concurrently (as the module docstring of chain.py describes).
+  share one, each fetching one block at a time, and their requests
+  overlap (as the module docstring of chain.py describes).
 * Receipt semantics mirror chain.py:60-64: a tx's status comes from the
   receipt (`0x1` -> confirmed, `0x0` -> reverted); a missing receipt
   drops the tx (the reference logs-and-skips TransactionNotFound).
